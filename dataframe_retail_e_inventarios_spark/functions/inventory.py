@@ -19,6 +19,11 @@ import math
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
+# The reference's configuration block (PRACTICA3.py:35-40), defined once
+# for the native plans and the model-fit pass alike.
+FORECAST_HORIZON_WEEKS = 4  # PRACTICA3.py:35
+MIN_WEEKS = 12  # admission gate: weeks of history (PRACTICA3.py:37)
+MIN_TOTAL_SALES = 10  # admission gate: total units (PRACTICA3.py:38)
 SERVICE_LEVEL_Z = 1.645  # ~95% service level (PRACTICA3.py:39)
 LEAD_TIME_WEEKS = 0.4285  # ~3 days (PRACTICA3.py:40)
 

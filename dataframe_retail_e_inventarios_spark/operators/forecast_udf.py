@@ -1,10 +1,10 @@
-"""Per-series model-fit pipeline as a pandas group-map UDF
+"""Per-series model-fit pipeline as a mapInPandas pass
 [SURVEY §2.9 U1-U6; reference PRACTICA3.py:85-175].
 
-This is the literal per-group port: Spark's ``applyInPandas`` replaces
-the reference's hand-rolled ``multiprocessing.Pool`` fan-out
-(PRACTICA3.py:202-205) with distributed group-map execution — groups
-hash-shuffle to executors and run in Arrow-fed Python workers.
+Spark's ``mapInPandas`` over key-clustered partitions replaces the
+reference's hand-rolled ``multiprocessing.Pool`` fan-out
+(PRACTICA3.py:202-205): series hash-shuffle to executors and stream
+through Arrow-fed Python workers, one batch of series at a time.
 
 Prophet / Holt-Winters are optional imports exactly as in the
 reference (PRACTICA3.py:22-32). When a library is absent, the member
@@ -14,10 +14,14 @@ Holt-Winters recursions; Prophet's piecewise-trend + Fourier
 decomposition as one ridge solve) takes its slot, so the ensemble
 median (PRACTICA3.py:151) is a genuine 3-member vote in every
 environment. Per-model try/except isolation is preserved (U6), and
-the moving-average member never fails. ``native_members=False``
-restores the MA-only configuration, under which the UDF must agree
-exactly with the native flagship plan — the two paths are
-differential-tested against each other.
+the moving-average member never fails. ``ma_only=True`` keeps only
+the moving-average member, under which the fit must agree exactly
+with the native flagship plan — the two paths are differential-tested
+against each other.
+
+``process_series`` is the literal pandas port of one series; the
+batched numpy driver ``_fit_batch`` that the Spark pass runs is tested
+bit-identical to it.
 
 Everything SQL-expressible inside the loop also exists as native
 relational ops (flagship.py) so the oracle can check it; only the
@@ -38,6 +42,19 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.inventory import (
+    FORECAST_HORIZON_WEEKS,
+    LEAD_TIME_WEEKS,
+    MIN_TOTAL_SALES,
+    MIN_WEEKS,
+    SERVICE_LEVEL_Z,
+)
+from ..functions.tsmodels import (
+    fourier_trend_forecast,
+    holt_winters_forecast,
+    holt_winters_forecast_many,
+)
+
 try:  # optional, mirrors PRACTICA3.py:22-26
     from prophet import Prophet  # type: ignore
 
@@ -51,12 +68,6 @@ try:  # optional, mirrors PRACTICA3.py:28-32
     HW_AVAILABLE = True
 except Exception:
     HW_AVAILABLE = False
-
-FORECAST_HORIZON_WEEKS = 4
-MIN_WEEKS = 12
-MIN_TOTAL_SALES = 10
-SERVICE_LEVEL_Z = 1.645
-LEAD_TIME_WEEKS = 0.4285
 
 RESULT_SCHEMA = StructType(
     [
@@ -103,9 +114,7 @@ def _inventory(train_sales: pd.Series, forecast: np.ndarray) -> dict:
     }
 
 
-def process_series(
-    pdf: pd.DataFrame, native_members: bool = True, ma_only: bool = False
-) -> pd.DataFrame:
+def process_series(pdf: pd.DataFrame, ma_only: bool = False) -> pd.DataFrame:
     """One (product, store) weekly series -> one result row (or none if
     gated out). Input: columns product_id, store_id, week, units_sold —
     already densely resampled by the native plan, so the pandas side
@@ -143,13 +152,11 @@ def process_series(
                 preds.append(np.maximum(yhat, 0.0))
             except Exception:
                 pass  # U6: model isolation
-        elif native_members:
+        else:
             # Same model family, native math: piecewise trend + yearly
             # Fourier seasonality on log1p'd sales, ridge-fit
             # (functions/tsmodels.fourier_trend_forecast).
             try:
-                from ..functions.tsmodels import fourier_trend_forecast
-
                 idx = pd.to_datetime(train.index)
                 t_days = (idx - idx[0]).days.to_numpy(dtype=float)
                 ylog = np.log1p(np.clip(train.values, 0.0, None))
@@ -169,10 +176,8 @@ def process_series(
                 preds.append(np.maximum(np.expm1(hw.forecast(FORECAST_HORIZON_WEEKS)), 0.0))
             except Exception:
                 pass
-        elif native_members:
+        else:
             try:
-                from ..functions.tsmodels import holt_winters_forecast
-
                 ts = np.log1p(train.values)
                 sp = 52 if len(ts) >= 52 else None
                 yhat = holt_winters_forecast(ts, FORECAST_HORIZON_WEEKS, seasonal_periods=sp)
@@ -206,31 +211,67 @@ def process_series(
     )
 
 
-def _gate_clip(y: "np.ndarray") -> "np.ndarray | None":
-    """Admission gate + positive-quantile winsorize (PRACTICA3.py:97-99,
-    105-107) — the pre-model prefix shared by the per-series and the
-    batched fit paths."""
-    if len(y) < MIN_WEEKS or y.sum() < MIN_TOTAL_SALES:
-        return None
-    pos = y[y > 0]
-    if len(pos) > 5:
-        y = np.clip(y, np.quantile(pos, 0.01), np.quantile(pos, 0.99))
-    return y
-
-
-def _member_fourier(wk_train: "np.ndarray", train: "np.ndarray") -> "np.ndarray | None":
-    """U2 native slot: Prophet-family decomposition (see _series_result)."""
+def _prophet_member(wk_train: "np.ndarray", train: "np.ndarray") -> "np.ndarray | None":
+    """U2 slot for one series: Prophet when importable, else its numpy
+    decomposition; None when the fit fails (U6)."""
     try:
-        from ..functions.tsmodels import fourier_trend_forecast
-
-        # weeks are midnight-aligned datetime64[ns]; the /day division
-        # is exact integer days (== DatetimeIndex.days)
-        t_days = (wk_train - wk_train[0]) / np.timedelta64(1, "D")
         ylog = np.log1p(np.clip(train, 0.0, None))
-        yhat = fourier_trend_forecast(ylog, t_days.astype(float), FORECAST_HORIZON_WEEKS)
+        if PROPHET_AVAILABLE:
+            m = Prophet(
+                yearly_seasonality=True,
+                weekly_seasonality=False,
+                daily_seasonality=False,
+                seasonality_mode="additive",
+                changepoint_prior_scale=0.1,
+            )
+            m.fit(pd.DataFrame({"ds": pd.DatetimeIndex(wk_train), "y": ylog}))
+            future = m.make_future_dataframe(periods=FORECAST_HORIZON_WEEKS, freq="W-SUN")
+            yhat = m.predict(future)["yhat"].iloc[-FORECAST_HORIZON_WEEKS:].values
+        else:
+            # weeks are midnight-aligned datetime64[ns]; the /day division
+            # is exact integer days (== DatetimeIndex.days)
+            t_days = (wk_train - wk_train[0]) / np.timedelta64(1, "D")
+            yhat = fourier_trend_forecast(ylog, t_days.astype(float), FORECAST_HORIZON_WEEKS)
         return np.maximum(np.expm1(yhat), 0.0)
     except Exception:
         return None  # U6
+
+
+def _hw_member(train: "np.ndarray") -> "np.ndarray | None":
+    """U3 slot for one series: statsmodels when importable, else the
+    scalar numpy grid; None when the fit fails (U6)."""
+    try:
+        ts = np.log1p(train)
+        sp = 52 if len(ts) >= 52 else None
+        if HW_AVAILABLE:
+            yhat = ExponentialSmoothing(
+                ts, trend="add", seasonal="add" if sp else None, seasonal_periods=sp
+            ).fit(optimized=True).forecast(FORECAST_HORIZON_WEEKS)
+        else:
+            yhat = holt_winters_forecast(ts, FORECAST_HORIZON_WEEKS, seasonal_periods=sp)
+        return np.maximum(np.expm1(yhat), 0.0)
+    except Exception:
+        return None  # U6
+
+
+def _hw_members(trains: list) -> list:
+    """U3 slot for a batch of train slices. Without statsmodels the
+    numpy grid search, whose Python-level time loop dominates the fit,
+    runs ONCE over the whole batch via ``holt_winters_forecast_many``
+    (elementwise identical recursions — see tsmodels). sp=52 for every
+    series: the batched grid takes the same internal len >= 2*52
+    seasonal branch per series that the scalar sp = 52 if len >= 52
+    else None resolves to (len in [52, 104) is non-seasonal either
+    way)."""
+    if not HW_AVAILABLE:
+        try:
+            fcs = holt_winters_forecast_many(
+                [np.log1p(t) for t in trains], FORECAST_HORIZON_WEEKS, seasonal_periods=52
+            )
+            return [np.maximum(np.expm1(f), 0.0) for f in fcs]
+        except Exception:
+            pass  # U6: fall back to per-series isolation
+    return [_hw_member(t) for t in trains]
 
 
 def _assemble_row(
@@ -240,8 +281,8 @@ def _assemble_row(
     test: "np.ndarray",
     preds: "list[np.ndarray]",
 ) -> dict:
-    """Ensemble median + inventory formulas — the post-model suffix
-    shared by the per-series and the batched fit paths."""
+    """Ensemble median + inventory formulas — the post-model suffix of
+    process_series on numpy arrays."""
     ensemble = np.median(np.vstack(preds), axis=0)  # A16
     hist_avg = max(1.0, float(np.mean(train)))
     ensemble = np.clip(ensemble, 0.0, max(10 * hist_avg, float(ensemble.max())))
@@ -266,182 +307,66 @@ def _assemble_row(
     }
 
 
-def _series_result(
-    sku: str,
-    store: str,
-    weeks: "np.ndarray",
-    y: "np.ndarray",
-    native_members: bool,
-    ma_only: bool,
-) -> dict | None:
-    """The process_series math on raw numpy arrays (weeks: datetime64[ns]
-    week-sorted, y: float64 dense units) — one dict per admitted series,
-    None when gated out.
+def _fit_batch(items: list, ma_only: bool = False) -> list[dict]:
+    """The process_series math for a batch of series on raw numpy
+    arrays. ``items`` = [(sku, store, weeks, y), ...] with weeks
+    datetime64[ns] week-sorted and y float64 dense units; returns one
+    row dict per admitted series, in input order.
 
-    Exactness contract with process_series: every pandas op it used is
-    replaced by the numpy op pandas itself dispatches to in this
-    environment (no bottleneck installed): Series.sum/mean -> np.nansum
+    Order of work: gate + clip every series, then the Prophet slot and
+    the Holt-Winters slot over the admitted ones (skipped under
+    ``ma_only``), then the moving-average member and the assembly. A
+    failing member drops out of its own series only (U6).
+
+    Exactness contract with process_series: every pandas op it uses is
+    replaced by the numpy op pandas itself dispatches to when bottleneck
+    is not installed: Series.sum/mean -> np.nansum
     /np.nanmean == np.sum/np.mean on NaN-free data; Series.quantile ->
     np.percentile's linear interpolation; Series.clip -> np.clip;
     np.std(Series) was already ndarray math. Verified bit-identical by
-    tests/test_forecast_mapinpandas.py's map-vs-group differential and
-    the ensemble certificate oracle."""
-    y = _gate_clip(y)
-    if y is None:
-        return None
-
-    train, test = y[:-FORECAST_HORIZON_WEEKS], y[-FORECAST_HORIZON_WEEKS:]
-    preds: list[np.ndarray] = []
-
-    if len(train) >= MIN_WEEKS and not ma_only:  # U2: Prophet slot
-        wk_train = weeks[: len(train)]
-        if PROPHET_AVAILABLE:
-            try:
-                dfp = pd.DataFrame(
-                    {"ds": pd.DatetimeIndex(wk_train), "y": np.log1p(np.clip(train, 0.0, None))}
-                )
-                m = Prophet(
-                    yearly_seasonality=True,
-                    weekly_seasonality=False,
-                    daily_seasonality=False,
-                    seasonality_mode="additive",
-                    changepoint_prior_scale=0.1,
-                )
-                m.fit(dfp)
-                future = m.make_future_dataframe(periods=FORECAST_HORIZON_WEEKS, freq="W-SUN")
-                yhat = np.expm1(m.predict(future)["yhat"].iloc[-FORECAST_HORIZON_WEEKS:].values)
-                preds.append(np.maximum(yhat, 0.0))
-            except Exception:
-                pass  # U6: model isolation
-        elif native_members:
-            fc = _member_fourier(wk_train, train)
-            if fc is not None:
-                preds.append(fc)
-
-    if len(train) >= 8 and not ma_only:  # U3: Holt-Winters slot
-        if HW_AVAILABLE:
-            try:
-                ts = np.log1p(train)
-                seasonal = "add" if len(ts) >= 52 else None
-                hw = ExponentialSmoothing(
-                    ts, trend="add", seasonal=seasonal, seasonal_periods=52 if seasonal else None
-                ).fit(optimized=True)
-                preds.append(np.maximum(np.expm1(hw.forecast(FORECAST_HORIZON_WEEKS)), 0.0))
-            except Exception:
-                pass
-        elif native_members:
-            try:
-                from ..functions.tsmodels import holt_winters_forecast
-
-                ts = np.log1p(train)
-                sp = 52 if len(ts) >= 52 else None
-                yhat = holt_winters_forecast(ts, FORECAST_HORIZON_WEEKS, seasonal_periods=sp)
-                preds.append(np.maximum(np.expm1(yhat), 0.0))
-            except Exception:
-                pass
-
-    # U4: the moving-average member never fails.
-    ma = np.mean(train[-4:]) if len(train) >= 4 else np.mean(train)
-    ma_member = max(0.0, float(ma))
-    preds.append(np.full(FORECAST_HORIZON_WEEKS, ma_member))
-
-    return _assemble_row(sku, store, train, test, preds)
-
-
-def _fit_series_batch(items: list) -> list[dict]:
-    """Batched twin of per-series ``_series_result`` for the native
-    fallback ensemble (no prophet/statsmodels importable — this
-    container's configuration): the Holt-Winters grid search, whose
-    Python-level time loop was ~60% of the fit stage, runs ONCE over
-    all admitted series via ``holt_winters_forecast_many`` (elementwise
-    identical recursions — see tsmodels); gate/clip, the Fourier
-    member, MA and assembly reuse the exact helpers _series_result
-    runs. ``items`` = [(sku, store, weeks, y), ...]; returns the same
-    dicts in the same order as the per-series loop."""
-    pend: list[tuple] = []
-    hw_inputs: list[np.ndarray] = []
+    tests/test_tsmodels_batch.py, tests/test_forecast_mapinpandas.py's
+    map-vs-group differential and the ensemble certificate oracle."""
+    fits: list[tuple] = []
     for sku, store, weeks, y in items:
-        y = _gate_clip(y)
-        if y is None:
+        if len(y) < MIN_WEEKS or y.sum() < MIN_TOTAL_SALES:  # PRACTICA3.py:97-99
             continue
+        pos = y[y > 0]
+        if len(pos) > 5:  # positive-quantile winsorize (PRACTICA3.py:105-107)
+            y = np.clip(y, np.quantile(pos, 0.01), np.quantile(pos, 0.99))
         train, test = y[:-FORECAST_HORIZON_WEEKS], y[-FORECAST_HORIZON_WEEKS:]
-        preds: list[np.ndarray] = []
-        if len(train) >= MIN_WEEKS:  # U2: Prophet slot (native member)
-            fc = _member_fourier(weeks[: len(train)], train)
-            if fc is not None:
-                preds.append(fc)
-        want_hw = len(train) >= 8  # U3: Holt-Winters slot
-        if want_hw:
-            hw_inputs.append(np.log1p(train))
-        pend.append((sku, store, train, test, preds, want_hw))
-    hw_fcs: list | None = None
-    if hw_inputs:
-        try:
-            from ..functions.tsmodels import holt_winters_forecast_many
+        fits.append((sku, store, weeks[: len(train)], train, test, []))
 
-            # sp=52 for every series: holt_winters_forecast_many takes
-            # the same internal len>=2*52 seasonal branch per series
-            # that the scalar sp = 52 if len >= 52 else None dance
-            # resolves to (len in [52, 104) is non-seasonal either way).
-            hw_fcs = holt_winters_forecast_many(
-                hw_inputs, FORECAST_HORIZON_WEEKS, seasonal_periods=52
-            )
-        except Exception:
-            hw_fcs = None  # U6 fallback: per-series isolation below
+    if not ma_only:
+        for _, _, wk_train, train, _, preds in fits:
+            if len(train) >= MIN_WEEKS:  # U2: Prophet slot
+                preds.append(_prophet_member(wk_train, train))
+        # U3: Holt-Winters slot
+        hw = [(train, preds) for *_, train, _, preds in fits if len(train) >= 8]
+        for (_, preds), fc in zip(hw, _hw_members([train for train, _ in hw])):
+            preds.append(fc)
+
     rows: list[dict] = []
-    hw_i = 0
-    for sku, store, train, test, preds, want_hw in pend:
-        if want_hw:
-            if hw_fcs is not None:
-                yhat = hw_fcs[hw_i]
-                preds.append(np.maximum(np.expm1(yhat), 0.0))
-            else:
-                try:
-                    from ..functions.tsmodels import holt_winters_forecast
-
-                    ts = np.log1p(train)
-                    sp = 52 if len(ts) >= 52 else None
-                    yhat = holt_winters_forecast(
-                        ts, FORECAST_HORIZON_WEEKS, seasonal_periods=sp
-                    )
-                    preds.append(np.maximum(np.expm1(yhat), 0.0))
-                except Exception:
-                    pass
-            hw_i += 1
+    for sku, store, _, train, test, preds in fits:
+        preds = [p for p in preds if p is not None]
         # U4: the moving-average member never fails.
         ma = np.mean(train[-4:]) if len(train) >= 4 else np.mean(train)
-        ma_member = max(0.0, float(ma))
-        preds.append(np.full(FORECAST_HORIZON_WEEKS, ma_member))
+        preds.append(np.full(FORECAST_HORIZON_WEEKS, max(0.0, float(ma))))
         rows.append(_assemble_row(sku, store, train, test, preds))
     return rows
 
 
-def _fit_partition(
-    batches, native_members: bool = True, ma_only: bool = False
-):
+def _fit_partition(batches, ma_only: bool = False):
     """Streaming fit loop for mapInPandas [guide §4.5 shape]: the caller
     sorts the partition by (series, week) in the JVM
     (sortWithinPartitions — same post-exchange stage, codegen), so each
-    Arrow batch arrives as contiguous group runs and the per-series
-    model math runs on numpy slices batch by batch. Only the (possibly
+    Arrow batch arrives as contiguous group runs and ``_fit_batch``
+    runs on the numpy slices batch by batch. Only the (possibly
     incomplete) TRAILING group of each batch is carried into the next,
     so peak Python memory is one Arrow batch + one series —
-    independent of partition size (r12 verdict #4: the previous
-    whole-partition concat made peak memory grow with admitted volume
-    / partition count at 100 TB). Replaces a per-group pandas
-    DataFrame construction + Arrow slice round-trip per series
-    (measured 239.6 -> 57.0 task-seconds on the sf0.1 full-ensemble
-    python stage, 4.2x vs applyInPandas)."""
+    independent of partition size."""
     cols = [f.name for f in RESULT_SCHEMA.fields]
     carry: pd.DataFrame | None = None
     out: list[dict] = []
-    # The batched Holt-Winters grid applies to the native-fallback
-    # ensemble configuration (this container: no prophet/statsmodels);
-    # every other configuration keeps the per-series reference loop.
-    use_batch = (
-        native_members and not ma_only
-        and not PROPHET_AVAILABLE and not HW_AVAILABLE
-    )
 
     def fit_runs(pdf: pd.DataFrame, last_is_open: bool) -> pd.DataFrame | None:
         """Fit every complete group run in (sorted) pdf; return the
@@ -459,23 +384,10 @@ def _fit_partition(
         if len(starts):
             wk = pd.to_datetime(pdf["week"]).to_numpy()
             vals = pdf["units_sold"].to_numpy(dtype=float)
-            if use_batch:
-                out.extend(
-                    _fit_series_batch(
-                        [
-                            (str(pids[s]), str(sids[s]), wk[s:e], vals[s:e])
-                            for s, e in zip(starts, ends)
-                        ]
-                    )
-                )
-            else:
-                for s, e in zip(starts, ends):
-                    row = _series_result(
-                        str(pids[s]), str(sids[s]), wk[s:e], vals[s:e],
-                        native_members, ma_only,
-                    )
-                    if row is not None:
-                        out.append(row)
+            items = [
+                (str(pids[s]), str(sids[s]), wk[s:e], vals[s:e]) for s, e in zip(starts, ends)
+            ]
+            out.extend(_fit_batch(items, ma_only))
         return tail
 
     for pdf in batches:
@@ -490,69 +402,39 @@ def _fit_partition(
         yield pd.DataFrame(out, columns=cols)
 
 
-def forecast_with_models(
-    dense_weekly: DataFrame,
-    native_members: bool = True,
-    ma_only: bool = False,
-    assume_gated: bool = False,
-) -> DataFrame:
-    """mapInPandas model-fit pass over the densified weekly table (the
-    key-clustered repartition replaces groupBy().applyInPandas — r12).
+def forecast_with_models(dense_weekly: DataFrame, ma_only: bool = False) -> DataFrame:
+    """mapInPandas model-fit pass over the densified weekly table: one
+    RESULT_SCHEMA row per admitted (product_id, store_id) series.
 
-    The admission gates run BOTH natively before the shuffle (cheap
-    group pruning Catalyst can't infer through a UDF — the reference
-    does the same manually, PRACTICA3.py:97-99) and inside the UDF
-    (defense in depth for direct callers). ``native_members=False``
-    drops the numpy Holt-Winters / Fourier-trend fallback members,
-    leaving library members (if importable) + MA — the configuration
-    the MA-only differential test against the native flagship uses.
-
-    ``assume_gated=True`` (r12) skips the native window gating for
-    callers whose ``dense_weekly`` was built with the equivalent
-    resample pre-gates (weekly_dense_resample min_span_weeks/
-    min_total) — that saves a full window sort over the dense table;
-    the in-UDF gate still runs on every group either way."""
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
-    if assume_gated:
-        gated = dense_weekly
-    else:
-        w = Window.partitionBy("product_id", "store_id")
-        gated = (
-            dense_weekly.withColumn("_n", F.count("*").over(w))
-            .withColumn("_tot", F.sum("units_sold").over(w))
-            .filter((F.col("_n") >= MIN_WEEKS) & (F.col("_tot") >= MIN_TOTAL_SALES))
-            .drop("_n", "_tot")
-        )
+    The admission gate runs inside the fit, on every series. Callers
+    build ``dense_weekly`` with weekly_dense_resample's
+    ``min_span_weeks``/``min_total`` pre-gates, which drop the series
+    that can never pass before this shuffle (the reference does the
+    same manually, PRACTICA3.py:97-99); without them the result is the
+    same, only more rows cross into Python. ``ma_only=True`` keeps only
+    the moving-average member — the configuration that agrees exactly
+    with the native flagship plan."""
     # The model-fit stage is CPU-bound per GROUP, not per byte: a few
     # thousand weekly series are only ~tens of MB, so AQE's byte-based
     # partition coalescing folds the group-map exchange down to ONE
     # partition and every fit runs serially in a single Python worker
     # (measured exactly that: 1 post-AQE partition, 54 s -> 17 s at
     # sf0.01 after this pin). An explicit user repartition on the SAME
-    # keys is AQE-exempt, sized by executor parallelism, and satisfies
-    # the group-map's clustering requirement so no second shuffle is
-    # planned.
+    # keys is AQE-exempt and sized by executor parallelism.
     parallelism = dense_weekly.sparkSession.sparkContext.defaultParallelism
-    gated = gated.repartition(parallelism * 2, "product_id", "store_id")
+    clustered = dense_weekly.repartition(parallelism * 2, "product_id", "store_id")
     # mapInPandas over the key-clustered partitions instead of
-    # groupBy().applyInPandas (r12, guide §4.2/§4.5): the repartition
-    # above already co-locates every series' rows, and the JVM-side
-    # sortWithinPartitions (same post-exchange stage, codegen — r13)
-    # delivers them as contiguous (series, week) runs, so the partition
-    # function streams group runs batch by batch and runs the identical
-    # per-series math on numpy slices — no per-group Arrow slice, no
-    # per-group pandas DataFrame, and peak Python memory of one Arrow
-    # batch + one series instead of the whole partition. Only the four
-    # columns the fit needs cross the boundary (explicit select — Spark
-    # cannot see inside the function; guide §4.1).
+    # groupBy().applyInPandas (guide §4.2/§4.5): the repartition above
+    # already co-locates every series' rows, and the JVM-side
+    # sortWithinPartitions (same post-exchange stage, codegen) delivers
+    # them as contiguous (series, week) runs, so the partition function
+    # streams group runs batch by batch — no per-group Arrow slice, no
+    # per-group pandas DataFrame. Only the four columns the fit needs
+    # cross the boundary (explicit select — Spark cannot see inside the
+    # function; guide §4.1).
     cols = ["product_id", "store_id", "week", "units_sold"]
     return (
-        gated.select(*cols)
+        clustered.select(*cols)
         .sortWithinPartitions("product_id", "store_id", "week")
-        .mapInPandas(
-            lambda it: _fit_partition(it, native_members=native_members, ma_only=ma_only),
-            RESULT_SCHEMA,
-        )
+        .mapInPandas(lambda it: _fit_partition(it, ma_only=ma_only), RESULT_SCHEMA)
     )

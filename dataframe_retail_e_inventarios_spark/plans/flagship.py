@@ -28,7 +28,14 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.inventory import LEAD_TIME_WEEKS, SERVICE_LEVEL_Z, inventory_columns
+from ..functions.inventory import (
+    FORECAST_HORIZON_WEEKS as HORIZON,
+    LEAD_TIME_WEEKS,
+    MIN_TOTAL_SALES,
+    MIN_WEEKS,
+    SERVICE_LEVEL_Z,
+    inventory_columns,
+)
 from ..operators.cleaning import clean_sales
 from ..operators.resample import weekly_dense_resample
 from ..operators.split import add_recency_rank
@@ -36,9 +43,6 @@ from ..operators.winsorize import winsorize_by_group
 from ..sources.readers import load_table
 
 KEYS = ["product_id", "store_id"]
-HORIZON = 4  # FORECAST_HORIZON_WEEKS (PRACTICA3.py:35)
-MIN_WEEKS = 12  # PRACTICA3.py:37
-MIN_TOTAL_SALES = 10  # PRACTICA3.py:38
 
 
 def series_stats(

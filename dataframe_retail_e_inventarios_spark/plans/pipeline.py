@@ -59,20 +59,19 @@ def forecast_inventory(
     ``use_models=False`` (default): the all-native plan — MA-only
     ensemble, zero Python UDFs, oracle-checkable.
     ``use_models=True``: routes per-series model fitting through the
-    applyInPandas port (Prophet/Holt-Winters when installed).
-    Both return the reference's result schema (the UDF path appends
-    one extra diagnostic column, MA_Member — the deterministic
-    moving-average member the certificate query hash-gates).
+    mapInPandas model-fit pass (Prophet / Holt-Winters when installed,
+    their numpy counterparts when not, plus the moving average).
+    Both return exactly the reference's eight result columns.
     """
     keys = keys or KEYS
     if use_models:
-        from ..operators.forecast_udf import MIN_TOTAL_SALES, MIN_WEEKS, forecast_with_models
+        from ..operators.forecast_udf import forecast_with_models
 
         dense = weekly_dense_resample(
             sales, keys, "invoice_date", "units_sold",
             min_span_weeks=MIN_WEEKS, min_total=MIN_TOTAL_SALES,
         )
-        return forecast_with_models(dense, assume_gated=True)
+        return forecast_with_models(dense).drop("MA_Member")
 
     from .flagship import series_stats
 

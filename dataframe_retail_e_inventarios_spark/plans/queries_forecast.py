@@ -1,6 +1,6 @@
 """Model-UDF and multimodal queries [SURVEY §2.9 U1-U6, §2.11 N5].
 
-``forecast_udf_ensemble`` is the applyInPandas port of the reference's
+``forecast_udf_ensemble`` is the mapInPandas port of the reference's
 process_sku. The model-fit floats are non-SQL-expressible once
 Prophet/Holt-Winters are present, so the registered projection hash-
 gates the pipeline's DETERMINISTIC sub-outputs instead (r10 verdict
@@ -33,7 +33,7 @@ from ..operators.multimodal import (
 from ..operators.resample import weekly_dense_resample
 from ..registry import register
 from ..sources.readers import load_table
-from .flagship import KEYS
+from .flagship import KEYS, MIN_TOTAL_SALES, MIN_WEEKS
 
 
 def q_forecast_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -44,13 +44,11 @@ def q_forecast_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     compared against the constants the reference guarantees — a model
     member emitting a negative / wrong-length forecast, or inventory
     math violating rop >= ss >= 0, flips a bit and fails the hash."""
-    from ..operators.forecast_udf import MIN_TOTAL_SALES, MIN_WEEKS
-
     dense = weekly_dense_resample(
         clean_sales(load_table(spark, sf_dir, "lineitem")), KEYS, "invoice_date", "units_sold",
         min_span_weeks=MIN_WEEKS, min_total=MIN_TOTAL_SALES,
     )
-    res = forecast_with_models(dense, assume_gated=True)
+    res = forecast_with_models(dense)
     fc = F.col("Forecast")
     test_sum = (
         F.aggregate(
@@ -110,20 +108,18 @@ register("forecast_udf_ensemble", q_forecast_udf, _ensemble_certificate_oracle()
 
 
 def q_forecast_udf_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME applyInPandas pipeline restricted to its deterministic
+    """The SAME model-fit pipeline restricted to its deterministic
     MA member (``ma_only=True``): with one member the median ensemble
     equals the MA forecast, making every output SQL-expressible — so
     the full pandas-side path (gating, winsorize clip, train/test
     split, safe-MAPE, SS/ROP/Q int rounding, Arrow transport) runs
     under the driver's hash gate, not just rows-only. The model-fit
     members stay covered by the differential tests."""
-    from ..operators.forecast_udf import MIN_TOTAL_SALES, MIN_WEEKS
-
     dense = weekly_dense_resample(
         clean_sales(load_table(spark, sf_dir, "lineitem")), KEYS, "invoice_date", "units_sold",
         min_span_weeks=MIN_WEEKS, min_total=MIN_TOTAL_SALES,
     )
-    res = forecast_with_models(dense, ma_only=True, assume_gated=True)
+    res = forecast_with_models(dense, ma_only=True)
     return res.select(
         "SKU",
         "Store",

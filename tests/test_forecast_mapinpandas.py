@@ -41,7 +41,7 @@ def test_map_loop_matches_process_series(spark, ma_only):
         min_total=MIN_TOTAL_SALES,
     )
     got = (
-        forecast_with_models(dense, ma_only=ma_only, assume_gated=True)
+        forecast_with_models(dense, ma_only=ma_only)
         .toPandas()
         .sort_values(["SKU", "Store"])
         .reset_index(drop=True)

@@ -1,13 +1,15 @@
 """Deterministic fake-model injection for the U2/U3 ensemble members
 (reference PRACTICA3.py:114-140).
 
-prophet/statsmodels are not installable in this container, so the
-Prophet and Holt-Winters branches of process_series never execute in
-plain CI. These tests inject API-compatible deterministic fakes at the
-module level and call process_series directly (it is a plain
-pandas-in/pandas-out function), covering: the >= 52-week seasonal
-branch, the log1p/expm1 round-trip, the multi-member median ensemble,
-and per-model failure isolation — no skips."""
+prophet/statsmodels are not installed in CI, so the Prophet and
+Holt-Winters library branches never execute there on their own. These
+tests inject API-compatible deterministic fakes at the module level
+and run every case through both fit paths: the pandas reference
+process_series and the streaming partition loop that
+forecast_with_models runs on the executors (_fit_partition ->
+_fit_batch). Covered: the >= 52-week seasonal branch, the log1p/expm1
+round-trip, the multi-member median ensemble, and per-model failure
+isolation — no skips."""
 
 import numpy as np
 import pandas as pd
@@ -19,7 +21,7 @@ HORIZON = M.FORECAST_HORIZON_WEEKS
 
 
 class FakeProphet:
-    """Prophet API surface used by process_series; returns a constant
+    """Prophet API surface used by the fit; returns a constant
     yhat (in the fitted log space) so the expm1 round-trip is visible."""
 
     yhat_log = None  # set per test
@@ -46,7 +48,7 @@ class FakeProphet:
 
 
 class FakeHW:
-    """statsmodels ExponentialSmoothing surface used by process_series."""
+    """statsmodels ExponentialSmoothing surface used by the fit."""
 
     fc_log = None
     calls = []
@@ -75,6 +77,19 @@ def inject(monkeypatch):
     monkeypatch.setattr(M, "ExponentialSmoothing", FakeHW, raising=False)
 
 
+def _partition_fit(pdf):
+    """One sorted series through the production partition loop."""
+    frames = list(M._fit_partition([pdf]))
+    return frames[0] if frames else pd.DataFrame()
+
+
+def _fits():
+    """Each fit path in turn, with the fakes' recorded calls reset."""
+    for name, fit in (("process_series", M.process_series), ("_fit_partition", _partition_fit)):
+        FakeProphet.init_kwargs, FakeHW.calls = [], []
+        yield name, fit
+
+
 def _series(n_weeks, value=20.0):
     weeks = pd.date_range("2023-01-08", periods=n_weeks, freq="W-SUN")
     return pd.DataFrame(
@@ -93,13 +108,14 @@ def test_three_member_median_and_log_roundtrip(inject):
     members' log-space constants must round-trip through expm1."""
     FakeProphet.yhat_log = np.log1p(10.0)
     FakeHW.fc_log = np.log1p(30.0)
-    out = M.process_series(_series(20, value=20.0))
-    assert len(out) == 1
-    fc = np.array(out["Forecast"].iloc[0])
-    assert np.allclose(fc, 20.0)
-    # Prophet received log1p'd training values (PRACTICA3.py:118)
-    fitted = FakeProphet.init_kwargs
-    assert len(fitted) == 1  # Prophet ran exactly once
+    for name, fit in _fits():
+        out = fit(_series(20, value=20.0))
+        assert len(out) == 1, name
+        fc = np.array(out["Forecast"].iloc[0])
+        assert np.allclose(fc, 20.0), name
+        # Prophet received log1p'd training values (PRACTICA3.py:118)
+        assert len(FakeProphet.init_kwargs) == 1, name  # Prophet ran exactly once
+        assert len(FakeHW.calls) == 1, name
 
 
 def test_median_with_failing_member_isolated(inject):
@@ -107,11 +123,12 @@ def test_median_with_failing_member_isolated(inject):
     ensemble continues with HW + MA (median of two = mean)."""
     FakeProphet.fail = True
     FakeHW.fc_log = np.log1p(30.0)
-    out = M.process_series(_series(20, value=20.0))
-    assert len(out) == 1
-    fc = np.array(out["Forecast"].iloc[0])
-    # members: HW=30, MA=20 -> median = 25
-    assert np.allclose(fc, 25.0)
+    for name, fit in _fits():
+        out = fit(_series(20, value=20.0))
+        assert len(out) == 1, name
+        fc = np.array(out["Forecast"].iloc[0])
+        # members: HW=30, MA=20 -> median = 25
+        assert np.allclose(fc, 25.0), name
 
 
 def test_hw_seasonal_branch_at_52_weeks(inject):
@@ -119,11 +136,12 @@ def test_hw_seasonal_branch_at_52_weeks(inject):
     with period 52 (PRACTICA3.py:134-137); shorter series must not."""
     FakeProphet.yhat_log = np.log1p(20.0)
     FakeHW.fc_log = np.log1p(20.0)
-    M.process_series(_series(52 + HORIZON, value=20.0))
-    assert FakeHW.calls[-1] == {"n": 52, "seasonal": "add", "seasonal_periods": 52}
-    M.process_series(_series(20, value=20.0))
-    assert FakeHW.calls[-1]["seasonal"] is None
-    assert FakeHW.calls[-1]["seasonal_periods"] is None
+    for name, fit in _fits():
+        fit(_series(52 + HORIZON, value=20.0))
+        assert FakeHW.calls[-1] == {"n": 52, "seasonal": "add", "seasonal_periods": 52}, name
+        fit(_series(20, value=20.0))
+        assert FakeHW.calls[-1]["seasonal"] is None, name
+        assert FakeHW.calls[-1]["seasonal_periods"] is None, name
 
 
 def test_member_gates(inject):
@@ -131,10 +149,11 @@ def test_member_gates(inject):
     (train=10) must run HW but not Prophet."""
     FakeProphet.yhat_log = np.log1p(20.0)
     FakeHW.fc_log = np.log1p(20.0)
-    out = M.process_series(_series(14, value=20.0))
-    assert len(out) == 1
-    assert FakeProphet.init_kwargs == []  # gated out
-    assert len(FakeHW.calls) == 1
+    for name, fit in _fits():
+        out = fit(_series(14, value=20.0))
+        assert len(out) == 1, name
+        assert FakeProphet.init_kwargs == [], name  # gated out
+        assert len(FakeHW.calls) == 1, name
 
 
 def test_upper_cap_is_faithfully_vacuous(inject):
@@ -146,7 +165,8 @@ def test_upper_cap_is_faithfully_vacuous(inject):
     accidental 'fix' shows up as a divergence from the reference."""
     FakeProphet.yhat_log = np.log1p(10_000.0)
     FakeHW.fc_log = np.log1p(10_000.0)
-    out = M.process_series(_series(20, value=20.0))
-    fc = np.array(out["Forecast"].iloc[0])
-    # members: [10000, 10000, 20] -> median 10000; vacuous cap keeps it
-    assert np.allclose(fc, 10_000.0, rtol=1e-9)
+    for name, fit in _fits():
+        out = fit(_series(20, value=20.0))
+        fc = np.array(out["Forecast"].iloc[0])
+        # members: [10000, 10000, 20] -> median 10000; vacuous cap keeps it
+        assert np.allclose(fc, 10_000.0, rtol=1e-9), name

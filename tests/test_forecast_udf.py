@@ -1,18 +1,18 @@
-"""The applyInPandas model pipeline (reference port) and the native
-flagship plan must agree exactly when only the MA model is available
+"""The mapInPandas model pipeline (reference port) and the native
+flagship plan must agree exactly when only the MA member votes
 (SURVEY §7.4: two code paths, one oracle)."""
 
-import pyspark.sql.functions as F
 import pytest
 
 from dataframe_retail_e_inventarios_spark.operators.cleaning import clean_sales
-from dataframe_retail_e_inventarios_spark.operators.forecast_udf import (
-    HW_AVAILABLE,
-    PROPHET_AVAILABLE,
-    forecast_with_models,
-)
+from dataframe_retail_e_inventarios_spark.operators.forecast_udf import forecast_with_models
 from dataframe_retail_e_inventarios_spark.operators.resample import weekly_dense_resample
-from dataframe_retail_e_inventarios_spark.plans.flagship import KEYS, flagship
+from dataframe_retail_e_inventarios_spark.plans.flagship import (
+    KEYS,
+    MIN_TOTAL_SALES,
+    MIN_WEEKS,
+    flagship,
+)
 from dataframe_retail_e_inventarios_spark.sources.readers import load_table
 from tests.conftest import SF_SMOKE
 
@@ -24,6 +24,8 @@ def dense_weekly(spark):
         KEYS,
         "invoice_date",
         "units_sold",
+        min_span_weeks=MIN_WEEKS,
+        min_total=MIN_TOTAL_SALES,
     )
 
 
@@ -37,9 +39,10 @@ def udf_results(dense_weekly):
 
 @pytest.fixture(scope="module")
 def udf_results_ma_only(dense_weekly):
-    """native_members=False -> MA-only (in this container), the
-    configuration that must agree exactly with the native flagship."""
-    return forecast_with_models(dense_weekly, native_members=False).toPandas()
+    """ma_only=True -> the moving average alone, with or without the
+    model libraries: the configuration that must agree exactly with
+    the native flagship."""
+    return forecast_with_models(dense_weekly, ma_only=True).toPandas()
 
 
 def test_udf_properties(udf_results):
@@ -52,7 +55,7 @@ def test_udf_properties(udf_results):
     assert df["Test"].map(len).eq(4).all()
 
 
-def test_udf_ensemble_bounded_with_native_members(udf_results):
+def test_udf_ensemble_bounded_with_fitted_members(udf_results):
     """With the real numpy model members voting, every forecast must
     stay finite and the MAPE defined: a diverging trend extrapolation
     (the classic expm1-of-a-bad-fit failure) would blow past this."""
@@ -65,11 +68,6 @@ def test_udf_ensemble_bounded_with_native_members(udf_results):
     assert (udf_results["MAPE"] >= 0).all()
 
 
-@pytest.mark.skipif(
-    PROPHET_AVAILABLE or HW_AVAILABLE,
-    reason="with stat models present the UDF ensemble adds members and "
-    "legitimately diverges from the native MA-only plan",
-)
 def test_udf_matches_native_flagship(spark, udf_results_ma_only):
     native = flagship(spark, SF_SMOKE, top_k=None).toPandas()
     u = udf_results_ma_only.assign(

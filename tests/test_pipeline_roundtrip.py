@@ -106,9 +106,23 @@ def test_udf_path_same_schema(spark, ventas_csv):
     sales = load_ventas(spark, ventas_csv)
     native = forecast_inventory(sales, use_models=False)
     udf = forecast_inventory(sales, use_models=True)
-    assert [f.name for f in udf.schema.fields][:8] == [
-        f.name for f in native.schema.fields
-    ][:8]
+    assert [f.name for f in udf.schema.fields] == [f.name for f in native.schema.fields]
+
+
+def test_udf_path_csv_report_roundtrip(spark, ventas_csv, tmp_path):
+    """The models-path results go through the same CSV sink and report
+    chain as the native ones: the CSV schema is applied by position, so
+    an extra result column would be read back as Runtime_sec and
+    printed as the processing time."""
+    results = forecast_inventory(load_ventas(spark, ventas_csv), use_models=True)
+    out = str(tmp_path / "results_csv")
+    write_results_csv(results, out)
+    reloaded = read_results_csv(spark, out)
+    n = results.count()
+    assert n > 0
+    assert reloaded.count() == n
+    assert reloaded.filter("Runtime_sec IS NOT NULL").count() == 0
+    assert build_report(reloaded).count() == n
 
 
 def test_notebook_flow_entry_point(spark):

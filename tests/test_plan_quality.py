@@ -147,6 +147,19 @@ def test_trend_family_shuffle_budget(spark):
         assert "Join" not in plan or name != "mann_kendall_trend"
 
 
+def test_model_fit_plan_shape(spark):
+    """The model-fit queries: fact -> weekly aggregate, the pre-gated
+    dense table, and ONE key repartition feeding a single mapInPandas.
+    The admission gate runs inside the fit, so a window sort over the
+    dense table (a native gate coming back) or a second Python node
+    shows up here."""
+    for name in ("forecast_udf_ensemble", "forecast_udf_ensemble_native"):
+        plan = plan_of(spark, name)
+        assert plan.count("Exchange") == 3, name
+        assert plan.count("Window") == 0, name
+        assert plan.count("MapInPandas") == 1, name
+
+
 def test_pricing_summary_single_pass(spark):
     """One scan, one 2-key exchange, no joins — the canonical shape."""
     plan = plan_of(spark, "tpch_pricing_summary")

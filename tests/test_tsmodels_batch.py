@@ -2,10 +2,11 @@
 reference: ``holt_winters_forecast_many`` must return ELEMENTWISE EQUAL
 forecasts to a per-series ``holt_winters_forecast`` loop (zero
 tolerance — the ensemble oracle hashes depend on it), and the batched
-fit driver ``_fit_series_batch`` must reproduce ``_series_result``
-row-for-row. Pure-python tests, no Spark session."""
+fit driver ``_fit_batch`` must reproduce the pandas reference
+``process_series`` row-for-row. Pure-python tests, no Spark session."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from dataframe_retail_e_inventarios_spark.functions.tsmodels import (
@@ -13,8 +14,8 @@ from dataframe_retail_e_inventarios_spark.functions.tsmodels import (
     holt_winters_forecast_many,
 )
 from dataframe_retail_e_inventarios_spark.operators.forecast_udf import (
-    _fit_series_batch,
-    _series_result,
+    _fit_batch,
+    process_series,
 )
 
 
@@ -52,25 +53,22 @@ def test_hw_many_empty_and_horizon_zero():
     assert fc.shape == (0,)
 
 
+@pytest.mark.parametrize("ma_only", [False, True])
 @pytest.mark.parametrize("seed", [0, 1])
-def test_fit_series_batch_matches_series_result(seed):
+def test_fit_batch_matches_process_series(seed, ma_only):
     rng = np.random.RandomState(seed)
     items = []
     for i in range(150):
         n = int(rng.choice([5, 11, 12, 20, 60, 104, 115, 127]))
-        weeks = np.datetime64("2009-01-04") + np.arange(n) * np.timedelta64(7, "D")
+        weeks = np.datetime64("2009-01-04", "ns") + np.arange(n) * np.timedelta64(7, "D")
         y = np.round(np.abs(rng.gamma(2.0, 3.0, n)) * (rng.rand(n) > 0.3))
         items.append((f"p{i}", f"s{i % 7}", weeks, y.astype(float)))
-    batch_rows = _fit_series_batch(items)
-    ref_rows = [
-        r
-        for r in (
-            _series_result(sku, store, wk, y, True, False)
-            for sku, store, wk, y in items
-        )
-        if r is not None
-    ]
-    assert len(batch_rows) == len(ref_rows)
+    batch_rows = _fit_batch(items, ma_only)
+    ref_rows = []
+    for sku, store, wk, y in items:
+        pdf = pd.DataFrame({"product_id": sku, "store_id": store, "week": wk, "units_sold": y})
+        ref_rows += process_series(pdf, ma_only=ma_only).to_dict("records")
+    assert len(batch_rows) == len(ref_rows) > 0
     for b, r in zip(batch_rows, ref_rows):
         assert set(b) == set(r)
         for key in r:
