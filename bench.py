@@ -1,8 +1,9 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
+Prints two JSON lines: the full record (also written to BENCH_full.json)
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+and, last, a compact summary that points at BENCH_full.json.
 
 Each query is forced to full materialization with a count() over the
 final plan (no toPandas — we measure engine time, not Arrow transfer).
@@ -21,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from dataframe_retail_e_inventarios_spark.registry import queries
 from dataframe_retail_e_inventarios_spark.session import get_spark
+from tools.harness import best_of
 
 # 1-min load average above this at bench start = another tenant is on
 # the box; main() waits (up to 10 min) for it to clear before timing
@@ -455,12 +457,7 @@ def scale_curve(out_path: str = "BENCH_scale_r05.json") -> None:
     curve: dict[str, dict[str, float]] = {n: {} for n in CURVE}
     for label, sf_dir, runs in points:
         for name in CURVE:
-            best = None
-            for _ in range(runs):
-                t0 = time.time()
-                qs[name](spark, sf_dir).count()
-                dt = time.time() - t0
-                best = dt if best is None else min(best, dt)
+            best, _ = best_of(lambda: qs[name](spark, sf_dir).count(), runs)
             curve[name][label] = round(best, 3)
     report = {
         "metric": "scale_curve_sec",
@@ -558,18 +555,12 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     for name in HEADLINE:
-        fn = qs[name]
         # min of 3 runs (r9 verdict #1b, was 2): single-shot timings on
         # a shared box swing up to several x with background load/GC;
         # the min is the stable engine-cost estimate, and with the
         # observed cross-run spread two samples were not enough to
         # support round-over-round claims.
-        best = None
-        for _ in range(3):
-            t0 = time.time()
-            fn(spark, sf_dir).count()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
+        best, _ = best_of(lambda: qs[name](spark, sf_dir).count(), 3)
         timings[name] = round(best, 3)
         # Release py4j handles NOW: dropped DataFrames pin their
         # localCheckpoint blocks until Python GC runs, and 130 queries
@@ -581,9 +572,8 @@ def main() -> None:
 
     demo_timings: dict[str, float] = {}
     for name in DEMO:
-        t0 = time.time()
-        qs[name](spark, sf_dir).count()
-        demo_timings[name] = round(time.time() - t0, 3)
+        once, _ = best_of(lambda: qs[name](spark, sf_dir).count(), 1)
+        demo_timings[name] = round(once, 3)
 
     # LIGHT group (r5 verdict #2): every registered query NOT in the
     # curated headline/demo lists — small set-op/filter variants, the
@@ -596,12 +586,7 @@ def main() -> None:
     light = sorted(set(qs) - set(HEADLINE) - set(DEMO))
     light_timings: dict[str, float] = {}
     for name in light:
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            qs[name](spark, sf_dir).count()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
+        best, _ = best_of(lambda: qs[name](spark, sf_dir).count(), 2)
         light_timings[name] = round(best, 3)
         gc.collect()
 
@@ -630,12 +615,7 @@ def main() -> None:
     spark.catalog.clearCache()
     gc.collect()
     for name in movers:
-        best = None
-        for _ in range(3):
-            t0 = time.time()
-            qs[name](spark, sf_dir).count()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
+        best, _ = best_of(lambda: qs[name](spark, sf_dir).count(), 3)
         retimes[name] = {
             "in_suite": suite_now[name],
             "prev": prev[name],
@@ -683,20 +663,6 @@ def main() -> None:
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_full.json"), "w") as f:
         json.dump(full, f, indent=1)
     print(json.dumps(full))
-    # PENULTIMATE compact per-query line (r12 verdict #3): the driver's
-    # round-over-round comparator reads only the stdout tail and does
-    # not follow the queries_file pointer, so without this line PERF
-    # gets n_common=0 and mis-reports sample rotation as drops. One
-    # merged headline+light map rounded to 10 ms is ~4 KB for 257
-    # queries — within tail capture as the second-to-last line. The
-    # final one-line summary below stays byte-compatible.
-    per_query = {n: round(t, 2) for n, t in {**timings, **light_timings}.items()}
-    print(
-        json.dumps(
-            {"metric": "per_query_sec", "sf": sf_val, "queries": per_query},
-            separators=(",", ":"),
-        )
-    )
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:5])
     print(
         json.dumps(

@@ -1,10 +1,12 @@
-"""Conditional banding + report-text assembly [SURVEY §2.7 M9, §2.8 T5].
+"""Conditional banding + report-text columns [SURVEY §2.7 M9, §2.8 T5].
 
 The reference's report classifies MAPE into quality bands
 (generador.py:126-136) and renders a per-SKU narrative with embedded
-values (generador.py:97-158). Both are pure column expressions — the
-narrative becomes a ``report_text`` string column built JVM-side;
-only PDF rendering stays driver-side (out of engine scope).
+values (generador.py:97-158). The band, its color and the order
+recommendation are pure column expressions built JVM-side
+(``plans/report.add_report_text``); the document itself is rendered
+driver-side (``plans/report_render``), its precision sentence and color
+keyed on the band columns.
 """
 
 from __future__ import annotations
@@ -54,36 +56,3 @@ def pedido_text(need_reorder: Column | str, qty: Column | str) -> Column:
         )
     )
 
-
-def report_text(
-    sku: Column | str,
-    store: Column | str,
-    mape: Column | str,
-    qty: Column | str,
-    rop: Column | str,
-    ss: Column | str,
-    forecast_total: Column | str,
-    forecast_weeks: Column | str,
-    need_reorder: Column | str,
-) -> Column:
-    """Per-SKU narrative [generador.py:97-158] as one string column.
-
-    Numeric embeds are pre-rounded (round(x,2)) before %.2f formatting
-    so the rendered digits are locale/engine-stable.
-    """
-    m2 = F.round(_c(mape), 2)
-    return F.concat_ws(
-        "\n",
-        F.format_string("Analisis Detallado de SKU: %s en %s", _c(sku).cast("string"), _c(store).cast("string")),
-        pedido_text(need_reorder, qty),
-        F.format_string(
-            "El punto de reorden (ROP) es de %d unidades. "
-            "El stock de seguridad (SS) calculado es de %d unidades. "
-            "La demanda pronosticada para las %d semanas siguientes es de %d unidades.",
-            _c(rop),
-            _c(ss),
-            _c(forecast_weeks),
-            _c(forecast_total),
-        ),
-        F.format_string("Precision del modelo: %s (MAPE: %.2f%%).", mape_band(mape), m2),
-    )

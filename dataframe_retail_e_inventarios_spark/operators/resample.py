@@ -15,10 +15,12 @@ Label: ``date_add(to_date(ts), (8 - dayofweek(ts)) % 7)`` — Spark's
 ``dayofweek`` is 1=Sunday..7=Saturday, so the offset to the next Sunday
 is ``(8 - dow) % 7`` (0 when already Sunday).
 
-Density: a per-series date spine ``sequence(min_wk, max_wk, 7 days)``
-exploded and left-joined. At 100 TB the spine is built from the
-*aggregated* weekly table (series x weeks, ~3 orders of magnitude
-smaller than the fact), never from raw rows.
+Density: ``weekly_dense_resample`` expands each series' sorted weekly
+sums to the dense week grid inside one ``groupBy(keys)`` pass;
+``densify_days`` left-joins a per-series day spine
+``sequence(min_d, max_d, 1 day)``. Either way density is built from the
+*aggregated* table (series x buckets, ~3 orders of magnitude smaller
+than the fact), never from raw rows.
 """
 
 from __future__ import annotations
@@ -84,38 +86,6 @@ def weekly_resample_sum(
         .groupBy(*keys, week_col)
         .agg(F.sum(value_col).alias(out_col))
     )
-
-
-def densify_weeks(
-    weekly: DataFrame,
-    keys: Sequence[str],
-    week_col: str = "week",
-    value_cols: Sequence[str] = ("units_sold",),
-    fill: float = 0.0,
-) -> DataFrame:
-    """Gap-fill a weekly table to pandas-resample density [A2 spine].
-
-    Bounds come from the already-aggregated weekly table (cheap); the
-    spine explode produces series x span rows; the left join runs on
-    (keys, week). With AQE on, the join is re-planned at runtime if the
-    spine side turns out small enough to broadcast.
-    """
-    keys = list(keys)
-    bounds = weekly.groupBy(*keys).agg(
-        F.min(week_col).alias("_min_wk"), F.max(week_col).alias("_max_wk")
-    )
-    # explode_outer: a plain explode makes InferFiltersFromGenerate add
-    # a `size(sequence(...)) > 0` pre-filter that materializes every
-    # spine array twice per row. Bounds rows always yield min<=max so
-    # the outer variant is semantics-identical here.
-    spine = bounds.select(
-        *keys,
-        F.explode_outer(
-            F.sequence("_min_wk", "_max_wk", F.expr("interval 7 days"))
-        ).alias(week_col),
-    )
-    dense = spine.join(weekly, on=[*keys, week_col], how="left")
-    return dense.na.fill({c: fill for c in value_cols})
 
 
 def weekly_dense_resample(
@@ -260,6 +230,10 @@ def densify_days(
     bounds = daily.groupBy(*keys).agg(
         F.min(day_col).alias("_min_d"), F.max(day_col).alias("_max_d")
     )
+    # explode_outer: a plain explode makes InferFiltersFromGenerate add
+    # a `size(sequence(...)) > 0` pre-filter that materializes every
+    # spine array twice per row. Bounds rows always yield min<=max so
+    # the outer variant is semantics-identical here.
     spine = bounds.select(
         *keys,
         F.explode_outer(F.sequence("_min_d", "_max_d", F.expr("interval 1 day"))).alias(day_col),

@@ -33,7 +33,8 @@ weekly AS (
   GROUP BY 1, 2, 3
 )"""
 
-# weekly -> dense weekly series (operators/resample.densify_weeks).
+# weekly -> dense weekly series (operators/resample.weekly_dense_resample;
+# the oracle states it as bounds + week spine + left join).
 DENSE_CTE = """
 bounds AS (
   SELECT product_id, store_id, min(week) AS mn, max(week) AS mx

@@ -27,8 +27,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions.inventory import inventory_columns
 from ..operators.resample import weekly_dense_resample
-from ..operators.split import add_recency_rank
-from ..operators.winsorize import winsorize_by_group
 from ..schemas import FORECAST_RESULTS_CSV_SCHEMA, VENTAS_SCHEMA
 from ..sources.readers import read_csv
 from ..sources.writers import write_csv
@@ -123,9 +121,6 @@ def notebook_flow(
     (Prophet fits live in operators/forecast_udf.py; this native flow
     is the oracle-checkable backbone the notebook wraps around them.)
     """
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
     from ..functions.metrics import mae, rmse
     from ..operators.resample import daily_resample_sum, densify_days
     from ..operators.split import add_lags

@@ -5,8 +5,10 @@ as one lazy plan with zero UDFs [SURVEY §3.3].
 rename-if-present -> numeric coercion -> fill/cast the stringified
 Forecast -> parse it natively (no row-wise apply) -> Need_Reorder ->
 add-RMSE-if-missing -> dropna -> integer rounding. The per-SKU
-narrative (generador.py:97-158) becomes a ``report_text`` column;
-global summary (generador.py:180-183) is a plain aggregate.
+narrative (generador.py:97-158) becomes the ``banda``, ``banda_color``
+and ``pedido`` columns (``report_render`` keys its precision sentence
+and color on the band columns); the global summary
+(generador.py:180-183) is a plain aggregate.
 """
 
 from __future__ import annotations
@@ -49,8 +51,9 @@ def prepare_report_input(results: DataFrame) -> DataFrame:
 def add_report_text(
     df: DataFrame, band_lo: float = 10.0, band_hi: float = 50.0
 ) -> DataFrame:
-    """generador.py:97-158: per-row narrative as a string column.
-    Band edges fuzz-injectable (tools/fuzz_oracles.py)."""
+    """generador.py:97-158: per-row MAPE band, band color and order
+    recommendation columns. Band edges fuzz-injectable
+    (tools/fuzz_oracles.py)."""
     return df.withColumn("banda", mape_band("MAPE", band_lo, band_hi)).withColumn(
         "banda_color", mape_band_color("MAPE", band_lo, band_hi)
     ).withColumn(

@@ -51,12 +51,14 @@ def _sku_section(row, html: bool) -> list[str]:
             "(el inventario actual esta por encima del ROP)."
         )
 
-    if mape < 10.0:
+    # keyed on the engine's band column, so the sentence agrees with
+    # banda_color whatever edges add_report_text was given
+    if row["banda"] == "alta precision":
         prec = (
             f"El modelo muestra una {b('alta precision')} (MAPE: {mape:.2f}%). "
             "Las predicciones son muy fiables."
         )
-    elif mape < 50.0:
+    elif row["banda"] == "aceptable":
         prec = (
             f"La precision del modelo es {b('aceptable')} (MAPE: {mape:.2f}%). "
             "Requiere monitorizacion."

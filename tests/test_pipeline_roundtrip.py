@@ -198,6 +198,12 @@ def test_rendered_report_document(spark, ventas_csv, reference_results, tmp_path
     enriched report frame -> rendered document (plain text; ReportLab
     absent from this env). Asserts the reference's section structure
     and the exact content of a known SKU's sections."""
+    import pyspark.sql.functions as F
+
+    from dataframe_retail_e_inventarios_spark.plans.report import (
+        add_report_text,
+        prepare_report_input,
+    )
     from dataframe_retail_e_inventarios_spark.plans.report_render import (
         render_report,
     )
@@ -256,3 +262,15 @@ def test_rendered_report_document(spark, ventas_csv, reference_results, tmp_path
     html = render_report(enriched, generated_at="2026-08-14 00:00:00", html=True)
     assert "<b>" in html and "<font color=" in html
     assert html.count("Analisis Detallado de SKU:") == n
+
+    # non-default band edges: a MAPE of 15 is "alta precision" under
+    # band_lo=20, and the sentence must agree with the printed color
+    prepared = prepare_report_input(read_results_csv(spark, out))
+    shifted = add_report_text(
+        prepared.withColumn("MAPE", F.lit(15.0)), band_lo=20, band_hi=60
+    )
+    doc20 = render_report(shifted, generated_at="2026-08-14 00:00:00")
+    assert doc20.count("Las predicciones son muy fiables.") == n
+    assert doc20.count("(MAPE: 15.00%)") == n
+    assert doc20.count("[green]") == n
+    assert "Requiere monitorizacion." not in doc20

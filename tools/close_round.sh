@@ -1,8 +1,9 @@
 #!/bin/bash
 # Round-close evidence runner (r7 verdict #2: artifact commits must be
 # scripted, not remembered). Runs the four selfcheck sweeps, the bench,
-# the scale curve and the plan dump, then stages every artifact so the
-# closing `git status` is clean the moment the round ends.
+# the scale curve and the plan audit (which also writes PLANS.md), then
+# stages every artifact so the closing `git status` is clean the moment
+# the round ends.
 #
 #   bash tools/close_round.sh [round_tag]
 #
@@ -31,10 +32,7 @@ echo "== scale curve =="
 python tools/make_scale10.py /root/testdata/sf0.1 10
 python bench.py --scale-curve "BENCH_scale_${TAG}.json"
 
-echo "== plan dump =="
-python tools/explain_plans.py
-
-echo "== plan audit (r11 verdict #6: docstring-vs-plan, CI-style) =="
+echo "== plan audit + PLANS.md (r11 verdict #6: docstring-vs-plan, CI-style) =="
 python tools/plan_audit.py
 
 echo "== certificate-age dashboard (r11 verdict #8) =="

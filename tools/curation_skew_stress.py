@@ -25,7 +25,6 @@ import json
 import os
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -35,6 +34,7 @@ from dataframe_retail_e_inventarios_spark.registry import oracle_sql, queries
 from dataframe_retail_e_inventarios_spark.session import get_spark
 from dataframe_retail_e_inventarios_spark.sources.readers import load_table
 from dataframe_retail_e_inventarios_spark.testing import compare_query
+from tools.harness import best_of
 
 MEGA_TEXT = (
     "this boilerplate disclaimer text is repeated verbatim across the "
@@ -87,13 +87,7 @@ def main() -> int:
     fn = queries()["llm_curation_pipeline"]
     out = {"metric": "curation_skew_stress", "k": k}
     for label, d in (("uniform", uniform), ("skewed", skewed)):
-        best = None
-        rows = None
-        for _ in range(2):
-            t0 = time.time()
-            rows = fn(spark, d).count()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
+        best, rows = best_of(lambda: fn(spark, d).count(), 2)
         out[label] = {"wall_sec": round(best, 2), "rows": rows}
         print(f"[{label}] {rows} rows in {out[label]['wall_sec']}s")
 

@@ -2,82 +2,43 @@
 named registered queries.
 
 Usage:
-    python tools/opt_probe.py [--sf SF_DIR] [--runs N] [--explain DIR]
-                              [--suffix TAG] name [name ...]
+    python tools/opt_probe.py [--sf SF_DIR] [--runs N] name [name ...]
 
-For each query: warm JVM once, then run count() N times (min reported).
-With the UI enabled (always, on an ephemeral port) the per-stage
-wall/task metrics for the LAST run are pulled from the local REST API
-(/api/v1) so the slow stage — scan, exchange, python eval — is
-attributable without guesswork (guide §1.1/§7.1). With --explain DIR,
-the formatted plan is written to DIR/<name>_<suffix>.txt.
+For each query: warm the JVM once, then run count() N times (min
+reported). Each run carries its own Spark job group, and the per-stage
+tasks, task time, shuffle read/write and input bytes of the LAST run are
+read from the live status store (tools/harness.job_stages), so the slow
+stage — scan, exchange, python eval — is attributable without guesswork
+(guide §1.1/§7.1). The session is ``session.get_spark``, the one tests
+and bench use. For the formatted plan, use tools/dump_plans.py.
 """
 
 from __future__ import annotations
 
+import gc
+import itertools
 import json
 import os
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dataframe_retail_e_inventarios_spark.registry import queries
+from dataframe_retail_e_inventarios_spark.session import get_spark
+from tools.harness import best_of, job_stages
 
 
-def get_probe_spark():
-    """session.get_spark but with the UI on so /api/v1 is queryable."""
-    import os as _os
-
-    from pyspark.sql import SparkSession
-
-    cpus = int(_os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (_os.cpu_count() or 4)
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("opt-probe")
-        .config("spark.sql.shuffle.partitions", str(max(4, cpus)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4047")
-        .config("spark.port.maxRetries", "32")
-        .getOrCreate()
-    )
-
-
-def _api(spark, path: str):
-    ui = spark.sparkContext.uiWebUrl
-    with urllib.request.urlopen(f"{ui}/api/v1/{path}", timeout=10) as r:
-        return json.loads(r.read())
-
-
-def stage_report(spark, app_id: str, after_job: int) -> list[str]:
-    jobs = [j for j in _api(spark, f"applications/{app_id}/jobs") if j["jobId"] >= after_job]
+def stage_report(spark, group: str) -> list[str]:
     out = []
-    stages = {s["stageId"]: s for s in _api(spark, f"applications/{app_id}/stages?status=complete")}
-    for j in sorted(jobs, key=lambda x: x["jobId"]):
-        out.append(
-            f"  job {j['jobId']:>3} [{j.get('description') or j['name'][:60]}]"
-        )
-        for sid in sorted(j["stageIds"]):
-            s = stages.get(sid)
-            if not s:
-                continue
-            dur = (s.get("executorRunTime") or 0) / 1000.0
-            sub = s.get("submissionTime", "")
-            name = s["name"].split("\n")[0][:70]
+    for job, stages in job_stages(spark, group):
+        out.append(f"  job {job.job_id:>3} [{job.name[:60]}]")
+        for s in stages:
             out.append(
-                f"    stage {sid:>4} tasks={s['numCompleteTasks']:>3}"
-                f" taskTime={dur:7.2f}s"
-                f" shufR={s.get('shuffleReadBytes', 0)>>10}K"
-                f" shufW={s.get('shuffleWriteBytes', 0)>>10}K"
-                f" in={s.get('inputBytes', 0)>>10}K  {name}"
+                f"    stage {s['stage']:>4} tasks={s['tasks']:>3}"
+                f" taskTime={s['task_s']:7.2f}s"
+                f" shufR={s['shuffle_read'] >> 10}K"
+                f" shufW={s['shuffle_write'] >> 10}K"
+                f" in={s['input'] >> 10}K  {s['name'][:70]}"
             )
     return out
 
@@ -86,8 +47,6 @@ def main() -> None:
     argv = sys.argv[1:]
     sf_dir = "/root/testdata/sf0.1"
     runs = 3
-    explain_dir = None
-    suffix = "probe"
     names: list[str] = []
     i = 0
     while i < len(argv):
@@ -96,50 +55,31 @@ def main() -> None:
             sf_dir = argv[i + 1]; i += 2
         elif a == "--runs":
             runs = int(argv[i + 1]); i += 2
-        elif a == "--explain":
-            explain_dir = argv[i + 1]; i += 2
-        elif a == "--suffix":
-            suffix = argv[i + 1]; i += 2
         else:
             names.append(a); i += 1
-    spark = get_probe_spark()
+    spark = get_spark("opt-probe")
+    sc = spark.sparkContext
     qs = queries()
     qs["flagship_inventory"](spark, "/root/testdata/sf0.001").count()  # warm
-    app_id = spark.sparkContext.applicationId
-    import gc
 
     results = {}
     for name in names:
         fn = qs[name]
-        best = None
-        times = []
-        for r in range(runs):
-            gc.collect()
-            jobs_before = max(
-                (j["jobId"] for j in _api(spark, f"applications/{app_id}/jobs")), default=-1
-            ) + 1
-            spark.sparkContext.setJobDescription(f"{name} run{r}")
-            t0 = time.time()
+        run_ids = itertools.count()
+
+        def run():
+            group = f"{name} run{next(run_ids)}"
+            sc.setLocalProperty("spark.jobGroup.id", group)
             fn(spark, sf_dir).count()
-            dt = time.time() - t0
-            times.append(round(dt, 3))
-            best = dt if best is None else min(best, dt)
-        spark.sparkContext.setJobDescription(None)
+            return group
+
+        gc.collect()
+        best, last_group = best_of(run, runs)
+        sc.setLocalProperty("spark.jobGroup.id", None)
         results[name] = round(best, 3)
-        print(f"\n=== {name}: min {best:.3f}s  runs {times}")
-        try:
-            for line in stage_report(spark, app_id, jobs_before):
-                print(line)
-        except Exception as e:  # pragma: no cover
-            print(f"  (stage report unavailable: {e})")
-        if explain_dir:
-            os.makedirs(explain_dir, exist_ok=True)
-            df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-            )
-            with open(os.path.join(explain_dir, f"{name}_{suffix}.txt"), "w") as f:
-                f.write(plan)
+        print(f"\n=== {name}: min {best:.3f}s of {runs} runs")
+        for line in stage_report(spark, last_group):
+            print(line)
     print("\n" + json.dumps(results))
 
 

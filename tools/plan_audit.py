@@ -4,9 +4,14 @@ The manual checklist step that caught the r9 Q21 shuffle overclaim and
 the r10 vacuous plan test, scripted: a declarative claims table maps
 query names to plan-shape assertions lifted from their docstrings
 (no-Expand, broadcast join present, TakeOrderedAndProject top-k,
-bounded hash-shuffle count), each query's physical plan is built live
-(same formatted explain as tools/explain_plans.py), and any mismatch
-is a nonzero exit. Run by close_round.sh every round.
+bounded hash-shuffle count), each query's formatted physical plan is
+built live (tools/harness.formatted_plan), and any mismatch is a
+nonzero exit. Run by close_round.sh every round.
+
+The headline plans it builds are also written to PLANS.md, in HEADLINE
+order — the artifact for reviewing scan pruning (ReadSchema/
+PushedFilters), join strategies, exchange counts and codegen coverage
+without re-running anything.
 
 Two layers:
 - GLOBAL invariants over every headline query: no CartesianProduct
@@ -32,6 +37,7 @@ sys.path.insert(0, ".")
 from bench import HEADLINE
 from dataframe_retail_e_inventarios_spark.registry import queries
 from dataframe_retail_e_inventarios_spark.session import get_spark
+from tools.harness import formatted_plan
 
 # Queries whose plans legitimately contain a cartesian/broadcast-nested
 # -loop product: broadcast 1-row aggregates (the repo-standard scalar
@@ -140,6 +146,18 @@ def hash_exchange_count(plan: str) -> int:
     return n
 
 
+def write_plans_md(plans: dict[str, str], sf_dir: str) -> None:
+    out = ["# PLANS — formatted physical plans of the headline queries\n"]
+    out.append(f"Generated against `{sf_dir}` (plan shape is sf-independent).\n")
+    for name in HEADLINE:
+        plan = plans[name]
+        out.append(f"\n## {name}  (exchange mentions: {plan.count('Exchange')})\n")
+        out.append("```\n" + plan.strip() + "\n```\n")
+    with open("PLANS.md", "w") as f:
+        f.write("".join(out))
+    print(f"wrote PLANS.md ({len(HEADLINE)} queries)")
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("plan_audit")
@@ -151,14 +169,13 @@ def main() -> int:
         return 2
 
     failures: list[str] = []
+    headline_plans: dict[str, str] = {}
     audit_names = sorted(set(CLAIMS) | set(HEADLINE))
     for name in audit_names:
-        df = qs[name](spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
+        plan = formatted_plan(spark, qs[name](spark, sf_dir))
         # global invariants (headline set = the hot paths)
         if name in HEADLINE:
+            headline_plans[name] = plan
             if "CartesianProduct" in plan and name not in CARTESIAN_ALLOWED:
                 failures.append(f"{name}: CartesianProduct in a headline plan")
             if "BatchEvalPython" in plan:
@@ -179,6 +196,7 @@ def main() -> int:
         print(f"[{status:4}] {name} ({n_claims} claims, "
               f"{hash_exchange_count(plan)} hash-exchanges)")
 
+    write_plans_md(headline_plans, sf_dir)
     if failures:
         print(f"\nPLAN AUDIT FAILED ({len(failures)}):")
         for f in failures:

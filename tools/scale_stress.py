@@ -19,7 +19,6 @@ import json
 import os
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -28,6 +27,7 @@ import pyspark.sql.functions as F
 from dataframe_retail_e_inventarios_spark.registry import queries
 from dataframe_retail_e_inventarios_spark.session import get_spark
 from dataframe_retail_e_inventarios_spark.sources.readers import load_table
+from tools.harness import best_of
 
 STRESS_QUERIES = [
     # (query, table it stresses)
@@ -182,12 +182,7 @@ def time_query(qs, name: str, sf_dir: str, runs: int = 2) -> float:
     variance of a ~5 s query on a busy box; the stress RATIO is the
     evidence, so both legs get the same min-of-2 the bench's light
     group uses)."""
-    best = None
-    for _ in range(runs):
-        t0 = time.time()
-        qs[name](SPARK, sf_dir).count()
-        dt = time.time() - t0
-        best = dt if best is None else min(best, dt)
+    best, _ = best_of(lambda: qs[name](SPARK, sf_dir).count(), runs)
     return round(best, 2)
 
 
