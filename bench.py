@@ -2,11 +2,15 @@
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 Prints two JSON lines: the full record (also written to BENCH_full.json)
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+   "cpus": ..., "spark_version": ..., "shuffle_partitions": ...}
 and, last, a compact summary that points at BENCH_full.json.
 
 Each query is forced to full materialization with a count() over the
 final plan (no toPandas — we measure engine time, not Arrow transfer).
+Every number is measured in this run, on this box; the record says which
+box (cpus, Spark version, shuffle partitions) and compares against no
+earlier artifact.
 """
 
 from __future__ import annotations
@@ -14,7 +18,6 @@ from __future__ import annotations
 import gc
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -485,44 +488,6 @@ def _load_avg() -> list[float]:
         return []
 
 
-def _prev_timings() -> dict[str, float]:
-    """Per-query seconds from the previous round's COMMITTED
-    BENCH_full.json (headline + light merged) — the baseline for the
-    >=1.5x-mover auto-retime.
-
-    Read from git HEAD, not the working tree (r11 verdict #2 root
-    cause): bench runs several times per round (close_round, then the
-    driver), each overwriting the on-disk file, so a disk read compares
-    against hour-old same-round numbers and a query that regressed
-    vs the PRIOR round's committed artifact — the comparison the judge
-    actually makes — can escape the retime (dedup_simhash_pairs, r11).
-    HEAD's copy only changes when a round commits it, which is exactly
-    the cross-round baseline semantics the trigger needs."""
-    root = os.path.dirname(os.path.abspath(__file__))
-    raw = None
-    try:
-        raw = subprocess.run(
-            ["git", "-C", root, "show", "HEAD:BENCH_full.json"],
-            capture_output=True, text=True, timeout=30,
-        ).stdout or None
-    except (OSError, subprocess.SubprocessError):
-        raw = None
-    if raw is None:
-        try:
-            with open(os.path.join(root, "BENCH_full.json")) as f:
-                raw = f.read()
-        except OSError:
-            return {}
-    try:
-        prev = json.loads(raw)
-    except ValueError:
-        return {}
-    merged: dict[str, float] = {}
-    merged.update(prev.get("queries", {}))
-    merged.update(prev.get("light_queries", {}))
-    return merged
-
-
 def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "--scale-curve":
         scale_curve(*sys.argv[2:3])
@@ -545,7 +510,6 @@ def main() -> None:
         load_waited += 30
         load_before = _load_avg()
     load_warning = bool(load_before) and load_before[0] > LOAD_GATE
-    prev = _prev_timings()
     spark = get_spark("bench")
     qs = queries()
     # Warm the JVM once (codegen compilation, parquet reader init) with
@@ -590,46 +554,6 @@ def main() -> None:
         light_timings[name] = round(best, 3)
         gc.collect()
 
-    # (r9 verdict #1c) Auto-retime movers: any timed query whose
-    # in-suite best moved >1.5x vs the previous committed artifact gets
-    # a fresh min-of-3 re-measurement HERE, after the suite has drained
-    # (no concurrent queries, JVM fully warm, caches cleared) — the
-    # same isolation methodology the judge used manually in r9. Both
-    # numbers land in the artifact so any residual delta is
-    # attributable to code, not the rig.
-    retimes: dict[str, dict[str, float]] = {}
-    suite_now = dict(timings)
-    suite_now.update(light_timings)
-    movers = [
-        n
-        for n, t in suite_now.items()
-        if n in prev
-        and prev[n] > 0.1
-        and t > 0.1
-        # both directions (r10 review): an apparent 3x WIN can be the
-        # previous artifact's own interference; speedup claims deserve
-        # the same isolated re-measurement as regressions. Inclusive
-        # >= (r11 verdict #2): 1.50-exactly must not escape.
-        and (t / prev[n] >= 1.5 or prev[n] / t >= 1.5)
-    ]
-    spark.catalog.clearCache()
-    gc.collect()
-    for name in movers:
-        best, _ = best_of(lambda: qs[name](spark, sf_dir).count(), 3)
-        retimes[name] = {
-            "in_suite": suite_now[name],
-            "prev": prev[name],
-            "isolated": round(best, 3),
-        }
-        gc.collect()
-        # r10 ADVICE: do NOT fold the isolated minimum back into the
-        # reported per-query maps — that mixed in-suite and isolated
-        # methodologies per query across rounds. The headline/light
-        # numbers stay pure in-suite; the isolated re-measurement
-        # lives only here, as the attribution evidence for whether a
-        # mover is code or rig. With the load gate above, in-suite is
-        # now measured on an idle box by default.
-
     load_after = _load_avg()
     total = round(sum(timings.values()), 3)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
@@ -642,12 +566,8 @@ def main() -> None:
         "metric": "headline_suite_wall_sec",
         "value": total,
         "unit": "sec",
-        # r11 verdict #3: self-describing methodology tag so cross-round
-        # wall comparisons don't re-litigate the r10->r11 change.
-        # "in-suite-v2" = headline/light numbers are pure in-suite
-        # (retimes recorded separately, never folded back in), baseline
-        # for the retime trigger is HEAD's committed BENCH_full.json.
-        "methodology": "in-suite-v2",
+        # "in-suite-v3" = in-suite numbers only, no cross-commit retime.
+        "methodology": "in-suite-v3",
         "queries": timings,
         "demo_queries": demo_timings,  # excluded from value/n_queries
         "light_queries": light_timings,  # excluded from value/n_queries
@@ -658,7 +578,10 @@ def main() -> None:
         "load_gate": LOAD_GATE,
         "load_gate_waited_s": load_waited,
         "load_warning": load_warning,
-        "retimes": retimes,  # >1.5x movers vs prev artifact, isolated min-of-3
+        # which box ran it: numbers from another box do not carry over
+        "cpus": spark.sparkContext.defaultParallelism,
+        "spark_version": spark.version,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
     }
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_full.json"), "w") as f:
         json.dump(full, f, indent=1)
@@ -670,12 +593,11 @@ def main() -> None:
                 "metric": "headline_suite_wall_sec",
                 "value": total,
                 "unit": "sec",
-                "methodology": "in-suite-v2",
+                "methodology": "in-suite-v3",
                 "sf": sf_val,
                 "n_queries": len(timings),
                 "n_light": len(light_timings),
                 "n_demo": len(demo_timings),
-                "n_retimed": len(retimes),
                 "load_warning": load_warning,
                 "slowest5": slowest,
                 "queries_file": "BENCH_full.json",

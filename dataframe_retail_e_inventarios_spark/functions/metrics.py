@@ -48,16 +48,3 @@ def mae(actual: Column | str, pred: Column | str) -> Column:
     t, p = _c(actual), _c(pred)
     return F.avg(F.abs(t - p))
 
-
-# DuckDB oracle fragments for the same metrics ({t}/{p} are column refs).
-MAPE_SQL = (
-    "coalesce(avg(CASE WHEN {t} != 0 THEN abs(({t} - {p}) / {t}) END) * 100, "
-    "avg(abs({t} - {p})))"
-)
-SMAPE_SQL = (
-    "coalesce(avg(CASE WHEN abs({t}) + abs({p}) != 0 "
-    "THEN 2.0 * abs({p} - {t}) / (abs({t}) + abs({p})) END) * 100, "
-    "avg(abs({t} - {p})))"
-)
-RMSE_SQL = "sqrt(avg(pow({t} - {p}, 2)))"
-MAE_SQL = "avg(abs({t} - {p}))"

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
-from pyspark.sql.types import TimestampNTZType, TimestampType
+from pyspark.sql.types import TimestampType
 
 
 def _c(c: Column | str) -> Column:
@@ -76,7 +76,3 @@ def to_wall_ntz(df: DataFrame) -> DataFrame:
     for name in instant_cols:
         df = df.withColumn(name, wall_ntz_from_micros(F.unix_micros(F.col(name))))
     return df
-
-
-def is_wall_ntz(df: DataFrame, col: str) -> bool:
-    return isinstance(df.schema[col].dataType, TimestampNTZType)

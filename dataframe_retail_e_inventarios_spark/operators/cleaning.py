@@ -14,11 +14,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 
-def rename_columns(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:
-    """Strict rename [P1: PRACTICA3.py:186-190]."""
-    return df.withColumnsRenamed(dict(mapping))
-
-
 def rename_if_present(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:
     """Rename with ``errors='ignore'`` semantics [P2: generador.py:34-38]."""
     present = set(df.columns)
@@ -28,11 +23,6 @@ def rename_if_present(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:
 def coerce_numeric(df: DataFrame, *cols: str, to: str = "double") -> DataFrame:
     """Numeric coercion, null on error [P3: PRACTICA3.py:193]."""
     return df.withColumns({c: F.col(c).try_cast(to) for c in cols if c in df.columns})
-
-
-def fill_null(df: DataFrame, values: Mapping[str, object]) -> DataFrame:
-    """Constant null-fill [P4: PRACTICA3.py:193, generador.py:46]."""
-    return df.na.fill(dict(values))
 
 
 def add_column_if_missing(df: DataFrame, name: str, default: object) -> DataFrame:

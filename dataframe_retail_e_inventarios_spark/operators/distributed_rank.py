@@ -111,15 +111,13 @@ def with_ntile(
     order_exprs: list[Column],
     out_col: str,
     n_parts: int | None = None,
-    materialize: bool = False,
 ) -> DataFrame:
     """Append ``out_col`` = ntile(n_tiles) over the global order —
     SQL-standard semantics (bucket sizes differ by at most one, larger
     buckets first), without the single-partition sort ``F.ntile`` over
     an unpartitioned window requires."""
     ranked = with_global_rank(
-        df, order_exprs, rank_col="_dr_rank", total_col="_dr_n", n_parts=n_parts,
-        materialize=materialize,
+        df, order_exprs, rank_col="_dr_rank", total_col="_dr_n", n_parts=n_parts
     )
     # q == 0 is unreachable inside _ntile_from_rank's otherwise-branch:
     # rank > cut == n implies no row

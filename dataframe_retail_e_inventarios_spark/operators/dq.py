@@ -25,9 +25,6 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-_SCHEMA_COLS = ["constraint", "n_checked", "n_violations", "ok"]
-
-
 def _finish(df: DataFrame) -> DataFrame:
     return df.select(
         "constraint",

@@ -20,10 +20,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-# Partial-state columns every rollup carries. All associative:
-# merge(a, b) is column-wise (sum, sum, min, max).
-_STATE = ("n_rows", "sum_qty", "min_qty", "max_qty")
-
 
 def rollup_partials(fact: DataFrame, keys: tuple[str, ...], qty_col: str) -> DataFrame:
     """Aggregate a fact slice into per-key partial states."""

@@ -1,35 +1,15 @@
-"""Join family [SURVEY §2.3].
+"""The reference's forecast-to-actuals alignment join [SURVEY §2.3 J1].
 
 The reference's only joins are implicit index alignments
-(limpieza_de_datos.py:42-43, generador.py:67-69); the engine ships the
-full equi-join family over the driver's star schema because any real
-deployment of this pipeline joins facts to dimensions.
-
-Scale posture: dimension tables (region/nation/supplier/part at
-TPC-H-ish ratios) get explicit ``broadcast()`` hints — a broadcast-hash
-join with zero shuffle of the fact side. AQE converts the rest to
-broadcast at runtime when a post-filter side shrinks below the
-threshold.
+(limpieza_de_datos.py:42-43, generador.py:67-69). The rest of the
+equi-join family over the driver's star schema lives in the query
+modules (e.g. ``queries_relational.q_star_join_revenue``, broadcast
+dimensions).
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-
-
-def join_fact_to_dims(
-    fact: DataFrame, dims: dict[str, tuple[DataFrame, list[str] | str]], how: str = "inner"
-) -> DataFrame:
-    """Join a fact to several (broadcast) dimension tables.
-
-    ``dims`` maps name -> (dim_df, join_on). Dimensions are broadcast:
-    at 100 TB the fact never shuffles for these joins.
-    """
-    out = fact
-    for _, (dim, on) in dims.items():
-        out = out.join(F.broadcast(dim), on=on, how=how)
-    return out
 
 
 def align_forecast_to_actuals(

@@ -86,7 +86,6 @@ def bm25_scores(
     id_col: str = "doc_id",
     k1: float = K1,
     b: float = B,
-    materialize: bool = True,
 ) -> DataFrame:
     """Per-(doc, term) BM25 score: ``idf(term) * saturation(tf, dl)``.
 
@@ -95,14 +94,12 @@ def bm25_scores(
 
     The tf frame feeds four consumers (dl, df, corpus stats, the final
     join); without materialization Spark re-runs the tokenize+explode+
-    aggregate pipeline once PER consumer — four full corpus scans.
-    ``materialize`` localCheckpoints tf once (same trade as the dedup
-    shingle index, operators/dedup.doc_shingles): ephemeral lineage
-    truncation so every branch reads the narrow (id, term, tf) rows.
+    aggregate pipeline once PER consumer — four full corpus scans. So
+    tf is localCheckpointed once (same trade as the dedup shingle index,
+    operators/dedup.doc_shingles): ephemeral lineage truncation so every
+    branch reads the narrow (id, term, tf) rows.
     """
-    tf = term_frequencies(docs, text_col, id_col)
-    if materialize:
-        tf = tf.localCheckpoint(eager=True)
+    tf = term_frequencies(docs, text_col, id_col).localCheckpoint(eager=True)
     dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
     stats = dl.agg(

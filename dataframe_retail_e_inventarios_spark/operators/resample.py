@@ -65,12 +65,6 @@ def week_ending_sunday(ts: Column | str, is_instant: bool = False) -> Column:
     return F.date_add(d, (F.lit(8) - F.dayofweek(d)) % 7)
 
 
-# DuckDB-equivalent expression for the same label (isodow: 1=Mon..7=Sun).
-WEEK_ENDING_SUNDAY_SQL = (
-    "CAST({ts} AS DATE) + CAST((7 - isodow(CAST({ts} AS DATE))) % 7 AS INTEGER)"
-)
-
-
 def weekly_resample_sum(
     df: DataFrame,
     keys: Sequence[str],

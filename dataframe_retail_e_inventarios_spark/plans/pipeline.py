@@ -26,6 +26,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions.inventory import inventory_columns
+from ..operators.cleaning import clean_sales
 from ..operators.resample import weekly_dense_resample
 from ..schemas import FORECAST_RESULTS_CSV_SCHEMA, VENTAS_SCHEMA
 from ..sources.readers import read_csv
@@ -34,17 +35,15 @@ from .flagship import HORIZON, KEYS, MIN_TOTAL_SALES, MIN_WEEKS
 
 
 def load_ventas(spark: SparkSession, path: str) -> DataFrame:
-    """S1 + the PRACTICA3 cleaning block over a real ventas.csv
-    (PRACTICA3.py:183-194)."""
+    """S1 + the PRACTICA3 cleaning block (``cleaning.clean_sales``) over
+    a real ventas.csv (PRACTICA3.py:183-194)."""
     raw = read_csv(spark, path, VENTAS_SCHEMA)
-    return (
-        raw.select(
-            F.col("InvoiceDate").alias("invoice_date"),
-            F.col("StockCode").alias("product_id"),
-            F.col("Country").alias("store_id"),
-            F.coalesce(F.col("Quantity").try_cast("double"), F.lit(0.0)).alias("units_sold"),
-        )
-        .filter(F.col("units_sold") >= 0)
+    return clean_sales(
+        raw,
+        product_col="StockCode",
+        store_col="Country",
+        date_col="InvoiceDate",
+        qty_col="Quantity",
     )
 
 

@@ -181,7 +181,6 @@ HAVING count(*) >= 2
 # estimator is deterministic (fixed hash, mergeable registers), so the
 # in-band boolean is partition- and run-invariant.
 ADC_RSD = 0.02
-ADC_BAND = 5 * ADC_RSD
 
 
 def q_approx_distinct(

@@ -135,7 +135,7 @@ FROM events GROUP BY 1, 2
 
 
 # -- Grouping sets (beyond rollup) ----------------------------------------
-def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_grouping_sets_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     li.createOrReplaceTempView("_li_gs")
     return spark.sql("""
@@ -148,7 +148,7 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 register(
     "grouping_sets_summary",
-    q_grouping_sets,
+    q_grouping_sets_summary,
     """
 SELECT l_returnflag, l_linestatus, count(*) AS n,
        round(sum(l_quantity), 2) AS qty

@@ -1006,7 +1006,6 @@ register("profile_lineitem_columns", q_profile_lineitem, _profile_oracle())
 
 
 _PROFILE_RSD = 0.05
-_PROFILE_BAND = 5 * _PROFILE_RSD  # 5 sigma of the configured HLL rsd
 
 
 def q_profile_lineitem_approx(
@@ -1315,7 +1314,6 @@ ORDER BY record_id
 
 # -- PQ-ADC ANN (compressed-domain shortlist + exact re-rank) --------------
 _ANN_K = 10
-_ANN_FLOOR = 9  # >= 9 of 10 planted neighbors retrieved
 
 
 def q_ann_pq_topk(

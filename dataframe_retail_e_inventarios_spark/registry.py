@@ -3,7 +3,9 @@
 Each entry pairs a Spark callable ``(spark, sf_dir) -> DataFrame`` with
 a DuckDB oracle SQL string (or None for genuinely non-SQL-expressible
 ops, which the driver checks rows-only). ``__spark_entry__.py`` is a
-thin adapter over this module.
+thin adapter over this module. ``queries()`` and ``oracle_sql()`` return
+the entries in registration order; ``tools/selfcheck.py`` checks every
+one, so no consumer depends on that order.
 """
 
 from __future__ import annotations
@@ -26,108 +28,16 @@ def register(name: str, fn: QueryFn, oracle: str | None) -> None:
         _ORACLES[name] = oracle
 
 
-# The correctness driver samples the FIRST 50 registry entries
-# (verified round 2: CORRECTNESS_r02's keys == the first 50 names in
-# registration order). Iteration order is therefore a verification
-# budget, and this list spends it deterministically. Everything NOT
-# listed still follows, in registration order, and tools/matrix.py
-# sweeps the full registry every round regardless (MATRIX_r{N}.json).
-_PRIORITY = [
-    # r13 rotation (continuing the r11-verdict cert-rotation policy):
-    # the driver's 50-row budget goes to the STALEST certificates,
-    # measured by tools/cert_age.py over artifacts/r*/CORRECTNESS* +
-    # the current round's file (vintage table at r13-open: r6=17,
-    # r7=49, r8=50, r9=1, r10=48, r11=50, r12=50; never-sampled=0).
-    # Budget = the full r6 remainder (17) + the r7 vintage
-    # alphabetically (33); the r7 remainder rides along for the r14
-    # rotation. tools/matrix.py still sweeps all 265 every round
-    # regardless.
-    # r6-vintage remainder (last driver certificate: round 6):
-    "reciprocal_rank_fusion",
-    "rfm_segmentation",
-    "roc_auc_langid",
-    "rolling_median_demand",
-    "rollup_backfill_empty_restatement",
-    "semantic_dedup_signature",
-    "silhouette_lite_labels",
-    "sparse_cosine_topk",
-    "spearman_qty_discount",
-    "sql_pipe_pricing_summary",
-    "streaming_late_data_watermark",
-    "time_decay_attribution",
-    "token_cooccurrence_pmi",
-    "tokenizer_fertility",
-    "video_frame_schedule",
-    "vocab_coverage_curve",
-    "welch_ttest_price_segments",
-    # r7-vintage (last driver certificate: round 7), alphabetical:
-    "ann_cosine_topk",
-    "ann_ivf_topk",
-    "anti_join_no_orders",
-    "asof_join_latest_order",
-    "association_rules",
-    "brand_size_band_revenue",
-    "cohens_kappa_langid",
-    "content_fingerprint_by_month",
-    "cube_sales_summary",
-    "custdist_order_counts",
-    "dedup_exact",
-    "dedup_minhash_signatures",
-    "dedup_ngram_jaccard",
-    "dedup_simhash_pairs",
-    "demand_sigma_pop",
-    "distinct_counts_per_supplier",
-    "dsir_importance_selection",
-    "embedding_cosine_neardup",
-    "embedding_cosine_neardup_bucketed",
-    "ensemble_median",
-    "entity_clusters_fuzzy",
-    "events_cohort_retention",
-    "events_hourly_counts",
-    "events_props_json",
-    "exact_substring_overlap",
-    "forecasted_discount_revenue",
-    "global_sales_opportunity",
-    "grouping_sets_summary",
-    "histogram_quantile_sketch",
-    "large_volume_customers",
-    "lsh_band_recall_audit",
-    "pivot_qty_by_returnflag",
-    "pr_curve_quality",
-    # r7 remainder (positions 51+; ride along for r14):
-    "promo_revenue_share",
-    "range_join_holiday_seasons",
-    "returned_item_losses",
-    "semdedup_keep_decision",
-    "skew_hot_key_revenue_plain",
-    "skew_hot_key_revenue_salted",
-    "skew_salted_brand_revenue",
-    "small_quantity_avg_yearly",
-    "source_jsd_matrix",
-    "star_join_revenue",
-    "token_budget_selection",
-    "tpch_pricing_summary",
-    "volume_shipping_nation_pairs",
-    "winnow_fingerprint_pairs",
-    "zipf_slope",
-    "zipf_vocab_topk",
-]
-
-
-def _ordered(mapping: dict) -> dict:
-    first = {n: mapping[n] for n in _PRIORITY if n in mapping}
-    rest = {n: v for n, v in mapping.items() if n not in first}
-    return {**first, **rest}
-
-
 def queries() -> dict[str, QueryFn]:
+    """Every registered query, in registration order (a copy)."""
     _load_all()
-    return _ordered(_QUERIES)
+    return dict(_QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
+    """Every registered oracle, in registration order (a copy)."""
     _load_all()
-    return _ordered(_ORACLES)
+    return dict(_ORACLES)
 
 
 _LOADED = False

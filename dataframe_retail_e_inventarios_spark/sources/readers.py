@@ -64,13 +64,6 @@ def read_text(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.text(path)
 
 
-def require_path(path: str) -> str:
-    """Existence guard on a source [S5: generador.py:25-28]."""
-    if not os.path.exists(path):
-        raise FileNotFoundError(f"input path does not exist: {path}")
-    return path
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver testdata table (TESTDATA.md).
 
@@ -114,7 +107,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         return to_wall_ntz(df)
     return to_wall_ntz(spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")))
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TESTDATA_TABLES)}

@@ -13,15 +13,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType
 
 
-def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    w = df.write.mode("overwrite")
-    if partition_by:
-        # At 100 TB, facts partitioned by a coarse time bucket get
-        # partition-pruned on date predicates (SURVEY §4.2).
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
 def stringify_arrays(df: DataFrame) -> DataFrame:
     """Render array<numeric> columns as "[a, b, c]" strings.
 

@@ -1,8 +1,7 @@
-"""Driver-contract guards: the names bench.py and the registry
-priority list reference must exist, and __spark_entry__ must export
-the three driver hooks with consistent key sets. A typo in any of
-these lists would crash the DRIVER's run, not ours — fail here
-instead."""
+"""Driver-contract guards: the names bench.py references must exist,
+and __spark_entry__ must export the three driver hooks with consistent
+key sets. A typo in any of these lists would crash the DRIVER's run,
+not ours — fail here instead."""
 
 import sys
 from pathlib import Path
@@ -11,7 +10,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entrymod
 from bench import CURVE, DEMO, HEADLINE
-from dataframe_retail_e_inventarios_spark.registry import _PRIORITY, oracle_sql, queries
+from dataframe_retail_e_inventarios_spark.registry import oracle_sql, queries
 
 
 def test_bench_names_exist():
@@ -21,15 +20,6 @@ def test_bench_names_exist():
     # CURVE may draw from HEADLINE or DEMO (the scale-curve runner
     # resolves names against the full registry); anything else is a typo
     assert set(CURVE) <= set(HEADLINE) | set(DEMO)
-
-
-def test_priority_names_exist():
-    qs = queries()
-    missing = [n for n in _PRIORITY if n not in qs]
-    assert not missing, f"registry._PRIORITY references unknown queries: {missing}"
-    # priority must stay unique (duplicates would silently shrink the
-    # driver's 50-row sample)
-    assert len(_PRIORITY) == len(set(_PRIORITY))
 
 
 def test_entry_exports():

@@ -1,5 +1,5 @@
-"""tools/harness.py: the shared min-of-N timer and the status-store stage
-reader that bench.py and tools/ use."""
+"""tools/harness.py: the shared min-of-N timer, the formatted-plan builder
+and the status-store stage reader that bench.py and tools/ use."""
 
 from types import SimpleNamespace
 
@@ -8,7 +8,7 @@ import pytest
 from dataframe_retail_e_inventarios_spark.registry import queries
 from tests.conftest import SF_SMOKE
 from tools import harness
-from tools.harness import best_of, job_stages
+from tools.harness import best_of, formatted_plan, job_stages
 
 
 def test_best_of_runs_fn_exactly_runs_times_and_returns_min(monkeypatch):
@@ -36,3 +36,13 @@ def test_job_stages_reads_status_store_with_ui_off(spark):
     stages = [s for _, per_job in report for s in per_job]
     assert stages
     assert any(s["task_s"] > 0 and s["tasks"] > 0 for s in stages)
+
+
+def test_formatted_plan_is_the_same_for_the_same_plan(spark):
+    # Built, not executed: explainString plans the query without running it.
+    build = queries()["flagship_inventory"]
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    first, second = build(spark, SF_SMOKE), build(spark, SF_SMOKE)
+    raw = [df._jdf.queryExecution().explainString(mode) for df in (first, second)]
+    assert raw[0] != raw[1]
+    assert formatted_plan(spark, first) == formatted_plan(spark, second)

@@ -274,3 +274,13 @@ def test_rendered_report_document(spark, ventas_csv, reference_results, tmp_path
     assert doc20.count("(MAPE: 15.00%)") == n
     assert doc20.count("[green]") == n
     assert "Requiere monitorizacion." not in doc20
+
+
+def test_missing_input_path_raises_path_not_found(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    missing = str(tmp_path / "absent.csv")
+    for read in (load_ventas, read_results_csv):
+        with pytest.raises(AnalysisException) as err:
+            read(spark, missing)
+        assert err.value.getCondition() == "PATH_NOT_FOUND"

@@ -35,13 +35,10 @@ python bench.py --scale-curve "BENCH_scale_${TAG}.json"
 echo "== plan audit + PLANS.md (r11 verdict #6: docstring-vs-plan, CI-style) =="
 python tools/plan_audit.py
 
-echo "== certificate-age dashboard (r11 verdict #8) =="
-python tools/cert_age.py > CERT_AGE.md
-
 # One add per path — a multi-path `git add` is all-or-nothing on a
 # pathspec failure (one absent file would silently stage nothing).
 for f in "MATRIX_${TAG}.json" "FUZZ_${TAG}.json" "FUZZ_${TAG}_tz.json" \
-         "FUZZ_${TAG}_ansi.json" BENCH_full.json CERT_AGE.md \
+         "FUZZ_${TAG}_ansi.json" BENCH_full.json \
          "BENCH_scale_${TAG}.json" PLANS.md BENCH_r*.json CORRECTNESS_r*.json; do
     [ -e "$f" ] && git add -f "$f"
 done

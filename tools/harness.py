@@ -6,6 +6,7 @@ needed, so it works under ``session.get_spark``'s ``spark.ui.enabled=false``).
 
 from __future__ import annotations
 
+import re
 import time
 
 from py4j.protocol import Py4JJavaError
@@ -26,11 +27,36 @@ def best_of(fn, runs: int):
     return best, out
 
 
+# Numbers in plan text that come from JVM-global counters, so the same
+# plan built twice prints them differently: expression ids, exchange
+# plan ids, lambda-variable suffixes and RDD ids.
+_COUNTERS = (
+    re.compile(r"(#)(\d+)"),
+    re.compile(r"(plan_id=)(\d+)"),
+    re.compile(r"(lambda \w+?_)(\d+)\b"),
+    re.compile(r"(RDD\[)(\d+)"),
+)
+
+
+def _renumber(text: str, pattern: re.Pattern) -> str:
+    """Replace each distinct counter value by its order of first appearance."""
+    ids: dict[str, int] = {}
+
+    def sub(m: re.Match) -> str:
+        return m.group(1) + str(ids.setdefault(m.group(2), len(ids)))
+
+    return pattern.sub(sub, text)
+
+
 def formatted_plan(spark, df) -> str:
-    """``df.explain("formatted")`` as a string."""
-    return df._jdf.queryExecution().explainString(
+    """``df.explain("formatted")`` as a string, with every JVM-global
+    counter renumbered per plan, so the same plan always prints the same."""
+    text = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+    for pattern in _COUNTERS:
+        text = _renumber(text, pattern)
+    return text
 
 
 def job_stages(spark, group: str) -> list[tuple]:
