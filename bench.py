@@ -436,7 +436,7 @@ CURVE = [
 ]
 
 
-def scale_curve(out_path: str = "BENCH_scale_r05.json") -> None:
+def scale_curve(out_path: str = "BENCH_scale.json") -> None:
     """2-3 point scale curve for the CURVE queries: sf0.01, sf0.1 and
     (if tools/make_scale10.py has materialized it) the synthetic 10x
     of sf0.1 — one run per point at the 10x scale, min-of-2 below it.

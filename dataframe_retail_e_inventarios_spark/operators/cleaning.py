@@ -53,9 +53,11 @@ def clean_sales(
     """The reference's main-cleaning block re-expressed declaratively
     [PRACTICA3.py:186-194]: rename -> coerce -> fillna(0) -> filter >= 0.
 
-    Catalyst collapses the whole chain into one projection + one filter
-    that push down to the parquet scan (verified via .explain in
-    tests/test_plans.py).
+    Catalyst collapses the whole chain into one projection over one
+    filter directly on the parquet scan, which reads only the four named
+    columns (tests/test_plan_quality.py::
+    test_clean_sales_is_one_project_one_filter). The coalesce filter is
+    not a parquet PushedFilter.
     """
     return (
         lineitem.select(

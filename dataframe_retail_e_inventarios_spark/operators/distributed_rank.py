@@ -76,7 +76,11 @@ def with_global_rank(
     the offsets aggregate and the final join both consume it, and
     without the cut each replans the WHOLE upstream — chaining k
     rankings (RFM's three ntiles) then recomputes the input 2^k times
-    (measured 12x wall regression at sf0.1 before the cut)."""
+    (measured 12x wall regression at sf0.1 before the cut). Without the
+    cut each consumer also samples its own range bounds, so the input
+    must give the same rows in the same per-partition order on every
+    read (a file scan does; the output of a shuffle does not, and there
+    the offsets and ranks disagree)."""
     n_parts = n_parts or df.sparkSession.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(n_parts, *order_exprs).withColumn(
         "_dr_pid", F.spark_partition_id()
@@ -115,9 +119,11 @@ def with_ntile(
     """Append ``out_col`` = ntile(n_tiles) over the global order —
     SQL-standard semantics (bucket sizes differ by at most one, larger
     buckets first), without the single-partition sort ``F.ntile`` over
-    an unpartitioned window requires."""
+    an unpartitioned window requires. The range cut is materialized,
+    so any input (a shuffle's output included) ranks exactly."""
     ranked = with_global_rank(
-        df, order_exprs, rank_col="_dr_rank", total_col="_dr_n", n_parts=n_parts
+        df, order_exprs, rank_col="_dr_rank", total_col="_dr_n", n_parts=n_parts,
+        materialize=True,
     )
     # q == 0 is unreachable inside _ntile_from_rank's otherwise-branch:
     # rank > cut == n implies no row

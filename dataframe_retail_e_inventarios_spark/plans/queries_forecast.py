@@ -13,9 +13,10 @@ rop >= ss per :68-81; 4-week horizon per :35). Model-dependent floats
 (MAPE, the ensemble itself) stay out of the hash; they remain covered
 by the native MA-only twin below and the differential tests.
 
-``multimodal_features`` runs the Arrow mapInPandas plumbing but its
-stub features are pure byte functions, so it IS oracle-checked —
-proving the UDF transport (schema, batching, binary columns) is exact.
+``multimodal_features`` computes the stub media features with built-ins,
+so it IS oracle-checked. The same features through the Arrow mapInPandas
+decoder contract (``operators/multimodal.extract_media_features``) are
+differential-tested against it in tests/test_multimodal.py.
 """
 
 from __future__ import annotations
@@ -25,11 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.cleaning import clean_sales
 from ..operators.forecast_udf import forecast_with_models
-from ..operators.multimodal import (
-    documents_as_media,
-    extract_media_features,
-    media_features_native,
-)
+from ..operators.multimodal import documents_as_media, media_features_native
 from ..operators.resample import weekly_dense_resample
 from ..registry import register
 from ..sources.readers import load_table
@@ -172,18 +169,6 @@ def q_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 register("multimodal_features", q_multimodal, _MULTIMODAL_ORACLE)
-
-
-def q_multimodal_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Extension-point path: the SAME features through the Arrow
-    mapInPandas decoder contract (the shape real codecs plug into).
-    Oracle-checked too — proving the UDF transport (schema, batching,
-    binary columns) is byte-exact with the native plan."""
-    media = documents_as_media(load_table(spark, sf_dir, "documents"))
-    return extract_media_features(media)
-
-
-register("multimodal_features_udf", q_multimodal_udf, _MULTIMODAL_ORACLE)
 
 
 # -- Rolling-origin cross-validation (forecast backtesting) ----------------

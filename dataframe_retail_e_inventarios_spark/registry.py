@@ -48,36 +48,28 @@ def _load_all() -> None:
     global _LOADED
     if _LOADED:
         return
-    from .plans import queries_core  # noqa: F401
+    # Listed in registration order, which queries() and oracle_sql() keep.
+    from .plans import (  # noqa: F401
+        queries_core,
+        queries_relational,
+        queries_stats,
+        queries_report,
+        queries_llm,
+        queries_forecast,
+        queries_streaming,
+        queries_extra,
+        queries_curation,
+        queries_datacleaning,
+        queries_sql,
+        queries_scale,
+        queries_trend,
+        queries_modern,
+        queries_layout,
+        queries_warehouse,
+        queries_corpus,
+        queries_dq,
+        queries_eval,
+        queries_mining,
+    )
 
-    for mod in (
-        "queries_relational",
-        "queries_stats",
-        "queries_report",
-        "queries_llm",
-        "queries_forecast",
-        "queries_streaming",
-        "queries_extra",
-        "queries_curation",
-        "queries_datacleaning",
-        "queries_sql",
-        "queries_scale",
-        "queries_trend",
-        "queries_modern",
-        "queries_layout",
-        "queries_warehouse",
-        "queries_corpus",
-        "queries_dq",
-        "queries_eval",
-        "queries_mining",
-    ):
-        qualname = f"{__package__}.plans.{mod}"
-        try:
-            __import__(qualname, fromlist=["*"])
-        except ModuleNotFoundError as e:
-            # Only "this module isn't built yet" is ignorable; a missing
-            # dependency INSIDE an existing module must fail loudly or
-            # the verified query surface silently shrinks.
-            if e.name != qualname:
-                raise
     _LOADED = True

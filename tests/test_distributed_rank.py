@@ -172,3 +172,22 @@ def test_bounded_rank_matches_row_number_and_keeps_partition_spec(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     specs = [l for l in plan.splitlines() if "windowspecdefinition" in l]
     assert specs and "_w0" in specs[0], specs
+
+
+def test_ntile_exact_when_input_partitioning_changes_per_run(spark):
+    """The input is re-read by each consumer of the range cut (offsets and
+    ranks). Here every read deals the rows to different partitions, as a
+    shuffle's fetch order can, so range bounds sampled per read would
+    disagree and rank rows past the total."""
+    import random
+
+    deal = F.udf(lambda _: random.random(), "double").asNondeterministic()
+    df = spark.range(20000).select(
+        "id", ((F.col("id") * 7919) % 1000).alias("a"), (F.col("id") * 2).alias("p")
+    ).repartition(4, deal("id"))
+    order = [F.col("a").asc(), F.col("id").asc()]
+    # Carrying p through the ranks keeps the offsets' pruned read distinct.
+    got = with_ntile(df, 4, order, "t", n_parts=4).groupBy("t").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("p").alias("p")
+    )
+    assert sorted((r["t"], r["n"]) for r in got.collect()) == [(t, 5000) for t in (1, 2, 3, 4)]

@@ -1,5 +1,5 @@
 """Fuzz-harness invariants (no Spark needed): draws are deterministic
-per (name, seed) — the FUZZ_r{N}.json artifact must be reproducible —
+per (name, seed) — the FUZZ.json artifact must be reproducible —
 and every sampler emits params its SQL builder accepts, with defaults
 reproducing the registered oracle byte-for-byte (one implementation
 serving both surfaces is the whole point)."""

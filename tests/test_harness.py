@@ -1,6 +1,7 @@
 """tools/harness.py: the shared min-of-N timer, the formatted-plan builder
 and the status-store stage reader that bench.py and tools/ use."""
 
+from pathlib import Path
 from types import SimpleNamespace
 
 import pytest
@@ -46,3 +47,11 @@ def test_formatted_plan_is_the_same_for_the_same_plan(spark):
     raw = [df._jdf.queryExecution().explainString(mode) for df in (first, second)]
     assert raw[0] != raw[1]
     assert formatted_plan(spark, first) == formatted_plan(spark, second)
+
+
+def test_formatted_plan_has_no_checkout_path(spark):
+    # The partitioned flagship scans a table it writes under the checkout.
+    df = queries()["flagship_inventory_partitioned"](spark, SF_SMOKE)
+    text = formatted_plan(spark, df)
+    assert str(Path(harness.__file__).resolve().parents[1]) + "/" not in text
+    assert "<repo>/spark-warehouse/" in text

@@ -3,10 +3,14 @@ properties — column pruning reaching the scan, predicate pushdown,
 broadcast joins for dims, whole-stage codegen — so a regression shows
 up as a test failure, not a 10x slowdown at deploy time."""
 
+import re
+
 import pytest
 import pyspark.sql.functions as F
 
+from dataframe_retail_e_inventarios_spark.operators.cleaning import clean_sales
 from dataframe_retail_e_inventarios_spark.registry import queries
+from dataframe_retail_e_inventarios_spark.sources.readers import load_table
 from tests.conftest import SF_SMOKE
 
 
@@ -158,6 +162,19 @@ def test_model_fit_plan_shape(spark):
         assert plan.count("Exchange") == 3, name
         assert plan.count("Window") == 0, name
         assert plan.count("MapInPandas") == 1, name
+
+
+def test_clean_sales_is_one_project_one_filter(spark):
+    """The reference's rename -> coerce -> fillna -> filter chain collapses
+    into one Project over one Filter over the scan, which reads only the
+    four columns it names; no shuffle."""
+    df = clean_sales(load_table(spark, SF_SMOKE, "lineitem"))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    nodes = [re.match(r"[\s:+|-]*(?:\*\(\d+\) )?(\w+)", line).group(1)
+             for line in plan.splitlines()]
+    assert nodes == ["Project", "Filter", "ColumnarToRow", "FileScan"], nodes
+    read_schema = plan.split("ReadSchema: ")[1]
+    assert read_schema.count(":") == 4, read_schema
 
 
 def test_pricing_summary_single_pass(spark):

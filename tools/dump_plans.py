@@ -1,6 +1,6 @@
 """Dump formatted physical plans for NAMED queries to a directory:
 
-    python tools/dump_plans.py --out plans/r13 --suffix before name ...
+    python tools/dump_plans.py --out plans --suffix before name ...
 
 Explain-only (no timed execution — queries whose builders materialize
 intermediates inside the function body do run those side effects, at
@@ -22,7 +22,7 @@ from tools.harness import formatted_plan
 
 def main() -> None:
     argv = sys.argv[1:]
-    out_dir = "plans/r13"
+    out_dir = "plans"
     suffix = "before"
     sf_dir = "/root/testdata/sf0.001"
     names: list[str] = []

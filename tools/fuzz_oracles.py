@@ -7,7 +7,7 @@ catches FIXTURE-BAKED parity — a query whose Spark side and oracle
 side agree only at the shipped constants (e.g. the r7 `l_quantity`
 cast bug class) fails here on the first perturbed draw.
 
-    python tools/fuzz_oracles.py [--json FUZZ_r09.json] [--seeds N] [sf_dir] [name ...]
+    python tools/fuzz_oracles.py [--json FUZZ.json] [--seeds N] [sf_dir] [name ...]
 
 Determinism: every draw comes from random.Random(f"{name}:{seed}"), so
 the artifact is reproducible bit-for-bit; parameters are recorded per

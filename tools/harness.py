@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import re
 import time
+from pathlib import Path
 
 from py4j.protocol import Py4JJavaError
 
@@ -48,15 +49,21 @@ def _renumber(text: str, pattern: re.Pattern) -> str:
     return pattern.sub(sub, text)
 
 
+# The checkout's own root, printed as "<repo>/" so a plan that reads a
+# table under the checkout (spark-warehouse/) prints the same in any checkout.
+_REPO_ROOT = str(Path(__file__).resolve().parents[1]) + "/"
+
+
 def formatted_plan(spark, df) -> str:
     """``df.explain("formatted")`` as a string, with every JVM-global
-    counter renumbered per plan, so the same plan always prints the same."""
+    counter renumbered per plan and the checkout root replaced by
+    ``<repo>``, so the same plan always prints the same."""
     text = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
     for pattern in _COUNTERS:
         text = _renumber(text, pattern)
-    return text
+    return text.replace(_REPO_ROOT, "<repo>/")
 
 
 def job_stages(spark, group: str) -> list[tuple]:

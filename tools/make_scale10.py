@@ -1,5 +1,5 @@
 """Materialize a synthetic 10x copy of an sf directory for the scale
-curve (BENCH_scale_r{N}.json). Usage:
+curve (``python bench.py --scale-curve``, BENCH_scale.json). Usage:
 
     python tools/make_scale10.py [src_sf_dir] [replicas]
 

@@ -3,7 +3,7 @@ selfcheck sweeps — full sf0.01, hostile session timezone, reduced
 parallelism/partitioning, legacy ANSI mode, sf0.1 headline — as ONE
 artifact keyed by (config, query).
 
-    python tools/matrix.py [--out MATRIX_r09.json]
+    python tools/matrix.py [--out MATRIX.json]
 
 Each config runs tools/selfcheck.py in a SUBPROCESS because the knobs
 are process-level (TZ env, JVM session conf fixed at SparkSession
@@ -50,7 +50,7 @@ def _is_bad(r: dict) -> bool:
 
 
 def main() -> int:
-    out_path = "MATRIX_r09.json"
+    out_path = "MATRIX.json"
     argv = sys.argv[1:]
     if argv and argv[0] == "--out":
         out_path = argv[1]

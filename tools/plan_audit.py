@@ -6,7 +6,9 @@ query names to plan-shape assertions lifted from their docstrings
 (no-Expand, broadcast join present, TakeOrderedAndProject top-k,
 bounded hash-shuffle count), each query's formatted physical plan is
 built live (tools/harness.formatted_plan), and any mismatch is a
-nonzero exit. Run by close_round.sh every round.
+nonzero exit. Run by tools/gate.sh. It checks only what CLAIMS encodes,
+so a query added or changed with a plan claim in its docstring needs a
+CLAIMS row here.
 
 The headline plans it builds are also written to PLANS.md, in HEADLINE
 order — the artifact for reviewing scan pruning (ReadSchema/
