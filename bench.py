@@ -15,7 +15,6 @@ earlier artifact.
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
@@ -25,7 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from dataframe_retail_e_inventarios_spark.registry import queries
 from dataframe_retail_e_inventarios_spark.session import get_spark
-from tools.harness import best_of
+from tools.harness import best_of, unpersist_new_rdds
 
 # 1-min load average above this at bench start = another tenant is on
 # the box; main() waits (up to 10 min) for it to clear before timing
@@ -460,8 +459,7 @@ def scale_curve(out_path: str = "BENCH_scale.json") -> None:
     curve: dict[str, dict[str, float]] = {n: {} for n in CURVE}
     for label, sf_dir, runs in points:
         for name in CURVE:
-            best, _ = best_of(lambda: qs[name](spark, sf_dir).count(), runs)
-            curve[name][label] = round(best, 3)
+            curve[name][label] = _min_wall(spark, qs[name], sf_dir, runs)
     report = {
         "metric": "scale_curve_sec",
         "unit": "sec",
@@ -475,6 +473,17 @@ def scale_curve(out_path: str = "BENCH_scale.json") -> None:
     with open(out_path, "w") as f:
         json.dump(report, f, indent=1)
     print(json.dumps(report))
+
+
+def _min_wall(spark, fn, sf_dir: str, runs: int) -> float:
+    """Fastest of ``runs`` timed ``fn(spark, sf_dir).count()`` calls, in
+    seconds. The query's checkpoint blocks are freed before it returns:
+    130 queries of accumulated blocks measurably tax later queries' JVM
+    GC (r5->r6 root cause of a broad ~20% per-query drift: in-suite
+    outliers at 3-4x reverted to baseline when re-timed in isolation)."""
+    with unpersist_new_rdds(spark):
+        best, _ = best_of(lambda: fn(spark, sf_dir).count(), runs)
+    return round(best, 3)
 
 
 def _load_avg() -> list[float]:
@@ -517,27 +526,13 @@ def main() -> None:
     # work, not first-query warmup.
     qs["flagship_inventory"](spark, "/root/testdata/sf0.001").count()
 
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        # min of 3 runs (r9 verdict #1b, was 2): single-shot timings on
-        # a shared box swing up to several x with background load/GC;
-        # the min is the stable engine-cost estimate, and with the
-        # observed cross-run spread two samples were not enough to
-        # support round-over-round claims.
-        best, _ = best_of(lambda: qs[name](spark, sf_dir).count(), 3)
-        timings[name] = round(best, 3)
-        # Release py4j handles NOW: dropped DataFrames pin their
-        # localCheckpoint blocks until Python GC runs, and 130 queries
-        # of accumulated blocks measurably tax later queries' JVM GC
-        # (r5->r6 root cause of the broad ~20% per-query drift:
-        # in-suite outliers at 3-4x reverted to baseline when re-timed
-        # in isolation).
-        gc.collect()
-
-    demo_timings: dict[str, float] = {}
-    for name in DEMO:
-        once, _ = best_of(lambda: qs[name](spark, sf_dir).count(), 1)
-        demo_timings[name] = round(once, 3)
+    # min of 3 runs (r9 verdict #1b, was 2): single-shot timings on a
+    # shared box swing up to several x with background load/GC; the min
+    # is the stable engine-cost estimate, and with the observed
+    # cross-run spread two samples were not enough to support
+    # round-over-round claims.
+    timings = {name: _min_wall(spark, qs[name], sf_dir, 3) for name in HEADLINE}
+    demo_timings = {name: _min_wall(spark, qs[name], sf_dir, 1) for name in DEMO}
 
     # LIGHT group (r5 verdict #2): every registered query NOT in the
     # curated headline/demo lists — small set-op/filter variants, the
@@ -548,11 +543,7 @@ def main() -> None:
     # could masquerade as a regression — the per-query noise band on
     # this box is wider than a round's real movement.
     light = sorted(set(qs) - set(HEADLINE) - set(DEMO))
-    light_timings: dict[str, float] = {}
-    for name in light:
-        best, _ = best_of(lambda: qs[name](spark, sf_dir).count(), 2)
-        light_timings[name] = round(best, 3)
-        gc.collect()
+    light_timings = {name: _min_wall(spark, qs[name], sf_dir, 2) for name in light}
 
     load_after = _load_avg()
     total = round(sum(timings.values()), 3)

@@ -67,7 +67,6 @@ def doc_shingle_sets(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    max_df: int | None = None,
     hashed: bool = False,
 ) -> DataFrame:
     """(doc_id, shingles: array<string|long>) — one narrow pass, no
@@ -85,28 +84,12 @@ def doc_shingle_sets(
     mins) are hash-invariant, and every shuffle/exchange then carries
     8-byte longs instead of ~25-char strings — a ~3x row shrink on the
     band self-join at corpus scale.
-
-    ``max_df`` drops shingles whose document frequency exceeds the cap
-    (standard MinHash practice: a stop-shingle shared by k docs carries
-    no discriminative signal but costs k^2 in any pair join — the skew
-    bomb at corpus scale). The hot list is one corpus aggregation whose
-    output is tiny (few shingles exceed any sane cap), so it ships as a
-    single-row broadcast; at 100 TB you compute it once per corpus
-    snapshot and reuse it across every dedup query.
     """
     toked = docs.select(F.col(id_col), tokens(text_col).alias("toks"))
     sh = word_shingles(F.col("toks"), n)
     if hashed:
         sh = F.transform(sh, shingle_hash32)
-    base = toked.select(F.col(id_col), sh.alias("shingles"))
-    if max_df is not None:
-        # Rebuild sets from the capped inverted index. Array-side
-        # capping (array_except against a broadcast hot list) is also
-        # possible but leaves downstream consumers in interpreted-
-        # lambda land; every internal consumer uses the exploded form.
-        capped = doc_shingles(docs, text_col, id_col, n, max_df, hashed)
-        return capped.groupBy(id_col).agg(F.collect_list("shingle").alias("shingles"))
-    return base
+    return toked.select(F.col(id_col), sh.alias("shingles"))
 
 
 def doc_shingles(
@@ -116,7 +99,6 @@ def doc_shingles(
     n: int = 3,
     max_df: int | None = None,
     hashed: bool = False,
-    materialize: bool = False,
 ) -> DataFrame:
     """(doc_id, shingle) exploded inverted index — the codegen-friendly
     spine every MinHash/Jaccard operator builds on. Docs with < n
@@ -126,19 +108,22 @@ def doc_shingles(
     tokenize+shingle pipeline into an interpreted per-row Filter
     (measured 8 s of pure waste at sf0.1).
 
-    The ``max_df`` cap is a broadcast LEFT ANTI join against the (tiny)
-    hot-shingle list — index rows stay flat and codegen'd end to end.
+    ``max_df`` drops shingles whose document frequency exceeds the cap
+    (standard MinHash practice: a stop-shingle shared by k docs carries
+    no discriminative signal but costs k^2 in any pair join — the skew
+    bomb at corpus scale). The cap is a broadcast LEFT ANTI join
+    against the hot-shingle list, one corpus aggregation whose output
+    is tiny (few shingles exceed any sane cap), so index rows stay flat
+    and codegen'd end to end; at 100 TB you compute it once per corpus
+    snapshot and reuse it across every dedup query.
 
-    ``materialize=True`` localCheckpoints the UNCAPPED index so the
-    hot-shingle aggregation and the capped consumer both read the
-    materialized (doc_id, long) rows instead of each re-running the
-    tokenize+shingle+hash pipeline — with the cap that halves the
-    corpus passes to exactly one. Worth it only since the index rows
-    became 16-byte longs: the round-1 attempt on string shingles
-    materialized 3x the bytes and lost cold (commit a5522fc). The
-    checkpoint is ephemeral per-query scratch (lineage truncation, not
-    fault-tolerant persistence) — the standard trade for an index that
-    multiple plan branches consume within one job.
+    With ``max_df`` set, the uncapped index is read twice (hot-shingle
+    aggregation and anti join), so it is localCheckpointed: (doc_id,
+    long) rows, where the same cut on string shingles materialized 3x
+    the bytes and lost. The capped index stays lazy: a second cut after
+    the cap measured slower over the dedup queries than re-running the
+    broadcast anti join per read (artifacts/checkpoint_ab.md). Without
+    ``max_df`` nothing is checkpointed.
     """
     sh = doc_shingle_sets(docs, text_col, id_col, n, hashed=hashed)
     # explode_outer, NOT explode: InferFiltersFromGenerate turns a plain
@@ -150,19 +135,8 @@ def doc_shingles(
     idx = sh.select(id_col, F.explode_outer("shingles").alias("shingle")).filter(
         F.col("shingle").isNotNull()
     )
-    if materialize:
-        idx = idx.localCheckpoint(eager=True)
     if max_df is not None:
-        idx = _cap_max_df(idx, max_df)
-        if materialize:
-            # Checkpoint the CAPPED index as well (r13): the cap's
-            # hot-shingle aggregation + anti-join are lazy, so every
-            # downstream read of the returned frame (jaccard's sizes/
-            # a/b branches = 3 reads) re-ran them against the uncapped
-            # checkpoint. A second, RDD-to-RDD checkpoint makes the
-            # cap a one-time pass; probed ~0.9 s off
-            # lsh_band_recall_audit isolated at sf0.1.
-            idx = idx.localCheckpoint(eager=True)
+        idx = _cap_max_df(idx.localCheckpoint(eager=True), max_df)
     return idx
 
 
@@ -192,26 +166,22 @@ def jaccard_pairs(
     baseline]. Candidates from the inverted shingle index (pairs must
     share >= 1 shingle), so cost is sum of per-shingle doc-list sizes
     squared — not n^2 over the corpus. ``max_df`` bounds exactly that
-    per-shingle list size (see doc_shingle_sets), which turns the worst
+    per-shingle list size (see doc_shingles), which turns the worst
     case from corpus-quadratic into max_df-quadratic. The inverted
     index joins on the 32-bit shingle hash, not the string — identical
     pair counts (the hash is set-operation-invariant) with a ~3x
     narrower shuffle.
 
-    ``idx`` (r13, guide §6 read-once): a prebuilt UNCAPPED hashed
-    exploded index from ``doc_shingles(..., hashed=True,
-    materialize=True)`` — queries that need BOTH exact-Jaccard truth
-    and a MinHash index (lsh_band_recall_audit) pass the one
-    checkpointed index to both operators instead of each re-running
-    the tokenize+shingle+hash corpus pass; identical dataflow from the
-    index on."""
+    ``idx``: a prebuilt hashed exploded index from
+    ``doc_shingles(..., hashed=True)`` — queries that need BOTH
+    exact-Jaccard truth and a MinHash index (lsh_band_recall_audit,
+    minhash_estimator_error) pass one index to both operators;
+    ``max_df`` then caps it here. Identical dataflow from the index
+    on."""
     if idx is not None:
         ds = idx if max_df is None else _cap_max_df(idx, max_df)
     else:
-        ds = doc_shingles(
-            docs, text_col, id_col, n, max_df, hashed=True,
-            materialize=max_df is not None,
-        )
+        ds = doc_shingles(docs, text_col, id_col, n, max_df, hashed=True)
     sizes = ds.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     a = ds.alias("a")
     b = ds.alias("b")
@@ -337,10 +307,7 @@ def minhash_index(
     if idx is not None:
         idx = idx if max_df is None else _cap_max_df(idx, max_df)
     else:
-        idx = doc_shingles(
-            docs, text_col, id_col, max_df=max_df, hashed=True,
-            materialize=max_df is not None,
-        )
+        idx = doc_shingles(docs, text_col, id_col, max_df=max_df, hashed=True)
     return (
         idx.select(id_col, "shingle", *_mix_cols(k))
         .groupBy(id_col)
@@ -629,9 +596,7 @@ def setsim_prefix_pairs(
     310 161 after the length filter -> 124 961 after the positional
     filter (3.3x fewer full-set fetches + intersections).
     """
-    ds = doc_shingles(
-        docs, text_col, id_col, n, max_df, hashed=True, materialize=True
-    )
+    ds = doc_shingles(docs, text_col, id_col, n, max_df, hashed=True)
     dfreq = ds.groupBy("shingle").agg(F.count("*").alias("_df"))
     sizes = ds.groupBy(id_col).agg(F.count("*").alias("_m"))
     w = Window.partitionBy(id_col).orderBy("_df", "shingle")
@@ -705,10 +670,7 @@ def containment_pairs_directed(
     shingle index as jaccard_pairs — one index join, both directions
     scored from the one intersection count, tiny sets (< min_set
     shingles, where containment is noise) dropped at the size join."""
-    ds = doc_shingles(
-        docs, text_col, id_col, n, max_df, hashed=True,
-        materialize=max_df is not None,
-    )
+    ds = doc_shingles(docs, text_col, id_col, n, max_df, hashed=True)
     sizes = ds.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     a, b = ds.alias("a"), ds.alias("b")
     inter = (

@@ -66,27 +66,24 @@ def with_global_rank(
     rank_col: str = "global_rank",
     total_col: str | None = None,
     n_parts: int | None = None,
-    materialize: bool = False,
 ) -> DataFrame:
     """Append ``rank_col`` = row_number() over the global order of
     ``order_exprs`` (and optionally ``total_col`` = total row count),
     fully partition-parallel.
 
-    ``materialize=True`` localCheckpoints the range-partitioned frame:
-    the offsets aggregate and the final join both consume it, and
-    without the cut each replans the WHOLE upstream — chaining k
-    rankings (RFM's three ntiles) then recomputes the input 2^k times
-    (measured 12x wall regression at sf0.1 before the cut). Without the
-    cut each consumer also samples its own range bounds, so the input
-    must give the same rows in the same per-partition order on every
-    read (a file scan does; the output of a shuffle does not, and there
-    the offsets and ranks disagree)."""
+    The range-partitioned frame is localCheckpointed: the offsets
+    aggregate and the final join both consume it. Without the cut each
+    consumer samples its own range bounds, so an input that does not
+    give the same rows in the same per-partition order on every read
+    (the output of a shuffle) gets offsets and ranks that disagree; and
+    each consumer replans the WHOLE upstream — chaining k rankings then
+    recomputes the input 2^k times (measured 12x wall regression at
+    sf0.1 before the cut)."""
     n_parts = n_parts or df.sparkSession.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(n_parts, *order_exprs).withColumn(
         "_dr_pid", F.spark_partition_id()
     )
-    if materialize:
-        ranged = ranged.localCheckpoint(eager=True)
+    ranged = ranged.localCheckpoint(eager=True)
     counts = ranged.groupBy("_dr_pid").agg(F.count("*").alias("_dr_cnt"))
     # exclusive prefix sum over ONE ROW PER PARTITION — metadata-scale,
     # via the warning-free triangular join (operators/prefix.py). When
@@ -119,11 +116,9 @@ def with_ntile(
     """Append ``out_col`` = ntile(n_tiles) over the global order —
     SQL-standard semantics (bucket sizes differ by at most one, larger
     buckets first), without the single-partition sort ``F.ntile`` over
-    an unpartitioned window requires. The range cut is materialized,
-    so any input (a shuffle's output included) ranks exactly."""
+    an unpartitioned window requires."""
     ranked = with_global_rank(
-        df, order_exprs, rank_col="_dr_rank", total_col="_dr_n", n_parts=n_parts,
-        materialize=True,
+        df, order_exprs, rank_col="_dr_rank", total_col="_dr_n", n_parts=n_parts
     )
     # q == 0 is unreachable inside _ntile_from_rank's otherwise-branch:
     # rank > cut == n implies no row
@@ -153,8 +148,8 @@ def with_ntile_multi(
     """Append ONE ntile column per (out_col, asc_key) spec — e.g. the
     RFM segmentation's three quintile rankings — in a SINGLE
     distributed rank pass instead of one with_ntile chain link per
-    dimension (r5 verdict: three chained materialize=True links cost
-    three checkpoint barriers, 9x the r4 wall at sf0.1).
+    dimension (r5 verdict: three chained with_ntile links cost three
+    checkpoint barriers, 9x the r4 wall at sf0.1).
 
     Shape: melt each row into ``d`` (dim, key) rows via an in-row
     explode (no shuffle), range-repartition ONCE on

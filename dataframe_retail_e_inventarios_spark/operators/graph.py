@@ -35,7 +35,6 @@ def connected_components(
     max_iterations: int = 20,
     stats: dict | None = None,
     assume_distinct: bool = False,
-    materialize_pairs: bool = True,
 ) -> DataFrame:
     """(node, cluster_id) with cluster_id = min node id reachable in the
     undirected graph given by ``pairs``. Nodes not in any pair are not
@@ -55,22 +54,10 @@ def connected_components(
     full 2x-edge-list shuffle (measured on entity_clusters_fuzzy).
 
     The symmetrized edge union reads ``pairs`` twice, so the pair
-    GENERATOR'S subtree (jaccard index self-join, blocked levenshtein)
-    would run twice before the edge checkpoint; materializing the pair
-    list first (r13, guide §6 read-once — it is the small end of the
-    dataflow, edge-list-sized) makes the union two projections of one
-    computed frame. In-query only: the checkpoint lives inside the
-    caller's timed region like every other one in this package.
-    ``materialize_pairs=False`` opts out for callers whose pair list
-    is LARGE relative to its recompute cost — probed on
-    entity_clusters_fuzzy (3.1M blocked-levenshtein pairs): AQE's
-    exchange reuse already shares the block join across the two union
-    branches, so checkpointing the full pair list cost more than the
-    duplicated post-exchange work it saved (5.8 -> 7.3 s isolated);
-    the sparse jaccard near-dup callers (small pair lists over an
-    expensive index self-join) measure the opposite (3.0 -> 2.7 s)."""
-    if materialize_pairs:
-        pairs = pairs.localCheckpoint(eager=True)
+    generator's subtree runs twice before the edge checkpoint. A caller
+    whose pair list is small next to its generator checkpoints
+    ``pairs`` itself (queries_curation._neardup_components); one whose
+    pair list is large does not (entity_clusters_fuzzy)."""
     edges = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).union(
         pairs.select(F.col(dst).alias("u"), F.col(src).alias("v"))
     )

@@ -482,9 +482,8 @@ def q_tokenizer_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrence rate — the number that says whether a fixed tokenizer
     vocabulary (or a domain filter) will shred a source into UNKs.
 
-    Plan shape: ONE tokenize scan (the exploded (source, term) frame
-    is localCheckpointed and feeds both the vocab induction and the
-    coverage join), a distributed top-k for the vocab
+    Plan shape: the exploded (source, term) frame feeds both the vocab
+    induction and the coverage join, a distributed top-k for the vocab
     (TakeOrderedAndProject — never a global window), and a broadcast
     left join of the token stream against the 512-row vocab. The
     corpus side never shuffles for the join; per-source rollup is the
@@ -496,7 +495,6 @@ def q_tokenizer_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.repartition(par, "doc_id")
         .select("source", F.explode(tokens("text")).alias("term"))
         .filter(F.col("term") != "")
-        .localCheckpoint(eager=True)
     )
     vocab = (
         toks.groupBy("term")

@@ -42,9 +42,10 @@ def _neardup_components(
     spark: SparkSession, sf_dir: str, threshold: float = 0.35
 ) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return connected_components(
-        jaccard_pairs(docs, threshold=threshold, max_df=MAX_DF)
-    )
+    # The edge union reads the pairs twice; the pair list is small next
+    # to its index self-join, so it is cut first (artifacts/checkpoint_ab.md).
+    pairs = jaccard_pairs(docs, threshold=threshold, max_df=MAX_DF)
+    return connected_components(pairs.localCheckpoint(eager=True))
 
 
 def q_dedup_clusters(
@@ -546,7 +547,6 @@ def q_dsir_importance_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored,
         [F.col("s").desc(), F.col("doc_id").asc()],
         rank_col="_rk",
-        materialize=True,
     )
     return ranked.select(
         "doc_id",
@@ -782,7 +782,6 @@ def q_llm_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("doc_id", "n_tokens", "hs")
-        .localCheckpoint(eager=True)  # 2 consumers: decontam + pack
     )
     tr_sh = surv.select(
         "doc_id", F.explode_outer("hs").alias("shingle")

@@ -861,7 +861,7 @@ def q_silhouette_lite_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.bround(F.col("val").cast("double"), 6) * 1e6, 0)
         .cast("long")
         .alias("ei"),
-    ).localCheckpoint(eager=True)  # two consumers: centroids + distances
+    )
     cents = el.groupBy(F.col("label").alias("label_c"), "d").agg(
         (
             (F.sum("ei") - F.pmod(F.sum("ei"), F.count(F.lit(1))))
@@ -988,8 +988,8 @@ def q_forecast_reconciliation_topdown(spark: SparkSession, sf_dir: str) -> DataF
         "units_sold",
     )
     # ONE fact pass (r13, guide §6 read-once): the brand dense series
-    # is derived FROM the checkpointed product-weekly frame instead of
-    # a second clean+join+shuffle over the lineitem fact — the brand
+    # is derived FROM the product-weekly frame instead of a second
+    # clean+join+shuffle over the lineitem fact — the brand
     # weekly sum is the sum of its products' weekly sums (integral
     # units: every double sum is exact, so the regrouped total is
     # bit-equal), and week_ending_sunday is idempotent on the already
@@ -997,14 +997,14 @@ def q_forecast_reconciliation_topdown(spark: SparkSession, sf_dir: str) -> DataF
     # the identical dense grid.
     pw_raw = weekly_resample_sum(
         sales, ["brand", "product_id"], "invoice_date", "units_sold"
-    ).localCheckpoint(eager=True)
+    )
     bw = weekly_dense_resample(pw_raw, ["brand"], "week", "units_sold")
     w_ord = Window.partitionBy("brand").orderBy("week")
     ub = F.bround(F.col("units_sold"), 0).cast("long")
     # bseq feeds four consumers (train totals, test grid, product-share
-    # window, brand-level MAE) and pw_raw three (brand series, train
-    # shares, test grid) — checkpoint both so the fact scan + resample
-    # run ONCE, not once per consumer.
+    # window, brand-level MAE): checkpointed so its window pass runs
+    # once. pw_raw's three readers (brand series, train shares, test
+    # grid) measured cheaper without a cut (artifacts/checkpoint_ab.md).
     bseq = bw.select(
         "brand",
         "week",
@@ -1205,7 +1205,7 @@ def q_gini_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_nationkey").alias("nationkey"), "c_custkey")
         .agg(F.sum(cents).alias("rev"))
     )
-    # materialize=True checkpoints the range-partitioned frame: the
+    # with_global_rank checkpoints the range-partitioned frame: the
     # offsets aggregate, the nation-count aggregate and the final join
     # all read the cut instead of each replanning the orders scan +
     # revenue aggregate (4 scans measured without it).
@@ -1213,7 +1213,6 @@ def q_gini_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         rev,
         [F.col("nationkey").asc(), F.col("rev").asc(), F.col("c_custkey").asc()],
         rank_col="grank",
-        materialize=True,
     )
     nation_counts = ranked.groupBy("nationkey").agg(F.count(F.lit(1)).alias("cnt"))
     offsets = exclusive_prefix_offsets(nation_counts, "nationkey", "cnt", "off")

@@ -210,11 +210,7 @@ def q_rolling_origin_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = bounds.select(
         "event_type", F.explode(F.sequence("mn", "mx")).alias("ds"), "mx"
     )
-    dense = (
-        spine.join(daily, ["event_type", "ds"], "left")
-        .fillna({"y": 0.0})
-        .localCheckpoint(eager=True)
-    )
+    dense = spine.join(daily, ["event_type", "ds"], "left").fillna({"y": 0.0})
     folds = spark.range(1, _CV_FOLDS + 1).select(F.col("id").cast("int").alias("fold"))
     df = dense.crossJoin(F.broadcast(folds))
     cutoff = F.date_sub(F.col("mx"), F.col("fold") * _CV_H)

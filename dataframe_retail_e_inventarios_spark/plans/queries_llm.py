@@ -49,7 +49,7 @@ _TOKS = TOKENS_SQL.format(t="text")
 _SH = SHINGLES_SQL.format(toks="toks")
 
 # Hot-shingle document-frequency cap (mirrored in the Spark path via
-# doc_shingle_sets(max_df=MAX_DF)): shingles shared by more than MAX_DF
+# doc_shingles(max_df=MAX_DF)): shingles shared by more than MAX_DF
 # docs carry no near-dup signal but cost df^2 in the pair join.
 MAX_DF = 250
 
@@ -981,14 +981,12 @@ def q_embedding_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame
     corpus (the 4x storage/bandwidth path for vector stores at 100 TB:
     scale = per-dim max|x|, q = clamp(round(x/scale*127))) with the
     per-vector reconstruction-error report that decides whether int8
-    is acceptable for the retrieval stage. One posexplode pass feeds
-    both the 64-row scale table and the error join; squared errors
+    is acceptable for the retrieval stage. One posexplode feeds both
+    the 64-row scale table and the error join; squared errors
     sum as scaled BIGINTs (order-independent); Spark round() and
     DuckDB round() agree at ties (both half-away-from-zero)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    ex = emb.select(
-        "vec_id", F.posexplode("embedding").alias("d", "x")
-    ).localCheckpoint(eager=True)  # scale table + error join share one pass
+    ex = emb.select("vec_id", F.posexplode("embedding").alias("d", "x"))
     scales = ex.groupBy("d").agg(F.max(F.abs(F.col("x"))).alias("s"))
     j = ex.join(F.broadcast(scales), "d")
     qv = F.greatest(
@@ -1047,18 +1045,15 @@ def q_minhash_estimator_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     diagnostic run, not a production path: it re-derives signatures
     beside the pair output (two corpus passes by construction)."""
     docs = load_table(spark, sf_dir, "documents")
-    # ONE tokenize+shingle+hash corpus pass (r13, guide §6 read-once):
-    # the capped pairs index and the UNCAPPED estimator signatures both
-    # derive from the same checkpointed shingle index — previously each
-    # re-ran the full pass.
-    idx = doc_shingles(docs, hashed=True, materialize=True)
+    # The capped pairs index and the UNCAPPED estimator signatures both
+    # derive from the one shingle index. Neither the index nor the
+    # signature frame both join sides read is checkpointed: each cut
+    # measured slower than the re-reads (artifacts/checkpoint_ab.md).
+    idx = doc_shingles(docs, hashed=True)
     pairs = minhash_lsh_pairs(
         docs, threshold=0.3, k=16, bands=4, max_df=MAX_DF, idx=idx
     )
-    # Both join sides (a and b) read the signature frame; checkpoint so
-    # the tokenize+minhash pass runs once, not once per side (r10 —
-    # the winnow recompute class). 17 longs per doc.
-    sig = minhash_signatures(docs, k=16, idx=idx).localCheckpoint(eager=True)
+    sig = minhash_signatures(docs, k=16, idx=idx)
     a = sig.select(F.col("doc_id").alias("id_a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(16)])
     b = sig.select(F.col("doc_id").alias("id_b"), *[F.col(f"h{i}").alias(f"b{i}") for i in range(16)])
     j = pairs.join(a, "id_a").join(b, "id_b")
@@ -1222,8 +1217,7 @@ def q_embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 6dp BEFORE the medians, and each median/MAD is itself rounded to
     6dp before reuse so the interpolation formula (lerp vs midpoint)
     can't leak engine-specific last-ulp differences into the 3-MAD
-    comparison. One scan; the norms frame feeds three aggregates, so it
-    is localCheckpointed (single-scan discipline)."""
+    comparison. The norms frame feeds three aggregates."""
     emb = load_table(spark, sf_dir, "embeddings")
     sumsq = F.aggregate(
         F.transform(
@@ -1235,9 +1229,7 @@ def q_embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    norms = emb.select(
-        "label", F.round(F.sqrt(sumsq / 1e9), 6).alias("nrm")
-    ).localCheckpoint(eager=True)
+    norms = emb.select("label", F.round(F.sqrt(sumsq / 1e9), 6).alias("nrm"))
     med = norms.groupBy("label").agg(
         F.round(F.percentile("nrm", F.lit(0.5)), 6).alias("med")
     )

@@ -185,16 +185,12 @@ def q_lsh_band_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output is one bounded row per bin: the audit a pipeline operator
     reads before picking a banding config for a new corpus."""
     docs = load_table(spark, sf_dir, "documents")
-    # ONE tokenize+shingle+hash+cap corpus pass (r13, guide §6
-    # read-once): the truth (exact Jaccard) and the signature index
-    # both derive from the same checkpointed CAPPED shingle index —
-    # previously jaccard_pairs and minhash_index each re-ran the full
-    # pass. Both consumers use the same MAX_DF cap, so capping happens
-    # once before the checkpoint (a first cut sharing the UNCAPPED
-    # index probed SLOWER than baseline: the raw index stores the hot
-    # shingles' rows too, and the cap's hot-shingle aggregation +
-    # anti-join then ran once per consumer).
-    idx = doc_shingles(docs, hashed=True, max_df=MAX_DF, materialize=True)
+    # ONE tokenize+shingle+hash corpus pass (r13, guide §6 read-once):
+    # the truth (exact Jaccard) and the signature index both derive
+    # from the same CAPPED shingle index, whose uncapped input
+    # doc_shingles checkpoints — previously jaccard_pairs and
+    # minhash_index each re-ran the full pass.
+    idx = doc_shingles(docs, hashed=True, max_df=MAX_DF)
     truth = jaccard_pairs(docs, threshold=0.1, idx=idx)
     sig = minhash_index(docs, k=_AUDIT_K, idx=idx)
     rows = _AUDIT_K // _AUDIT_BANDS
@@ -212,11 +208,6 @@ def q_lsh_band_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "band_key"
             ),
         )
-        # Both sides of the collision self-join read this frame;
-        # without materialization each side re-tokenizes and re-hashes
-        # the corpus through minhash_index (the winnow recompute class,
-        # r10). (doc_id, band_key) is 4 short rows per doc.
-        .localCheckpoint(eager=True)
     )
     ma, mb = melted.alias("a"), melted.alias("b")
     cands = (
@@ -703,15 +694,10 @@ def q_cohens_kappa_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact-integer functions of the tiny confusion matrix, so the
     # tokenize+predict subtree collapses to a single
     # groupBy(labeled, pred) — previously lab, prd and tot each
-    # re-evaluated it (3 corpus passes). The matrix is |langs|^2 rows;
-    # checkpointing it keeps the three readers trivially off the scan.
-    cm = (
-        p.groupBy("labeled_lang", "pred_lang")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.col("agree").cast("long")).alias("agree_cnt"),
-        )
-        .localCheckpoint(eager=True)
+    # re-evaluated it (3 corpus passes). The matrix is |langs|^2 rows.
+    cm = p.groupBy("labeled_lang", "pred_lang").agg(
+        F.count(F.lit(1)).alias("cnt"),
+        F.sum(F.col("agree").cast("long")).alias("agree_cnt"),
     )
     lab = cm.groupBy(F.col("labeled_lang").alias("cls")).agg(
         F.sum("cnt").alias("n_lab")

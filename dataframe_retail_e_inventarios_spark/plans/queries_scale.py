@@ -1254,14 +1254,11 @@ def q_entity_clusters_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = blocked_levenshtein_pairs(part, "p_partkey", "p_name", max_dist=1)
     # each record sits in exactly one levenshtein block, so every
     # undirected pair is emitted once — the edge-dedup shuffle (2x the
-    # 3.1M-edge list at sf0.1) is pure overhead here
-    # materialize_pairs=False (r13): the 3.1M-pair list is big relative
-    # to its post-exchange recompute (AQE reuses the block join across
-    # the edge-union branches); checkpointing it probed 5.8 -> 7.3 s.
-    cc = connected_components(
-        pairs, src="id_a", dst="id_b", assume_distinct=True,
-        materialize_pairs=False,
-    )
+    # 3.1M-edge list at sf0.1) is pure overhead here. The pair list is
+    # not checkpointed (r13): it is big relative to its post-exchange
+    # recompute (AQE reuses the block join across the edge-union
+    # branches); checkpointing it probed 5.8 -> 7.3 s.
+    cc = connected_components(pairs, src="id_a", dst="id_b", assume_distinct=True)
     names = part.select(
         F.col("p_partkey").alias("entity_id"),
         F.col("p_name").alias("canonical_name"),
@@ -1587,12 +1584,12 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-standard ntile exactly; the DuckDB ntile oracle is the
     bit-level proof.
 
-    Plan shape (r5 verdict fix): the user aggregate is checkpointed
-    ONCE and all three rankings run in a SINGLE distributed-rank pass
+    Plan shape (r5 verdict fix): all three rankings run in a SINGLE
+    distributed-rank pass
     (``with_ntile_multi``: melt to (dim, key) rows in-row, one range
     shuffle over the melted frame, rank_within_dim = global_rank -
     dim*n, one groupBy pivot back) — not a chain of three
-    ``materialize=True`` checkpoints, whose barriers tripled the
+    ``with_ntile`` range cuts, whose checkpoint barriers tripled the
     materialization cost (0.23 s -> 2.06 s at sf0.1). Descending
     rankings enter as negated keys; every key is integral-or-2dp so
     the double widening is order-preserving."""
@@ -1603,16 +1600,12 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("frequency"),
         F.round(exact_decimal_sum(F.col("value"), 2), 2).alias("monetary"),
     )
-    # checkpoint the user aggregate itself: ONE events scan feeds the
-    # reference-instant aggregate, the enrichment, and every pass of
-    # the rank machinery below
-    per_user = per_user.localCheckpoint(eager=True)
     # reference instant = max over the per-user maxes (same value as a
     # direct max over purchases) and the user count, in ONE
     # metadata-scale driver round-trip (1-row collect, same sanctioned
     # pattern as the decontamination cutoff): recency then becomes a
-    # pure projection — no second events scan, no crossJoin pass —
-    # and the count sizes the rank shuffle without its own job
+    # pure projection — no crossJoin pass — and the count sizes the
+    # rank shuffle without its own job
     ref_us, n_users = per_user.agg(
         F.max("last_us"), F.count("*")
     ).collect()[0]
@@ -1803,13 +1796,11 @@ def q_apriori_triple_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    # op feeds the support filter AND the basket build — checkpoint so
-    # the scan + distinct shuffle run once, not per consumer
+    # op feeds the support filter AND the basket build
     op = (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .select("l_orderkey", F.col("p_brand").alias("item"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     freq_items = (
         op.groupBy("item")
@@ -2116,13 +2107,11 @@ def q_service_level_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sales = clean_sales(load_table(spark, sf_dir, "lineitem"))
     # One resample chain feeds BOTH the policy stats and the train
-    # scan — materialized so the fact is read once, not once per
-    # branch (same trade as the BM25 tf frame / dedup shingle index).
-    # Pre-gated with the flagship admission thresholds (r12): ranked
-    # feeds series_stats (which applies the semantic HAVING) and the
-    # train join against the ADMITTED policy keys — non-admitted
+    # scan. Pre-gated with the flagship admission thresholds (r12):
+    # ranked feeds series_stats (which applies the semantic HAVING) and
+    # the train join against the ADMITTED policy keys — non-admitted
     # series never survive either consumer, so dropping them before
-    # the winsorize/rank windows and the checkpoint is lossless.
+    # the winsorize/rank windows is lossless.
     from .flagship import MIN_TOTAL_SALES, MIN_WEEKS
 
     dense = weekly_dense_resample(
@@ -2130,7 +2119,7 @@ def q_service_level_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_span_weeks=MIN_WEEKS, min_total=MIN_TOTAL_SALES,
     )
     dense = winsorize_by_group(dense, KEYS, "units_sold", "units_w")
-    ranked = add_recency_rank(dense, KEYS, "week").localCheckpoint(eager=True)
+    ranked = add_recency_rank(dense, KEYS, "week")
     stats = series_stats(sales, dense_ranked=ranked)
     rop = reorder_point(F.col("ens"), safety_stock(F.col("sigma")))
     policy = stats.select(

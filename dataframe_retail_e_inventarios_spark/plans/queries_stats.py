@@ -361,13 +361,9 @@ def q_survival_km_signup_purchase(spark: SparkSession, sf_dir: str) -> DataFrame
             ).cast("long").alias("evt"),
         )
     )
-    grid = (
-        per_user.groupBy("dur")
-        .agg(
-            F.sum("evt").alias("d"),
-            F.sum(F.lit(1) - F.col("evt")).alias("c"),
-        )
-        .localCheckpoint(eager=True)
+    grid = per_user.groupBy("dur").agg(
+        F.sum("evt").alias("d"),
+        F.sum(F.lit(1) - F.col("evt")).alias("c"),
     )
     total = grid.agg(F.sum(F.col("d") + F.col("c")).alias("total"))
     prev = grid.select(
@@ -576,7 +572,7 @@ def q_psi_order_price_drift(
     g = binned.groupBy("bin").agg(
         F.sum("is_a").alias("n_a"),
         F.sum(F.lit(1) - F.col("is_a")).alias("n_b"),
-    ).localCheckpoint(eager=True)
+    )
     tot = g.agg(F.sum("n_a").alias("t_a"), F.sum("n_b").alias("t_b"))
     j = g.crossJoin(F.broadcast(tot))
     p_a = F.greatest(F.col("n_a") / F.col("t_a"), F.lit(1e-6))
@@ -639,10 +635,9 @@ def q_welch_ttest_price_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums overflow int64) — exact and associative under any shuffle
     order. The t/dof closed forms then run on doubles cast from those
     identical integers with an expression tree mirrored verbatim in
-    the oracle. One broadcast join + one 5-row aggregate, materialized
-    once (localCheckpoint) so the self-pair join neither rescans
-    orders nor plans a CartesianProduct — the 5-row right side
-    broadcasts into a nested-loop theta join.
+    the oracle. One broadcast join + one 5-row aggregate; the self-pair
+    theta join broadcasts into a nested-loop join, never a
+    CartesianProduct (tools/plan_audit.py pins both).
     """
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
@@ -656,10 +651,6 @@ def q_welch_ttest_price_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("c").alias("sx"),
             F.sum((F.col("c") * F.col("c")).cast("decimal(30,0)")).alias("sxx"),
         )
-        # 5 rows; materialize once so the a/b self-join below doesn't
-        # recompute the orders scan per side (2x full scan at 100 TB)
-        # and the theta join broadcasts instead of CartesianProduct.
-        .localCheckpoint(eager=False)
     )
 
     def _stats(side: str):

@@ -1722,7 +1722,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("k1") < F.col("k2"), F.col("k1")).otherwise(F.col("k2")).alias("ksrc"),
         F.when(F.col("k1") < F.col("k2"), F.col("p2")).otherwise(F.col("p1")).alias("dst"),
         F.when(F.col("k1") < F.col("k2"), F.col("k2")).otherwise(F.col("k1")).alias("kdst"),
-    ).localCheckpoint(eager=True)  # wedge join reads it twice, closer once
+    )
     e1, e2, e3 = oriented.alias("e1"), oriented.alias("e2"), oriented.alias("e3")
     tri = (
         e1.join(

@@ -320,7 +320,6 @@ def q_mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .groupBy("source")
         .agg(F.sum("n_tok").alias("tokens"))
-        .localCheckpoint(eager=True)
     )
     totals = per_source.agg(F.sum("tokens").alias("total_tokens"))
     raw = F.round(
@@ -419,11 +418,9 @@ def q_rollup_backfill_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.partitioning import backfill_partition_overwrite
 
     cutoff = 199801
-    # ONE lineitem scan (r13, guide §6 read-once / §2.3): the initial
-    # rollup and the restatement are both per-month integer aggregates,
-    # so one conditional groupBy delivers (all-rows, non-returned)
-    # partials together — previously the restated frame re-scanned the
-    # fact. Exact: counts and bround-cent sums are associative BIGINTs,
+    # ONE conditional aggregate (r13, guide §2.3): the initial rollup
+    # and the restatement are both per-month integer aggregates, so one
+    # groupBy delivers (all-rows, non-returned) partials together. Exact: counts and bround-cent sums are associative BIGINTs,
     # and a restated month with zero qualifying rows yields n_keep = 0
     # here exactly where the filtered re-aggregation yielded no row —
     # the n_keep > 0 filter reproduces that absence (which is what
@@ -438,7 +435,6 @@ def q_rollup_backfill_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(keep, F.lit(1))).alias("n_keep"),
             F.sum(F.when(keep, cents)).alias("rev_keep"),
         )
-        .localCheckpoint(eager=True)  # ~84 rows; both writes read it
     )
     work = tempfile.mkdtemp(prefix="spark_graft_backfill_")
     try:
@@ -505,11 +501,12 @@ def q_rollup_backfill_empty_restatement(spark: SparkSession, sf_dir: str) -> Dat
     cents = F.bround(F.col("l_extendedprice") * 100, 0).cast("long")
 
     cutoff = 199801
-    # ONE lineitem scan via conditional aggregation — same single-scan
-    # restructure as q_rollup_backfill_overwrite above (r13, guide §6);
-    # here the recall cutoff joins the keep predicate, and months whose
-    # restatement empties (1998-10..12) get n_keep = 0, reproducing the
-    # no-row absence the partition-deletion contract relies on.
+    # ONE lineitem scan via conditional aggregation — the restructure of
+    # q_rollup_backfill_overwrite above (r13, guide §6), checkpointed for
+    # both writes; here the recall cutoff joins the keep predicate, and
+    # months whose restatement empties (1998-10..12) get n_keep = 0,
+    # reproducing the no-row absence the partition-deletion contract
+    # relies on.
     keep = (F.col("l_returnflag") != "R") & (
         F.col("l_shipdate") < F.lit("1998-10-01").cast("date")
     )

@@ -204,7 +204,7 @@ def test_prebuilt_index_paths_match_derived(spark):
     )
 
     docs = load_table(spark, SF_SMOKE, "documents").limit(300)
-    idx = doc_shingles(docs, hashed=True, materialize=True)
+    idx = doc_shingles(docs, hashed=True)
     for max_df in (None, 40):
         jp_idx = {tuple(r) for r in jaccard_pairs(docs, 0.1, max_df=max_df, idx=idx).collect()}
         jp_raw = {tuple(r) for r in jaccard_pairs(docs, 0.1, max_df=max_df).collect()}

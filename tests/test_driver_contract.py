@@ -4,10 +4,13 @@ key sets, and tools/gate.sh must name tools that exist. A typo in any
 of these would crash the DRIVER's run (or the gate), not ours — fail
 here instead."""
 
+import os
 import re
 import subprocess
 import sys
 from pathlib import Path
+
+import pytest
 
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
@@ -46,3 +49,16 @@ def test_gate_script_names_existing_tools():
     missing = sorted(n for n in named if not (REPO / n).is_file())
     assert not missing, f"gate.sh names missing tools: {missing}"
     assert not re.search(r"\bgit\s", text), "gate.sh must not run git"
+
+
+@pytest.mark.parametrize("tool", ["plan_audit", "fuzz_oracles", "selfcheck", "recall"])
+def test_tool_imports_from_any_directory(tool, tmp_path):
+    """A tool finds the package and bench.py from its own path, not
+    from the directory it is started in."""
+    script = REPO / "tools" / f"{tool}.py"
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", f"import runpy; runpy.run_path({str(script)!r})"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]

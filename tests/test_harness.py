@@ -9,7 +9,7 @@ import pytest
 from dataframe_retail_e_inventarios_spark.registry import queries
 from tests.conftest import SF_SMOKE
 from tools import harness
-from tools.harness import best_of, formatted_plan, job_stages
+from tools.harness import best_of, formatted_plan, job_stages, unpersist_new_rdds
 
 
 def test_best_of_runs_fn_exactly_runs_times_and_returns_min(monkeypatch):
@@ -55,3 +55,19 @@ def test_formatted_plan_has_no_checkout_path(spark):
     text = formatted_plan(spark, df)
     assert str(Path(harness.__file__).resolve().parents[1]) + "/" not in text
     assert "<repo>/spark-warehouse/" in text
+
+
+def test_unpersist_new_rdds_frees_only_what_the_block_pinned(spark):
+    persisted = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    start = persisted()
+    before = spark.range(100).localCheckpoint(eager=True)
+    pinned_before = persisted() - start
+    assert pinned_before
+    with unpersist_new_rdds(spark):
+        inside = spark.range(50).localCheckpoint(eager=True)
+        pinned_inside = persisted() - start - pinned_before
+        assert pinned_inside
+        assert inside.count() == 50
+    assert not pinned_inside & persisted()
+    assert pinned_before <= persisted()
+    assert before.count() == 100

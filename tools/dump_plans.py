@@ -17,7 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dataframe_retail_e_inventarios_spark.registry import queries
 from dataframe_retail_e_inventarios_spark.session import get_spark
-from tools.harness import formatted_plan
+from tools.harness import formatted_plan, unpersist_new_rdds
 
 
 def main() -> None:
@@ -41,7 +41,8 @@ def main() -> None:
     qs = queries()
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
-        plan = formatted_plan(spark, qs[name](spark, sf_dir))
+        with unpersist_new_rdds(spark):
+            plan = formatted_plan(spark, qs[name](spark, sf_dir))
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)

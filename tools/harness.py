@@ -1,13 +1,15 @@
 """Measurement helpers shared by bench.py and tools/: the min-of-N timing
-loop, the formatted physical plan, and per-stage metrics of a job group
-read from the SparkContext's live status store (no UI or REST server
-needed, so it works under ``session.get_spark``'s ``spark.ui.enabled=false``).
+loop, the release of the blocks a run's checkpoints pin, the formatted
+physical plan, and per-stage metrics of a job group read from the
+SparkContext's live status store (no UI or REST server needed, so it
+works under ``session.get_spark``'s ``spark.ui.enabled=false``).
 """
 
 from __future__ import annotations
 
 import re
 import time
+from contextlib import contextmanager
 from pathlib import Path
 
 from py4j.protocol import Py4JJavaError
@@ -26,6 +28,22 @@ def best_of(fn, runs: int):
         out = fn()
         best = min(best, time.perf_counter() - t0)
     return best, out
+
+
+@contextmanager
+def unpersist_new_rdds(spark):
+    """Unpersist, on exit, every RDD persisted inside the block — the
+    blocks a run's ``localCheckpoint`` calls pin. Reading a released
+    frame again fails (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``), so the
+    block must enclose the run's last read; engine code never calls it."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    try:
+        yield
+    finally:
+        for rdd_id, rdd in jsc.getPersistentRDDs().items():
+            if rdd_id not in before:
+                rdd.unpersist(True)
 
 
 # Numbers in plan text that come from JVM-global counters, so the same

@@ -9,13 +9,15 @@ reported). Each run carries its own Spark job group, and the per-stage
 tasks, task time, shuffle read/write and input bytes of the LAST run are
 read from the live status store (tools/harness.job_stages), so the slow
 stage — scan, exchange, python eval — is attributable without guesswork
-(guide §1.1/§7.1). The session is ``session.get_spark``, the one tests
-and bench use. For the formatted plan, use tools/dump_plans.py.
+(guide §1.1/§7.1). The group holds the builder's eager jobs and the
+action, so ``task_s`` is their summed task time. A query's checkpoint
+blocks are freed before the next query starts. The session is
+``session.get_spark``, the one tests and bench use. For the formatted
+plan, use tools/dump_plans.py.
 """
 
 from __future__ import annotations
 
-import gc
 import itertools
 import json
 import os
@@ -25,22 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dataframe_retail_e_inventarios_spark.registry import queries
 from dataframe_retail_e_inventarios_spark.session import get_spark
-from tools.harness import best_of, job_stages
-
-
-def stage_report(spark, group: str) -> list[str]:
-    out = []
-    for job, stages in job_stages(spark, group):
-        out.append(f"  job {job.job_id:>3} [{job.name[:60]}]")
-        for s in stages:
-            out.append(
-                f"    stage {s['stage']:>4} tasks={s['tasks']:>3}"
-                f" taskTime={s['task_s']:7.2f}s"
-                f" shufR={s['shuffle_read'] >> 10}K"
-                f" shufW={s['shuffle_write'] >> 10}K"
-                f" in={s['input'] >> 10}K  {s['name'][:70]}"
-            )
-    return out
+from tools.harness import best_of, job_stages, unpersist_new_rdds
 
 
 def main() -> None:
@@ -73,13 +60,23 @@ def main() -> None:
             fn(spark, sf_dir).count()
             return group
 
-        gc.collect()
-        best, last_group = best_of(run, runs)
+        with unpersist_new_rdds(spark):
+            best, last_group = best_of(run, runs)
         sc.setLocalProperty("spark.jobGroup.id", None)
-        results[name] = round(best, 3)
-        print(f"\n=== {name}: min {best:.3f}s of {runs} runs")
-        for line in stage_report(spark, last_group):
-            print(line)
+        jobs = job_stages(spark, last_group)
+        task_s = sum(s["task_s"] for _, stages in jobs for s in stages)
+        results[name] = {"min_s": round(best, 3), "task_s": round(task_s, 3)}
+        print(f"\n=== {name}: min {best:.3f}s of {runs} runs, task {task_s:.2f}s")
+        for job, stages in jobs:
+            print(f"  job {job.job_id:>3} [{job.name[:60]}]")
+            for s in stages:
+                print(
+                    f"    stage {s['stage']:>4} tasks={s['tasks']:>3}"
+                    f" taskTime={s['task_s']:7.2f}s"
+                    f" shufR={s['shuffle_read'] >> 10}K"
+                    f" shufW={s['shuffle_write'] >> 10}K"
+                    f" in={s['input'] >> 10}K  {s['name'][:70]}"
+                )
     print("\n" + json.dumps(results))
 
 

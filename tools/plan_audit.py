@@ -31,15 +31,17 @@ Usage: python tools/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, ".")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bench import HEADLINE
 from dataframe_retail_e_inventarios_spark.registry import queries
 from dataframe_retail_e_inventarios_spark.session import get_spark
-from tools.harness import formatted_plan
+from tools.harness import formatted_plan, unpersist_new_rdds
 
 # Queries whose plans legitimately contain a cartesian/broadcast-nested
 # -loop product: broadcast 1-row aggregates (the repo-standard scalar
@@ -155,7 +157,7 @@ def write_plans_md(plans: dict[str, str], sf_dir: str) -> None:
         plan = plans[name]
         out.append(f"\n## {name}  (exchange mentions: {plan.count('Exchange')})\n")
         out.append("```\n" + plan.strip() + "\n```\n")
-    with open("PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("".join(out))
     print(f"wrote PLANS.md ({len(HEADLINE)} queries)")
 
@@ -174,7 +176,8 @@ def main() -> int:
     headline_plans: dict[str, str] = {}
     audit_names = sorted(set(CLAIMS) | set(HEADLINE))
     for name in audit_names:
-        plan = formatted_plan(spark, qs[name](spark, sf_dir))
+        with unpersist_new_rdds(spark):
+            plan = formatted_plan(spark, qs[name](spark, sf_dir))
         # global invariants (headline set = the hot paths)
         if name in HEADLINE:
             headline_plans[name] = plan

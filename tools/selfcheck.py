@@ -12,14 +12,16 @@ even when the driver samples a subset.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dataframe_retail_e_inventarios_spark.registry import oracle_sql, queries
 from dataframe_retail_e_inventarios_spark.session import get_spark
 from dataframe_retail_e_inventarios_spark.testing import compare_query
+from tools.harness import unpersist_new_rdds
 
 
 def main() -> int:
@@ -69,7 +71,8 @@ def main() -> int:
         t0 = time.time()
         try:
             if name in oracles:
-                res = compare_query(spark, name, fn, oracles[name], sf_dir)
+                with unpersist_new_rdds(spark):
+                    res = compare_query(spark, name, fn, oracles[name], sf_dir)
                 ok = res.ok
                 print(f"{res}  ({time.time()-t0:.1f}s)", flush=True)
                 report[name] = {
@@ -82,7 +85,8 @@ def main() -> int:
                     "sec": round(time.time() - t0, 2),
                 }
             else:
-                n = fn(spark, sf_dir).count()
+                with unpersist_new_rdds(spark):
+                    n = fn(spark, sf_dir).count()
                 ok = n >= 0
                 print(f"[ROWS] {name}: {n} rows  ({time.time()-t0:.1f}s)", flush=True)
                 report[name] = {
