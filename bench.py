@@ -97,7 +97,6 @@ HEADLINE = [
     "demand_intermittency",
     "flagship_inventory_partitioned",
     "skew_hot_key_revenue_plain",
-    "skew_hot_key_revenue_salted",
     # round 3, part 2: warehouse maintenance + corpus statistics
     "scd2_user_event_history",
     "group_holdout_split",

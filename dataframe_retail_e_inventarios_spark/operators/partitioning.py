@@ -1,6 +1,8 @@
 """Physical-layout operators for the 100 TB posture [SURVEY §4.2]:
 time-partitioned fact storage (partition pruning), salted joins for
-skewed keys, and bucketed tables for shuffle-free co-located joins.
+skewed keys, bucketed tables for shuffle-free co-located joins, and
+``compact_files``, the one writer for size-capped and range- or
+Z-clustered files.
 
 These don't change query semantics — they change what the scan reads
 and where the shuffle happens, which is the difference between a query
@@ -10,7 +12,7 @@ that runs and one that doesn't at 100 TB.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 
 
 def write_time_partitioned(
@@ -23,10 +25,6 @@ def write_time_partitioned(
         "_part", F.date_trunc(granularity, F.col(ts_col)).cast("date")
     )
     bucketed.write.mode("overwrite").partitionBy("_part").parquet(path)
-
-
-def read_time_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def salted_join(
@@ -73,30 +71,37 @@ def write_bucketed_table(
 def compact_files(
     df: DataFrame,
     path: str,
-    sort_col: str | None = None,
+    sort_col: str | Column | None = None,
     max_records_per_file: int = 1_000_000,
     n_files: int | None = None,
 ) -> None:
-    """Small-files compaction with optional range layout.
+    """The package's one layout writer: small-files compaction with an
+    optional range layout.
 
     A streaming/hourly ingest leaves thousands of tiny files per
     partition; scan cost becomes task-scheduling overhead instead of
-    IO. Compaction = rewrite at a target file size. With ``sort_col``
-    the rewrite uses repartitionByRange + sortWithinPartitions, so
-    each output file covers a NARROW value range — parquet footer
-    min/max stats then let a selective range predicate skip whole
-    files/row-groups at read time (data skipping without an index;
-    the same reason Delta/Iceberg Z-order exists, in its 1-D form).
+    IO. Compaction = rewrite at a target file size.
+    ``max_records_per_file`` caps every output file whatever the task
+    count, so a skewed task can't emit one giant file either.
+
+    With ``sort_col`` (a column name or any ``Column`` key) the rewrite
+    uses repartitionByRange + sortWithinPartitions, so each output file
+    covers a NARROW key range — parquet footer min/max stats then let a
+    selective range predicate skip whole files/row-groups at read time
+    (data skipping without an index). A name gives the 1-D layout;
+    ``operators/zorder.zorder_layout`` passes a Morton key to cluster
+    on several columns at once. The key itself is never written.
     """
     w = df
-    if sort_col:
+    if sort_col is not None:
         # ALWAYS range-repartition when a sort layout is requested:
         # sortWithinPartitions over the existing (arbitrary) hash
         # partitioning would leave file min/max ranges overlapping and
         # void the skipping claim above. Without an explicit n_files,
         # keep the current partition count as the output file count.
         n = n_files or df.rdd.getNumPartitions()
-        w = w.repartitionByRange(n, F.col(sort_col)).sortWithinPartitions(sort_col)
+        key = F.col(sort_col) if isinstance(sort_col, str) else sort_col
+        w = w.repartitionByRange(n, key).sortWithinPartitions(key)
     elif n_files:
         w = w.repartition(n_files)
     (

@@ -9,8 +9,9 @@ file then covers a small hyper-rectangle-ish region of the k-D value
 space, so min/max stats stay narrow on ALL k columns and a
 conjunctive box predicate skips files in every dimension at once.
 This is the raw-parquet form of Delta/Iceberg ``ZORDER BY``
-(public docs; no table format needed — the key is dropped before
-write, only the row ORDER persists).
+(public docs; no table format needed — the key is only the
+``compact_files`` sort expression, never a written column; only the
+row ORDER persists).
 
 Caveat (inherent to Morton order): a box that straddles a high-bit
 boundary (e.g. centered on the 0.5/0.5 corner of the normalized
@@ -30,6 +31,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from .partitioning import compact_files
+
 
 def morton_key(scaled: list[Column], bits: int) -> Column:
     """Interleave ``bits`` low bits of each (already quantized,
@@ -44,12 +47,11 @@ def morton_key(scaled: list[Column], bits: int) -> Column:
     return z
 
 
-def with_zvalue(
-    df: DataFrame, cols: list[str], bits: int = 12, out_col: str = "_z"
-) -> DataFrame:
-    """Append the Morton key over ``cols`` (numeric). Column ranges are
-    measured with one aggregate (metadata-scale collect: 2 numbers per
-    column) and each value is quantized to ``bits`` bits of its range."""
+def zvalue(df: DataFrame, cols: list[str], bits: int = 12) -> Column:
+    """The Morton key over ``cols`` (numeric) of ``df``. Column ranges
+    are measured with one aggregate (metadata-scale collect: 2 numbers
+    per column) and each value is quantized to ``bits`` bits of its
+    range."""
     if not 1 <= len(cols) * bits <= 63:
         raise ValueError("zorder: need 1 <= n_cols * bits <= 63")
     stats = df.agg(
@@ -63,7 +65,7 @@ def with_zvalue(
         span = (mx - mn) or 1.0
         q = F.floor((F.col(c).cast("double") - F.lit(mn)) / F.lit(span) * F.lit(top))
         scaled.append(F.least(F.lit(top), F.greatest(F.lit(0), q)).cast("long"))
-    return df.withColumn(out_col, morton_key(scaled, bits))
+    return morton_key(scaled, bits)
 
 
 def zorder_layout(
@@ -75,16 +77,15 @@ def zorder_layout(
     max_records_per_file: int = 1_000_000,
 ) -> None:
     """Rewrite ``df`` at ``path`` clustered along the Morton curve of
-    ``cols``: range-partition on the z-key (disjoint z-ranges per
-    file), sort within each file, drop the key. Conjunctive range
-    predicates over any subset of ``cols`` then skip files/row-groups
-    via footer min/max — measured in tests/test_zorder.py."""
-    z = with_zvalue(df, cols, bits=bits)
-    (
-        z.repartitionByRange(n_files, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
-        .parquet(path)
+    ``cols``: ``compact_files`` range-partitions on the z-key (disjoint
+    z-ranges per file) and sorts within each file; the key is not
+    written. Conjunctive range predicates over any subset of ``cols``
+    then skip files/row-groups via footer min/max — measured in
+    tests/test_zorder.py."""
+    compact_files(
+        df,
+        path,
+        sort_col=zvalue(df, cols, bits),
+        n_files=n_files,
+        max_records_per_file=max_records_per_file,
     )

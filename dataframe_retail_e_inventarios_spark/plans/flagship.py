@@ -45,15 +45,11 @@ from ..sources.readers import load_table
 KEYS = ["product_id", "store_id"]
 
 
-def series_stats(
-    sales: DataFrame,
-    keys: list[str] | None = None,
-    dense_ranked: DataFrame | None = None,
-) -> DataFrame:
+def series_stats(sales: DataFrame, dense_ranked: DataFrame | None = None) -> DataFrame:
     """Per-series scalar stats for the whole reference pipeline
     (PRACTICA3.py:85-175, MA-member ensemble), gates applied.
 
-    Output: keys + n_weeks, total_raw, ens, mape_raw, sigma,
+    Output: KEYS + n_weeks, total_raw, ens, mape_raw, sigma,
     last_stock, test_vals (the 4 winsorized test actuals, week order).
 
     ``dense_ranked`` lets a caller that ALSO consumes the winsorized
@@ -61,7 +57,6 @@ def series_stats(
     typically materialized — instead of this function re-running the
     resample chain for a second fact scan.
     """
-    keys = keys or KEYS
     if dense_ranked is not None:
         dense = dense_ranked
     else:
@@ -72,17 +67,17 @@ def series_stats(
         # it out of the winsorize/rank windows (sf0.1: 591k -> 8.3k
         # series before the gap-fill).
         dense = weekly_dense_resample(
-            sales, keys, "invoice_date", "units_sold",
+            sales, KEYS, "invoice_date", "units_sold",
             min_span_weeks=MIN_WEEKS, min_total=MIN_TOTAL_SALES,
         )
-        dense = winsorize_by_group(dense, keys, "units_sold", "units_w")
-        dense = add_recency_rank(dense, keys, "week")
+        dense = winsorize_by_group(dense, KEYS, "units_sold", "units_w")
+        dense = add_recency_rank(dense, KEYS, "week")
 
     rn = F.col("rn")
     t = F.col("units_w")
     is_test = rn <= HORIZON
     per_series = (
-        dense.groupBy(*keys)
+        dense.groupBy(*KEYS)
         .agg(
             F.count("*").alias("n_weeks"),
             F.sum("units_sold").alias("total_raw"),

@@ -47,11 +47,9 @@ def load_ventas(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def forecast_inventory(
-    sales: DataFrame, use_models: bool = False, keys: list[str] | None = None
-) -> DataFrame:
+def forecast_inventory(sales: DataFrame, use_models: bool = False) -> DataFrame:
     """The full PRACTICA3 per-series pipeline over any cleaned sales
-    frame (columns: keys + invoice_date + units_sold).
+    frame (columns: product_id, store_id, invoice_date, units_sold).
 
     ``use_models=False`` (default): the all-native plan — MA-only
     ensemble, zero Python UDFs, oracle-checkable.
@@ -60,24 +58,23 @@ def forecast_inventory(
     their numpy counterparts when not, plus the moving average).
     Both return exactly the reference's eight result columns.
     """
-    keys = keys or KEYS
     if use_models:
         from ..operators.forecast_udf import forecast_with_models
 
         dense = weekly_dense_resample(
-            sales, keys, "invoice_date", "units_sold",
+            sales, KEYS, "invoice_date", "units_sold",
             min_span_weeks=MIN_WEEKS, min_total=MIN_TOTAL_SALES,
         )
         return forecast_with_models(dense).drop("MA_Member")
 
     from .flagship import series_stats
 
-    stats = series_stats(sales, keys)
+    stats = series_stats(sales)
     inv = inventory_columns(F.col("sigma"), F.col("ens"), F.col("last_stock"))
     horizon_fill = F.array_repeat(F.col("ens"), HORIZON)
     return stats.select(
-        F.col(keys[0]).cast("string").alias("SKU"),
-        F.col(keys[1]).cast("string").alias("Store"),
+        F.col("product_id").cast("string").alias("SKU"),
+        F.col("store_id").cast("string").alias("Store"),
         F.bround("mape_raw", 3).alias("MAPE"),
         horizon_fill.alias("Forecast"),
         F.col("test_vals").alias("Test"),

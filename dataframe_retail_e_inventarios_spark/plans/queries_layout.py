@@ -33,6 +33,7 @@ from pathlib import Path
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.exact import exact_money_sum_sql
 from ..operators.partitioning import write_time_partitioned
 from ..registry import register
 from ..sources.readers import load_table
@@ -94,17 +95,16 @@ def _partitioned_oracle() -> str:
 register("flagship_inventory_partitioned", q_flagship_partitioned, _partitioned_oracle())
 
 
-# -- deliberately skewed join: plain (AQE-split) + salted twins ------------
+# -- deliberately skewed join, split by AQE --------------------------------
 #
 # The testdata's natural part-key distribution is near-uniform, so the
 # skew demo CONSTRUCTS a pathological key deterministically: 60% of
 # fact rows remap to part key 1 (hk below). Both engines apply the
-# identical remap, so the two registered twins — the plain shuffle
-# join that AQE's skew-split must save at runtime, and the explicit
-# salted rewrite that never exposes the hot key to a single task —
-# are hash-checked against ONE oracle, proving the physical strategy
-# is semantics-preserving in both directions. The AQE skew=true plan
-# assertion lives in tests/test_partitioning.py.
+# identical remap, so the plain shuffle join that AQE's skew-split must
+# save at runtime is hash-checked against the plain SQL join. The AQE
+# skew=true plan assertion lives in tests/test_partitioning.py. The
+# explicit salted rewrite is ``skew_salted_brand_revenue``
+# (queries_trend.py), which reuses ``_brand_revenue``.
 
 def _hot_key_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "lineitem").select(
@@ -152,25 +152,10 @@ def q_skew_hot_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _brand_revenue(fact.join(part, "hk"))
 
 
-def q_skew_hot_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted twin of q_skew_hot_plain (operators/partitioning.
-    salted_join): the hot key is spread across 8 deterministic salt
-    buckets before the shuffle, covering the cases AQE cannot split
-    (e.g. a skewed build side feeding a downstream aggregate)."""
-    from ..operators.partitioning import salted_join
-
-    part = load_table(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("hk"), "p_brand"
-    )
-    return _brand_revenue(
-        salted_join(_hot_key_fact(spark, sf_dir), part, "hk", salt_buckets=8)
-    )
-
-
-def _skew_oracle() -> str:
-    from ..functions.exact import exact_money_sum_sql
-
-    return f"""
+register(
+    "skew_hot_key_revenue_plain",
+    q_skew_hot_plain,
+    f"""
 WITH f AS (
   SELECT CASE WHEN l_orderkey % 10 < 6 THEN 1 ELSE l_partkey END AS hk,
          l_extendedprice, l_discount
@@ -181,8 +166,5 @@ SELECT p_brand,
        count(*) AS n_lines
 FROM f JOIN part ON hk = p_partkey
 GROUP BY 1
-"""
-
-
-register("skew_hot_key_revenue_plain", q_skew_hot_plain, _skew_oracle())
-register("skew_hot_key_revenue_salted", q_skew_hot_salted, _skew_oracle())
+""",
+)

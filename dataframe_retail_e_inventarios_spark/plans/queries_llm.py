@@ -1354,15 +1354,7 @@ def q_setsim_prefix(
     )
 
 
-def dedup_setsim_prefix_sql(threshold: float = 0.5) -> str:
-    return f"""
-WITH {_SHINGLE_INDEX_SQL.strip()}
-SELECT id_a, id_b, round(jaccard, 4) AS jaccard
-FROM jac WHERE jaccard >= {threshold}
-"""
-
-
-register("dedup_setsim_prefix", q_setsim_prefix, dedup_setsim_prefix_sql())
+register("dedup_setsim_prefix", q_setsim_prefix, dedup_ngram_jaccard_sql(0.5))
 
 
 # -- N2: directed containment pairs (quote/excerpt detection) --------------

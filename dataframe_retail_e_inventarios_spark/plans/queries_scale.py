@@ -27,12 +27,6 @@ from ..registry import register
 from ..sources.readers import load_table
 
 
-def _epoch_s(c) -> F.Column:
-    # Wall-clock epoch on the normalized TIMESTAMP_NTZ columns
-    # (functions/timewall.py; unix_micros is LTZ-only).
-    return wall_epoch_seconds(c)
-
-
 # -- sliding windows (1 h wide, 30 min hop) --------------------------------
 def q_sliding_counts(
     spark: SparkSession, sf_dir: str, *, width_min: int = 60, hop_min: int = 30
@@ -63,7 +57,7 @@ def q_sliding_counts(
             F.round(exact_decimal_sum(F.col("value"), 2), 2).alias("total_value"),
         )
         .select(
-            _epoch_s(F.col("win.start")).alias("window_start_epoch"),
+            wall_epoch_seconds(F.col("win.start")).alias("window_start_epoch"),
             "event_type",
             "n",
             "total_value",
@@ -119,7 +113,7 @@ def q_cdc_latest_state(
     return merged.select(
         "user_id",
         "event_type",
-        _epoch_s(F.col("ts")).alias("last_epoch"),
+        wall_epoch_seconds(F.col("ts")).alias("last_epoch"),
         "value",
     )
 

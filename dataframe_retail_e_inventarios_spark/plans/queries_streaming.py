@@ -23,12 +23,6 @@ def _exact2(c):
     return _exact_sum(c, 2)
 
 
-def _epoch_s(c) -> F.Column:
-    # Wall-clock epoch: load_table normalizes ts to TIMESTAMP_NTZ, so
-    # unix_micros (LTZ-only) would not even resolve [timewall.py].
-    return wall_epoch_seconds(c)
-
-
 # -- tumbling hourly counts per event type ---------------------------------
 def q_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -77,8 +71,8 @@ def q_sessions(
         .withColumn("session_no", F.sum("new_s").over(w.rowsBetween(Window.unboundedPreceding, 0)))
     )
     return sessions.groupBy("user_id", "session_no").agg(
-        _epoch_s(F.min("ts")).alias("session_start_epoch"),
-        _epoch_s(F.max("ts")).alias("session_last_epoch"),
+        wall_epoch_seconds(F.min("ts")).alias("session_start_epoch"),
+        wall_epoch_seconds(F.max("ts")).alias("session_last_epoch"),
         F.count("*").alias("n_events"),
         F.round(_exact2(F.col("value")), 2).alias("total_value"),
     )

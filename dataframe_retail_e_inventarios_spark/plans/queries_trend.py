@@ -721,6 +721,7 @@ def q_salted_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the keys AQE can't split, e.g. a skewed build side feeding a
     downstream aggregate.)"""
     from ..operators.partitioning import salted_join
+    from .queries_layout import _brand_revenue
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_extendedprice", "l_discount"
@@ -728,13 +729,7 @@ def q_salted_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("l_partkey"), "p_brand"
     )
-    joined = salted_join(li, part, "l_partkey", salt_buckets=8)
-    return joined.groupBy("p_brand").agg(
-        exact_money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
-            "revenue"
-        ),
-        F.count("*").alias("n_lines"),
-    )
+    return _brand_revenue(salted_join(li, part, "l_partkey", salt_buckets=8))
 
 
 register(

@@ -1,8 +1,9 @@
 """Query registry: every implemented operator exposed as a named query.
 
 Each entry pairs a Spark callable ``(spark, sf_dir) -> DataFrame`` with
-a DuckDB oracle SQL string (or None for genuinely non-SQL-expressible
-ops, which the driver checks rows-only). ``__spark_entry__.py`` is a
+the DuckDB oracle SQL string it is hash-checked against; every query has
+one (implementation-defined outputs are gated through deterministic
+sub-outputs or tolerance bands). ``__spark_entry__.py`` is a
 thin adapter over this module. ``queries()`` and ``oracle_sql()`` return
 the entries in registration order; ``tools/selfcheck.py`` checks every
 one, so no consumer depends on that order.
@@ -20,12 +21,11 @@ _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str] = {}
 
 
-def register(name: str, fn: QueryFn, oracle: str | None) -> None:
+def register(name: str, fn: QueryFn, oracle: str) -> None:
     if name in _QUERIES:
         raise ValueError(f"duplicate query name: {name}")
     _QUERIES[name] = fn
-    if oracle is not None:
-        _ORACLES[name] = oracle
+    _ORACLES[name] = oracle
 
 
 def queries() -> dict[str, QueryFn]:

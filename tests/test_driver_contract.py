@@ -33,7 +33,7 @@ def test_entry_exports():
     qs = entrymod.queries()
     oq = entrymod.oracle_sql()
     assert callable(entrymod.entry)
-    assert set(oq) <= set(qs)
+    assert set(oq) == set(qs)
     assert len(qs) == len(queries())
     assert set(oq) == set(oracle_sql())
     # every oracle is a non-empty SQL string

@@ -7,7 +7,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from dataframe_retail_e_inventarios_spark.operators.partitioning import (
-    read_time_partitioned,
     salted_join,
     write_bucketed_table,
     write_time_partitioned,
@@ -20,7 +19,7 @@ def test_partition_pruning(spark, tmp_path):
     li = load_table(spark, SF_SMOKE, "lineitem")
     path = str(tmp_path / "li_part")
     write_time_partitioned(li, path, "l_shipdate", "year")
-    back = read_time_partitioned(spark, path)
+    back = spark.read.parquet(path)
 
     q = back.filter(F.col("_part") == "1998-01-01")
     plan = q._jdf.queryExecution().executedPlan().toString()
@@ -196,13 +195,13 @@ def test_registered_hot_key_query_gets_aqe_skew_split(spark):
 
 
 def test_salted_twin_spreads_hot_key_across_tasks(spark):
-    """The salted twin's shuffle key must be (hk, _salt): the hot key's
-    rows land in 8 distinct salt buckets, so no single task owns 60%
-    of the fact. Asserted on the plan (salt in the join keys) and on
-    the data (the hot key really occupies >1 bucket)."""
-    import pyspark.sql.functions as F
-
-    from dataframe_retail_e_inventarios_spark.operators.partitioning import salted_join
+    """On the hot-key fact of ``skew_hot_key_revenue_plain`` (60% of
+    rows on one key), ``salted_join``'s salt (the row's xxhash64 mod
+    8, recomputed here) puts the hot key's rows in all 8 salt buckets,
+    so a salted join of that fact gives no single task 60% of it. The
+    plan side (``_salt`` in the join keys) is asserted on the
+    registered ``skew_salted_brand_revenue`` in
+    tests/test_plan_quality.py."""
     from dataframe_retail_e_inventarios_spark.plans.queries_layout import _hot_key_fact
 
     fact = _hot_key_fact(spark, SF_SMOKE)
@@ -243,6 +242,29 @@ def test_compaction_reduces_files_and_preserves_content(spark, tmp_path):
         F.sum(F.bround(F.col("l_extendedprice") * 100, 0).cast("long")),
     ).collect()[0]
     assert tuple(a) == tuple(b)
+
+
+def test_compaction_caps_records_per_file(spark, tmp_path):
+    """max_records_per_file splits one fat task's output: no file holds
+    more rows than the cap, and no row is lost."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from dataframe_retail_e_inventarios_spark.operators.partitioning import (
+        compact_files,
+    )
+
+    ev = load_table(spark, SF_SMOKE, "events").coalesce(1)  # one fat task
+    out = str(tmp_path / "capped")
+    compact_files(ev, out, max_records_per_file=200)
+    counts = [
+        pq.ParquetFile(f).metadata.num_rows
+        for f in glob.glob(f"{out}/part-*.parquet")
+    ]
+    assert len(counts) >= 3  # the fat task was split
+    assert max(counts) <= 200
+    assert sum(counts) == ev.count()
 
 
 def test_range_compaction_enables_file_skipping(spark, tmp_path):

@@ -1,14 +1,18 @@
 """Z-order layout: Morton key correctness and the 2-D skipping claim
-— a conjunctive box predicate must read fewer rows from the z-ordered
-layout than from a 1-D-sorted layout of the same file count."""
+— a band predicate on the second clustered column must read fewer rows
+from the z-ordered layout than from a 1-D-sorted layout of the same
+file count, and every file's footer span narrows on both columns."""
 
+import glob
+
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 
 from dataframe_retail_e_inventarios_spark.operators.partitioning import compact_files
 from dataframe_retail_e_inventarios_spark.operators.zorder import (
     morton_key,
-    with_zvalue,
     zorder_layout,
+    zvalue,
 )
 from dataframe_retail_e_inventarios_spark.sources.readers import load_table
 from tests.conftest import SF_SMOKE
@@ -32,9 +36,9 @@ def test_morton_key_matches_reference_interleave(spark):
         assert r.z == _interleave(r.x, r.y, 4), (r.x, r.y)
 
 
-def test_with_zvalue_preserves_rows_and_is_native(spark):
+def test_zvalue_preserves_rows_and_is_native(spark):
     li = load_table(spark, SF_SMOKE, "lineitem").select("l_orderkey", "l_partkey")
-    z = with_zvalue(li, ["l_orderkey", "l_partkey"], bits=8)
+    z = li.withColumn("_z", zvalue(li, ["l_orderkey", "l_partkey"], bits=8))
     assert z.count() == li.count()
     plan = z._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -81,3 +85,33 @@ def test_zorder_skips_on_the_second_dimension(spark, tmp_path):
     # the 1-D layout reads every file (no partkey clustering); the
     # z-layout skips the cell-rows outside the band
     assert read_z < read_linear / 2, (read_z, read_linear)
+
+
+def _file_spans(path, col):
+    spans = []
+    for f in sorted(glob.glob(f"{path}/part-*.parquet")):
+        md = pq.ParquetFile(f).metadata
+        idx = md.schema.names.index(col)
+        stats = [md.row_group(i).column(idx).statistics for i in range(md.num_row_groups)]
+        spans.append((min(s.min for s in stats), max(s.max for s in stats)))
+    return spans
+
+
+def test_zorder_narrows_both_dimensions(spark, tmp_path):
+    """Per-file footer ranges must be materially narrower than the
+    global range on BOTH clustered columns (a 1-D range layout narrows
+    only its own column — that contrast is the point of interleaving)."""
+    ev = load_table(spark, SF_SMOKE, "events")
+    out = str(tmp_path / "zorder")
+    zorder_layout(ev, out, ["user_id", "value"], n_files=16)
+    assert spark.read.parquet(out).count() == ev.count()
+
+    lo_u, hi_u, lo_v, hi_v = ev.agg(
+        F.min("user_id"), F.max("user_id"), F.min("value"), F.max("value")
+    ).first()
+    for col, glo, ghi in (("user_id", lo_u, hi_u), ("value", lo_v, hi_v)):
+        spans = _file_spans(out, col)
+        assert len(spans) >= 8
+        gspan = float(ghi - glo) or 1.0
+        avg_frac = sum((hi - lo) / gspan for lo, hi in spans) / len(spans)
+        assert avg_frac < 0.7, (col, avg_frac)

@@ -18,6 +18,7 @@ a failure is always a real engine divergence, not float-repr noise.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
@@ -603,7 +604,9 @@ def _targets():
         ),
         "dedup_setsim_prefix": (
             qllm.q_setsim_prefix,
-            qllm.dedup_setsim_prefix_sql,
+            # prefix filtering is lossless: the oracle is all-pairs
+            # Jaccard, at this query's own default threshold
+            functools.partial(qllm.dedup_ngram_jaccard_sql, threshold=0.5),
             lambda r: dict(
                 threshold=r.choice([0.1, 0.3, 0.5, 0.7, 0.9, 0.95])
             ),

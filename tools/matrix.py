@@ -36,15 +36,9 @@ CONFIGS = [
 
 
 def _is_bad(r: dict) -> bool:
-    """A row fails the gate iff: it errored, an oracle compare
-    mismatched, or a rows-only query returned zero rows (the weaker
-    driver check those rows get)."""
-    err = r.get("err")
-    if err == "no_oracle":
-        return not (r.get("spark_rows") or 0) > 0
-    if err is not None:
-        return True
-    return not (
+    """A row fails the gate iff it errored or its oracle compare
+    mismatched."""
+    return r.get("err") is not None or not (
         r.get("rows_match") and r.get("schema_match") and r.get("hash_match")
     )
 

@@ -1,10 +1,12 @@
-"""Quantified quality evidence for the rows-only ANN queries.
+"""Quantified quality evidence for the approximate ANN queries.
 
 The four approximate-nearest-neighbor queries (LSH-bucketed, IVF
-fixed-grid, IVF k-means, PQ-ADC) are rows-only in the driver's
-correctness gate by construction — an approximate result has no SQL
-oracle. Their quality evidence lived only in pytest floors (r4 verdict
-#7); this tool promotes it into a committed artifact: it runs the
+fixed-grid, IVF k-means, PQ-ADC) are hash-checked against oracles that
+replay the same approximation or check a planted-recall floor, which
+proves each computes what it claims but not how close its answer is to
+the exact neighbours. That
+quality evidence lived only in pytest floors (r4 verdict #7); this tool
+promotes it into a committed artifact: it runs the
 REGISTERED queries themselves (exactly what the driver runs) and the
 exact brute-force baseline ``ann_cosine_topk`` on the same sf dir, and
 records mean/min recall@k per query.

@@ -1,12 +1,11 @@
-"""Run every registered query against its DuckDB oracle (or rows-only)
-at a given scale factor. Usage:
+"""Run every registered query against its DuckDB oracle at a given
+scale factor. Usage:
 
     python tools/selfcheck.py [--json OUT.json] [sf_dir] [name_filter ...]
 
 With --json, writes a driver-shaped report: one row per query with
-rows/schema/hash match flags (oracle-less queries get err=no_oracle),
-so the full registry has committed hard-signal evidence every round
-even when the driver samples a subset.
+rows/schema/hash match flags, so the full registry has committed
+hard-signal evidence even when a later check samples a subset.
 """
 
 from __future__ import annotations
@@ -70,34 +69,19 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            if name in oracles:
-                with unpersist_new_rdds(spark):
-                    res = compare_query(spark, name, fn, oracles[name], sf_dir)
-                ok = res.ok
-                print(f"{res}  ({time.time()-t0:.1f}s)", flush=True)
-                report[name] = {
-                    "rows_match": res.rows_spark == res.rows_oracle,
-                    "schema_match": not any("columns differ" in i for i in res.issues),
-                    "hash_match": res.ok,
-                    "spark_rows": res.rows_spark,
-                    "oracle_rows": res.rows_oracle,
-                    "err": None if ok else "; ".join(res.issues[:3]),
-                    "sec": round(time.time() - t0, 2),
-                }
-            else:
-                with unpersist_new_rdds(spark):
-                    n = fn(spark, sf_dir).count()
-                ok = n >= 0
-                print(f"[ROWS] {name}: {n} rows  ({time.time()-t0:.1f}s)", flush=True)
-                report[name] = {
-                    "rows_match": None,
-                    "schema_match": None,
-                    "hash_match": None,
-                    "spark_rows": n,
-                    "oracle_rows": None,
-                    "err": "no_oracle",
-                    "sec": round(time.time() - t0, 2),
-                }
+            with unpersist_new_rdds(spark):
+                res = compare_query(spark, name, fn, oracles[name], sf_dir)
+            ok = res.ok
+            print(f"{res}  ({time.time()-t0:.1f}s)", flush=True)
+            report[name] = {
+                "rows_match": res.rows_spark == res.rows_oracle,
+                "schema_match": not any("columns differ" in i for i in res.issues),
+                "hash_match": res.ok,
+                "spark_rows": res.rows_spark,
+                "oracle_rows": res.rows_oracle,
+                "err": None if ok else "; ".join(res.issues[:3]),
+                "sec": round(time.time() - t0, 2),
+            }
         except Exception as e:
             ok = False
             print(f"[ERR ] {name}: {type(e).__name__}: {str(e)[:500]}", flush=True)
