@@ -301,27 +301,12 @@ DEMO = [
     # here, because its wall is 11 batches x the stateful-join floor.
     "streaming_view_purchase_join",
     "streaming_view_purchase_join_bounded",
-    # profile_lineitem_columns (r7 verdict #3): the EXACT multi-
-    # distinct profile — Catalyst's Expand multiplies scanned row
-    # volume by the distinct-agg count, which is the documented reason
-    # profile_lineitem_columns_approx (HLL, no Expand, in LIGHT) is
-    # the production default. The exact twin keeps its full value-hash
-    # oracle and certifies the approx one via test bounds; timed here.
-    "profile_lineitem_columns",
     # streaming_late_data_watermark (r8 verdict #8): 9.1 s of LIGHT
     # wall that is six mtime-ordered micro-batches of replay machinery
     # — the lateness experiment IS the query — identical anatomy to
     # the other drains above, so it is timed once here, not min-of-2
     # in LIGHT.
     "streaming_late_data_watermark",
-    # profile_lineitem_columns_approx (r10): since its promotion to the
-    # certification contract it deliberately pays the exact twin's
-    # Expand pass beside the HLL scan (r10 retime: 8.8 s isolated, was
-    # 1.4 s as the raw sketch) — the same multi-distinct anatomy that
-    # put profile_lineitem_columns here. The Expand-free production
-    # operator (operators/profiling.column_profile_approx) is what the
-    # certification certifies.
-    "profile_lineitem_columns_approx",
 ]
 
 # Scale-curve subset: the heaviest headline queries (r02 timings),

@@ -28,12 +28,12 @@ SERVICE_LEVEL_Z = 1.645  # ~95% service level (PRACTICA3.py:39)
 LEAD_TIME_WEEKS = 0.4285  # ~3 days (PRACTICA3.py:40)
 
 
-def safety_stock(sigma: Column, z: float = SERVICE_LEVEL_Z, lead_time: float = LEAD_TIME_WEEKS) -> Column:
-    return F.lit(z) * sigma * F.lit(math.sqrt(lead_time))
+def safety_stock(sigma: Column) -> Column:
+    return F.lit(SERVICE_LEVEL_Z) * sigma * F.lit(math.sqrt(LEAD_TIME_WEEKS))
 
 
-def reorder_point(avg_forecast: Column, ss: Column, lead_time: float = LEAD_TIME_WEEKS) -> Column:
-    return avg_forecast * F.lit(lead_time) + ss
+def reorder_point(avg_forecast: Column, ss: Column) -> Column:
+    return avg_forecast * F.lit(LEAD_TIME_WEEKS) + ss
 
 
 def qty_to_order(rop: Column, last_stock: Column) -> Column:

@@ -236,28 +236,20 @@ def holt_winters_forecast_many(
     return out  # type: ignore[return-value]
 
 
-def fourier_trend_forecast(
-    y: np.ndarray,
-    t_days: np.ndarray,
-    horizon: int,
-    step_days: float = 7.0,
-    n_changepoints: int = 5,
-    fourier_order: int = 3,
-    period_days: float = 365.25,
-    ridge: float = 1.0,
-) -> np.ndarray:
+def fourier_trend_forecast(y: np.ndarray, t_days: np.ndarray, horizon: int) -> np.ndarray:
     """Prophet-style decomposition fit by ridge least squares.
 
     Design matrix = [1, t, (t - cp_i)+ ...] piecewise-linear trend with
-    ``n_changepoints`` knots at time quantiles of the FIRST 80% of the
-    sample (Prophet's changepoint_range default — no knots in the tail
-    that the forecast extrapolates through), plus ``fourier_order``
-    sin/cos pairs of a ``period_days`` seasonality — yearly harmonics,
-    matching the reference's yearly_seasonality=True, weekly/daily off
+    up to 5 knots at time quantiles of the FIRST 80% of the sample
+    (Prophet's changepoint_range default — no knots in the tail that
+    the forecast extrapolates through), plus 3 sin/cos pairs of a
+    365.25-day seasonality — yearly harmonics, matching the
+    reference's yearly_seasonality=True, weekly/daily off
     (PRACTICA3.py:119-124). The single L2-regularized lstsq solve plays
     the role of Prophet's MAP estimate (changepoint_prior_scale is a
-    Laplace prior on the knot deltas; ridge is the L2 cousin). The
-    intercept and base slope are left unpenalized, as in Prophet.
+    Laplace prior on the knot deltas; a unit ridge is the L2 cousin).
+    The intercept and base slope are left unpenalized, as in Prophet.
+    The forecast steps are 7 days apart.
     """
     y = np.asarray(y, dtype=float)
     t = np.asarray(t_days, dtype=float)
@@ -268,7 +260,7 @@ def fourier_trend_forecast(
         return np.full(horizon, float(np.mean(y)))
     span = t[-1] - t[0] if t[-1] > t[0] else 1.0
     ts = (t - t[0]) / span  # scale to [0, 1]: one ridge for all series
-    n_cp = min(n_changepoints, max(n // 4, 0))
+    n_cp = min(5, max(n // 4, 0))
     cps = (
         np.quantile(ts, np.linspace(0.1, 0.8, n_cp)) if n_cp > 0 else np.empty(0)
     )
@@ -279,8 +271,8 @@ def fourier_trend_forecast(
             cols.append(np.maximum(tt - c, 0.0))
         # Fourier terms use UNSCALED days so the period is physical.
         td = tt * span + t[0]
-        for k in range(1, fourier_order + 1):
-            w = 2.0 * np.pi * k * td / period_days
+        for k in range(1, 4):
+            w = 2.0 * np.pi * k * td / 365.25
             cols.append(np.sin(w))
             cols.append(np.cos(w))
         return np.column_stack(cols)
@@ -296,9 +288,9 @@ def fourier_trend_forecast(
     scale[scale == 0] = 1.0
     scale[:2] = 1.0
     Xs = X / scale
-    pen = np.full(X.shape[1], float(ridge))
+    pen = np.full(X.shape[1], 1.0)
     pen[:2] = 0.0  # intercept + base slope unpenalized
     A = Xs.T @ Xs + np.diag(pen)
     coef = np.linalg.solve(A, Xs.T @ y) / scale
-    t_future = t[-1] + step_days * np.arange(1, horizon + 1, dtype=float)
+    t_future = t[-1] + 7.0 * np.arange(1, horizon + 1, dtype=float)
     return design((t_future - t[0]) / span) @ coef

@@ -24,6 +24,7 @@ CHUNK_TOKENS = 64
 CHUNK_STRIDE = 48  # 16-token overlap between consecutive chunks
 
 SENTENCE_SPLIT_RE = r"[.!?]+"
+ID_COL = "doc_id"
 
 
 def clean_tokens(text: Column | str) -> Column:
@@ -34,8 +35,6 @@ def clean_tokens(text: Column | str) -> Column:
 
 def chunk_documents(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     chunk: int = CHUNK_TOKENS,
     stride: int = CHUNK_STRIDE,
 ) -> DataFrame:
@@ -47,42 +46,40 @@ def chunk_documents(
     so no chunk is a strict subset of its predecessor.
     """
     toks = docs.select(
-        id_col, clean_tokens(text_col).alias("toks")
+        ID_COL, clean_tokens("text").alias("toks")
     ).withColumn("n", F.size("toks"))
     nz = toks.filter(F.col("n") > 0)
     starts = nz.select(
-        id_col,
+        ID_COL,
         "toks",
         "n",
         F.explode(F.sequence(F.lit(1), F.col("n"), F.lit(stride))).alias("s"),
     ).filter((F.col("s") == 1) | (F.col("s") - stride + chunk - 1 < F.col("n")))
     piece = F.slice(F.col("toks"), F.col("s"), chunk)
     return starts.select(
-        id_col,
+        ID_COL,
         F.floor((F.col("s") - 1) / stride).cast("long").alias("chunk_no"),
         F.size(piece).cast("long").alias("n_tokens"),
         F.concat_ws(" ", piece).alias("chunk_text"),
     )
 
 
-def split_sentences_native(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def split_sentences_native(docs: DataFrame) -> DataFrame:
     """Sentences per document: split on [.!?]+ runs, trim, drop
     empties, re-number densely per document. All built-ins; the
     per-doc numbering is a window over (doc, original position)."""
     from pyspark.sql import Window
 
     raw = docs.select(
-        id_col,
-        F.posexplode(F.split(F.col(text_col), SENTENCE_SPLIT_RE)).alias(
+        ID_COL,
+        F.posexplode(F.split(F.col("text"), SENTENCE_SPLIT_RE)).alias(
             "pos", "raw"
         ),
     ).withColumn("sentence", F.trim("raw"))
     kept = raw.filter(F.col("sentence") != "")
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy(ID_COL).orderBy("pos")
     return kept.select(
-        id_col,
+        ID_COL,
         (F.row_number().over(w) - 1).cast("long").alias("sent_no"),
         "sentence",
     )

@@ -20,9 +20,9 @@ def rename_if_present(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:
     return df.withColumnsRenamed({k: v for k, v in mapping.items() if k in present})
 
 
-def coerce_numeric(df: DataFrame, *cols: str, to: str = "double") -> DataFrame:
-    """Numeric coercion, null on error [P3: PRACTICA3.py:193]."""
-    return df.withColumns({c: F.col(c).try_cast(to) for c in cols if c in df.columns})
+def coerce_numeric(df: DataFrame, *cols: str) -> DataFrame:
+    """Cast to double, null on error [P3: PRACTICA3.py:193]."""
+    return df.withColumns({c: F.col(c).try_cast("double") for c in cols if c in df.columns})
 
 
 def add_column_if_missing(df: DataFrame, name: str, default: object) -> DataFrame:

@@ -40,6 +40,11 @@ def _ab(i: int) -> tuple[int, int]:
 
 MINHASH_AB = [_ab(i) for i in range(64)]
 
+# Columns of the documents table every operator here reads.
+TEXT_COL = "text"
+ID_COL = "doc_id"
+SIMHASH_BITS = 32  # width of a SimHash
+
 
 def shingle_hash32(col: Column | str) -> Column:
     """First 8 md5 hex chars as a BIGINT in [0, 2^32) — the one
@@ -49,14 +54,14 @@ def shingle_hash32(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def exact_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """Exact duplicate groups keyed by normalized-text fingerprint:
     keep-first (min id) + duplicate count [N1]."""
     return (
-        docs.withColumn("fp", fingerprint(text_col))
+        docs.withColumn("fp", fingerprint(TEXT_COL))
         .groupBy("fp")
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min(ID_COL).alias("keep_id"),
             F.count("*").alias("n_dups"),
         )
     )
@@ -64,9 +69,6 @@ def exact_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "d
 
 def doc_shingle_sets(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     hashed: bool = False,
 ) -> DataFrame:
     """(doc_id, shingles: array<string|long>) — one narrow pass, no
@@ -85,23 +87,20 @@ def doc_shingle_sets(
     8-byte longs instead of ~25-char strings — a ~3x row shrink on the
     band self-join at corpus scale.
     """
-    toked = docs.select(F.col(id_col), tokens(text_col).alias("toks"))
-    sh = word_shingles(F.col("toks"), n)
+    toked = docs.select(F.col(ID_COL), tokens(TEXT_COL).alias("toks"))
+    sh = word_shingles(F.col("toks"))
     if hashed:
         sh = F.transform(sh, shingle_hash32)
-    return toked.select(F.col(id_col), sh.alias("shingles"))
+    return toked.select(F.col(ID_COL), sh.alias("shingles"))
 
 
 def doc_shingles(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     max_df: int | None = None,
     hashed: bool = False,
 ) -> DataFrame:
     """(doc_id, shingle) exploded inverted index — the codegen-friendly
-    spine every MinHash/Jaccard operator builds on. Docs with < n
+    spine every MinHash/Jaccard operator builds on. Docs with < 3
     tokens (empty shingle set) simply contribute no rows, so no
     ``size(shingles) > 0`` filter exists anywhere: such a filter gets
     predicate-pushed below the projection, re-inlining the whole
@@ -125,14 +124,14 @@ def doc_shingles(
     broadcast anti join per read (artifacts/checkpoint_ab.md). Without
     ``max_df`` nothing is checkpointed.
     """
-    sh = doc_shingle_sets(docs, text_col, id_col, n, hashed=hashed)
+    sh = doc_shingle_sets(docs, hashed=hashed)
     # explode_outer, NOT explode: InferFiltersFromGenerate turns a plain
     # explode into a pre-filter `size(<whole shingle expr>) > 0` that
     # re-evaluates the entire pipeline per row outside codegen
     # (measured ~30x slowdown). explode_outer infers nothing; the
     # null row an empty array produces is dropped with a cheap filter
     # on the generated column instead.
-    idx = sh.select(id_col, F.explode_outer("shingles").alias("shingle")).filter(
+    idx = sh.select(ID_COL, F.explode_outer("shingles").alias("shingle")).filter(
         F.col("shingle").isNotNull()
     )
     if max_df is not None:
@@ -156,9 +155,6 @@ def _cap_max_df(idx: DataFrame, max_df: int) -> DataFrame:
 def jaccard_pairs(
     docs: DataFrame,
     threshold: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     max_df: int | None = None,
     idx: DataFrame | None = None,
 ) -> DataFrame:
@@ -181,17 +177,17 @@ def jaccard_pairs(
     if idx is not None:
         ds = idx if max_df is None else _cap_max_df(idx, max_df)
     else:
-        ds = doc_shingles(docs, text_col, id_col, n, max_df, hashed=True)
-    sizes = ds.groupBy(id_col).agg(F.count("*").alias("n_sh"))
+        ds = doc_shingles(docs, max_df=max_df, hashed=True)
+    sizes = ds.groupBy(ID_COL).agg(F.count("*").alias("n_sh"))
     a = ds.alias("a")
     b = ds.alias("b")
     inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col(f"a.{ID_COL}") < F.col(f"b.{ID_COL}")))
+        .groupBy(F.col(f"a.{ID_COL}").alias("id_a"), F.col(f"b.{ID_COL}").alias("id_b"))
         .agg(F.count("*").alias("n_inter"))
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
+    sa = sizes.select(F.col(ID_COL).alias("id_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col(ID_COL).alias("id_b"), F.col("n_sh").alias("n_b"))
     return (
         inter.join(sa, "id_a")
         .join(sb, "id_b")
@@ -204,14 +200,14 @@ def jaccard_pairs(
     )
 
 
-def _mix_cols(k: int, col: str = "shingle") -> list:
+def _mix_cols(k: int) -> list:
     """k universal-hash permutation columns over the exploded 32-bit
     shingle-hash column: (A[i] * (x % P) + B[i]) % P. Flat columns in
     one projection → whole-stage codegen compiles the arithmetic (an
     array_min(transform(...)) formulation puts the same math in
     INTERPRETED lambda land — measured 4x slower, consistent with
     expression-tree depth being the interpreter's cost driver)."""
-    x = F.col(col) % MINHASH_P
+    x = F.col("shingle") % MINHASH_P
     return [
         ((F.lit(a) * x + F.lit(b)) % MINHASH_P).alias(f"m{i}")
         for i, (a, b) in enumerate(MINHASH_AB[:k])
@@ -221,8 +217,6 @@ def _mix_cols(k: int, col: str = "shingle") -> list:
 def minhash_signatures(
     docs: DataFrame,
     k: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     idx: DataFrame | None = None,
 ) -> DataFrame:
     """k-permutation MinHash signature per doc [N2].
@@ -236,9 +230,9 @@ def minhash_signatures(
     (see jaccard_pairs) to share the corpus pass with a sibling
     operator in the same query."""
     if idx is None:
-        idx = doc_shingles(docs, text_col, id_col, hashed=True)
-    mixed = idx.select(id_col, *_mix_cols(k))
-    return mixed.groupBy(id_col).agg(
+        idx = doc_shingles(docs, hashed=True)
+    mixed = idx.select(ID_COL, *_mix_cols(k))
+    return mixed.groupBy(ID_COL).agg(
         *[F.min(f"m{i}").alias(f"h{i}") for i in range(k)]
     )
 
@@ -248,8 +242,6 @@ def minhash_lsh_pairs(
     threshold: float,
     k: int = 16,
     bands: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_df: int | None = None,
     idx: DataFrame | None = None,
 ) -> DataFrame:
@@ -272,15 +264,13 @@ def minhash_lsh_pairs(
     free). With ``max_df`` set, the hot-shingle aggregation is the only
     second corpus pass, and its output broadcast is tiny.
     """
-    sig = minhash_index(docs, k, text_col, id_col, max_df, idx=idx)
-    return minhash_lsh_pairs_from_index(sig, threshold, k, bands, id_col)
+    sig = minhash_index(docs, k, max_df, idx=idx)
+    return minhash_lsh_pairs_from_index(sig, threshold, k, bands)
 
 
 def minhash_index(
     docs: DataFrame,
     k: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_df: int | None = None,
     idx: DataFrame | None = None,
 ) -> DataFrame:
@@ -307,10 +297,10 @@ def minhash_index(
     if idx is not None:
         idx = idx if max_df is None else _cap_max_df(idx, max_df)
     else:
-        idx = doc_shingles(docs, text_col, id_col, max_df=max_df, hashed=True)
+        idx = doc_shingles(docs, max_df=max_df, hashed=True)
     return (
-        idx.select(id_col, "shingle", *_mix_cols(k))
-        .groupBy(id_col)
+        idx.select(ID_COL, "shingle", *_mix_cols(k))
+        .groupBy(ID_COL)
         .agg(
             F.collect_list("shingle").alias("shingles"),
             *[F.min(f"m{i}").alias(f"h{i}") for i in range(k)],
@@ -323,7 +313,6 @@ def minhash_lsh_pairs_from_index(
     threshold: float,
     k: int = 16,
     bands: int = 4,
-    id_col: str = "doc_id",
     delta_filter=None,
 ) -> DataFrame:
     """Banded candidate join + exact-Jaccard verify over a (possibly
@@ -355,9 +344,9 @@ def minhash_lsh_pairs_from_index(
     # longs) ride along for the first-match-band comparisons — far
     # narrower exchange rows than the concatenated band strings they
     # replace.
-    banded = sig.select(id_col, "shingles", *[F.col(f"h{i}") for i in range(k)], *band_cols)
+    banded = sig.select(ID_COL, "shingles", *[F.col(f"h{i}") for i in range(k)], *band_cols)
     melted = banded.select(
-        id_col,
+        ID_COL,
         "shingles",
         *[f"h{i}" for i in range(k)],
         F.posexplode_outer(F.array(*[f"band{b}" for b in range(bands)])).alias(
@@ -393,12 +382,12 @@ def minhash_lsh_pairs_from_index(
         .join(
             b_,
             (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+            & (F.col(f"a.{ID_COL}") < F.col(f"b.{ID_COL}"))
             & no_earlier_match,
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col(f"a.{ID_COL}").alias("id_a"),
+            F.col(f"b.{ID_COL}").alias("id_b"),
             F.col("a.shingles").alias("sh_a"),
             F.col("b.shingles").alias("sh_b"),
         )
@@ -415,39 +404,39 @@ def minhash_lsh_pairs_from_index(
     )
 
 
-def simhash(docs: DataFrame, bits: int = 32, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """SimHash over distinct tokens [N2]: per bit, sum +1/-1 votes from
     each token's md5; bit set iff the vote is positive. 32-bit variant
     (md5 hex chars 1..8), assembled as a BIGINT."""
     toks = (
-        docs.select(F.col(id_col), F.array_distinct(tokens(text_col)).alias("dt"))
-        .select(F.col(id_col), F.explode_outer("dt").alias("tok"))
+        docs.select(F.col(ID_COL), F.array_distinct(tokens(TEXT_COL)).alias("dt"))
+        .select(F.col(ID_COL), F.explode_outer("dt").alias("tok"))
         .filter(F.col("tok").isNotNull())
     )
     h = F.md5(F.col("tok"))
     # hex char -> value via position in the hex alphabet (portable).
     bit_exprs = []
-    for bit in range(bits):
+    for bit in range(SIMHASH_BITS):
         ch = F.substring(h, 1 + bit // 4, 1)
         val = F.instr(F.lit("0123456789abcdef"), ch) - 1
         bit_on = F.shiftright(val, 3 - bit % 4).bitwiseAND(F.lit(1))
         bit_exprs.append(
             F.sum(F.when(bit_on == 1, 1).otherwise(-1)).alias(f"v{bit}")
         )
-    votes = toks.groupBy(id_col).agg(*bit_exprs)
+    votes = toks.groupBy(ID_COL).agg(*bit_exprs)
     acc = F.lit(0).cast("long")
-    for bit in range(bits):
+    for bit in range(SIMHASH_BITS):
         acc = acc + F.when(F.col(f"v{bit}") > 0, F.lit(2**bit).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
-    return votes.select(F.col(id_col), acc.alias("simhash"))
+    return votes.select(F.col(ID_COL), acc.alias("simhash"))
 
 
-def simhash_pairs(docs: DataFrame, max_hamming: int = 3, bits: int = 32, **kw) -> DataFrame:
+def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance, banded [N2 scale
     path].
 
-    The ``bits``-bit hash is split into ``max_hamming + 1`` contiguous
+    The 32-bit hash is split into ``max_hamming + 1`` contiguous
     bit bands; candidates are docs sharing any band value (equi-join on
     (band_no, band_val) — never an all-pairs join). Recall is EXACTLY
     1.0 by pigeonhole: a pair at Hamming distance d <= max_hamming has
@@ -459,10 +448,10 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3, bits: int = 32, **kw) -
     squared, not n^2.
     """
     nb = max_hamming + 1
-    if nb > bits:
+    if nb > SIMHASH_BITS:
         raise ValueError("max_hamming + 1 bands need at least that many bits")
-    sh = simhash(docs, bits=bits, **kw)
-    base, rem = divmod(bits, nb)
+    sh = simhash(docs)
+    base, rem = divmod(SIMHASH_BITS, nb)
     widths = [base + (1 if i < rem else 0) for i in range(nb)]
     offsets = [sum(widths[:i]) for i in range(nb)]
     band_cols = [
@@ -519,9 +508,6 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3, bits: int = 32, **kw) -
 def contamination_pairs(
     train: DataFrame,
     eval_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     min_shared: int = 2,
 ) -> DataFrame:
     """Train/eval decontamination [N2 extension]: (train_id, eval_id,
@@ -539,13 +525,13 @@ def contamination_pairs(
     n-grams. min_shared >= 2 also absorbs 32-bit hash collisions
     (see shingle_hash32), which are cross-doc-uncorrelated.
     """
-    ti = doc_shingles(train, text_col, id_col, n, hashed=True)
-    ei = doc_shingles(eval_docs, text_col, id_col, n, hashed=True).withColumnRenamed(
-        id_col, "eval_id"
+    ti = doc_shingles(train, hashed=True)
+    ei = doc_shingles(eval_docs, hashed=True).withColumnRenamed(
+        ID_COL, "eval_id"
     )
     return (
         ti.join(F.broadcast(ei), "shingle")
-        .groupBy(F.col(id_col).alias("train_id"), "eval_id")
+        .groupBy(F.col(ID_COL).alias("train_id"), "eval_id")
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
@@ -554,9 +540,6 @@ def contamination_pairs(
 def setsim_prefix_pairs(
     docs: DataFrame,
     threshold: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     max_df: int | None = None,
 ) -> DataFrame:
     """Set-similarity join with PPJoin-style prefix filtering — the
@@ -596,22 +579,22 @@ def setsim_prefix_pairs(
     310 161 after the length filter -> 124 961 after the positional
     filter (3.3x fewer full-set fetches + intersections).
     """
-    ds = doc_shingles(docs, text_col, id_col, n, max_df, hashed=True)
+    ds = doc_shingles(docs, max_df=max_df, hashed=True)
     dfreq = ds.groupBy("shingle").agg(F.count("*").alias("_df"))
-    sizes = ds.groupBy(id_col).agg(F.count("*").alias("_m"))
-    w = Window.partitionBy(id_col).orderBy("_df", "shingle")
+    sizes = ds.groupBy(ID_COL).agg(F.count("*").alias("_m"))
+    w = Window.partitionBy(ID_COL).orderBy("_df", "shingle")
     eps = 1e-9
     prefix = (
         ds.join(dfreq, "shingle")
         .withColumn("_r", F.row_number().over(w))
-        .join(sizes, id_col)
+        .join(sizes, ID_COL)
         .filter(
             F.col("_r")
             <= F.col("_m")
             - F.ceil(F.lit(threshold) * F.col("_m") - eps)
             + 1
         )
-        .select(id_col, "shingle", "_r", "_m")
+        .select(ID_COL, "shingle", "_r", "_m")
     )
     a, b = prefix.alias("a"), prefix.alias("b")
     alpha = F.ceil(
@@ -622,13 +605,13 @@ def setsim_prefix_pairs(
         a.join(
             b,
             (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+            & (F.col(f"a.{ID_COL}") < F.col(f"b.{ID_COL}"))
             & (F.col("a._m") >= F.lit(threshold) * F.col("b._m") - eps)
             & (F.col("b._m") >= F.lit(threshold) * F.col("a._m") - eps),
         )
         .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col(f"a.{ID_COL}").alias("id_a"),
+            F.col(f"b.{ID_COL}").alias("id_b"),
             F.col("a._m").alias("m_a"),
             F.col("b._m").alias("m_b"),
         )
@@ -639,9 +622,9 @@ def setsim_prefix_pairs(
         )
         .select("id_a", "id_b")
     )
-    sets = ds.groupBy(id_col).agg(F.collect_list("shingle").alias("sh"))
-    va = sets.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    vb = sets.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+    sets = ds.groupBy(ID_COL).agg(F.collect_list("shingle").alias("sh"))
+    va = sets.select(F.col(ID_COL).alias("id_a"), F.col("sh").alias("sh_a"))
+    vb = sets.select(F.col(ID_COL).alias("id_b"), F.col("sh").alias("sh_b"))
     n_inter = F.size(F.array_intersect("sh_a", "sh_b"))
     jac = n_inter / (F.size("sh_a") + F.size("sh_b") - n_inter)
     return (
@@ -656,11 +639,7 @@ def setsim_prefix_pairs(
 def containment_pairs_directed(
     docs: DataFrame,
     threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     max_df: int | None = None,
-    min_set: int = 5,
 ) -> DataFrame:
     """Asymmetric near-dup: shingle CONTAINMENT c(A->B) = |A∩B| / |A|
     — the quote/excerpt/boilerplate-inclusion signal Jaccard misses (a
@@ -668,28 +647,28 @@ def containment_pairs_directed(
     containment 1.0; Broder's original resemblance/containment pair,
     public literature). Pairs come from the same capped inverted
     shingle index as jaccard_pairs — one index join, both directions
-    scored from the one intersection count, tiny sets (< min_set
+    scored from the one intersection count, tiny sets (< 5
     shingles, where containment is noise) dropped at the size join."""
-    ds = doc_shingles(docs, text_col, id_col, n, max_df, hashed=True)
-    sizes = ds.groupBy(id_col).agg(F.count("*").alias("n_sh"))
+    ds = doc_shingles(docs, max_df=max_df, hashed=True)
+    sizes = ds.groupBy(ID_COL).agg(F.count("*").alias("n_sh"))
     a, b = ds.alias("a"), ds.alias("b")
     inter = (
         a.join(
             b,
             (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col(f"a.{ID_COL}") < F.col(f"b.{ID_COL}")),
         )
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .groupBy(F.col(f"a.{ID_COL}").alias("id_a"), F.col(f"b.{ID_COL}").alias("id_b"))
         .agg(F.count("*").alias("n_inter"))
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
+    sa = sizes.select(F.col(ID_COL).alias("id_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col(ID_COL).alias("id_b"), F.col("n_sh").alias("n_b"))
     c_ab = F.col("n_inter") / F.col("n_a")
     c_ba = F.col("n_inter") / F.col("n_b")
     return (
         inter.join(sa, "id_a")
         .join(sb, "id_b")
-        .filter((F.col("n_a") >= min_set) & (F.col("n_b") >= min_set))
+        .filter((F.col("n_a") >= 5) & (F.col("n_b") >= 5))
         .filter((c_ab >= threshold) | (c_ba >= threshold))
         .select(
             "id_a",

@@ -143,7 +143,6 @@ def with_ntile_multi(
     specs: list[tuple[str, Column]],
     tiebreak: Column,
     n_parts: int | None = None,
-    rows_per_part: int = 65536,
 ) -> DataFrame:
     """Append ONE ntile column per (out_col, asc_key) spec — e.g. the
     RFM segmentation's three quintile rankings — in a SINGLE
@@ -167,7 +166,7 @@ def with_ntile_multi(
     unique). Two data shuffles total, each over skinny rows.
 
     ``n_parts`` defaults to sizing from the input cardinality
-    (ceil(rows * d / rows_per_part), floor 8) — the explicit-shuffle
+    (ceil(rows * d / 65536), floor 8) — the explicit-shuffle
     analogue of AQE's partition coalescing: a fixed
     defaultParallelism fan-out schedules 32 near-empty tasks per
     stage at small scale (measured 2x the query wall), while the
@@ -183,7 +182,7 @@ def with_ntile_multi(
     d = len(specs)
     if n_parts is None:
         n_rows = df.count()
-        n_parts = max(8, -(-(n_rows * d) // rows_per_part))
+        n_parts = max(8, -(-(n_rows * d) // 65536))
     melt = F.explode(
         F.array(
             *[

@@ -31,11 +31,10 @@ def blocked_levenshtein_pairs(
     id_col: str,
     name_col: str,
     max_dist: int,
-    block_key: Column | None = None,
     max_block: int | None = None,
 ) -> DataFrame:
     """Pairs (id_a < id_b) whose names are within ``max_dist`` edits,
-    compared only inside ``block_key`` blocks (default: first token).
+    compared only inside blocks that share the first name token.
 
     Recall caveat by construction: a typo in the blocking token itself
     sends the record to another block — that's why production entity
@@ -49,7 +48,7 @@ def blocked_levenshtein_pairs(
     no discriminative signal; those records belong to a finer blocking
     pass instead), bounding the join at corpus-linear cost. Same
     broadcast left-anti shape as the dedup hot-shingle cap."""
-    key = block_key if block_key is not None else first_token_block(name_col)
+    key = first_token_block(name_col)
     # Repartition ahead of the self-join: a single-file source scans as
     # one partition, and if AQE turns the blk join into a broadcast
     # hash join the stream side KEEPS that partitioning — the entire

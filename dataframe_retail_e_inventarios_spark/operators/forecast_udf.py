@@ -362,15 +362,16 @@ def _fit_partition(batches, ma_only: bool = False):
     Arrow batch arrives as contiguous group runs and ``_fit_batch``
     runs on the numpy slices batch by batch. Only the (possibly
     incomplete) TRAILING group of each batch is carried into the next,
+    and each batch's fitted rows are yielded as soon as they are ready,
     so peak Python memory is one Arrow batch + one series —
     independent of partition size."""
     cols = [f.name for f in RESULT_SCHEMA.fields]
     carry: pd.DataFrame | None = None
-    out: list[dict] = []
 
-    def fit_runs(pdf: pd.DataFrame, last_is_open: bool) -> pd.DataFrame | None:
+    def fit_runs(pdf: pd.DataFrame, last_is_open: bool) -> tuple[list[dict], pd.DataFrame | None]:
         """Fit every complete group run in (sorted) pdf; return the
-        trailing open run unfitted when ``last_is_open``."""
+        fitted rows and, when ``last_is_open``, the trailing open run
+        unfitted."""
         pids = pdf["product_id"].to_numpy()
         sids = pdf["store_id"].to_numpy()
         change = np.flatnonzero((pids[1:] != pids[:-1]) | (sids[1:] != sids[:-1])) + 1
@@ -381,25 +382,25 @@ def _fit_partition(batches, ma_only: bool = False):
             starts, ends = starts[:-1], ends[:-1]
         else:
             tail = None
-        if len(starts):
-            wk = pd.to_datetime(pdf["week"]).to_numpy()
-            vals = pdf["units_sold"].to_numpy(dtype=float)
-            items = [
-                (str(pids[s]), str(sids[s]), wk[s:e], vals[s:e]) for s, e in zip(starts, ends)
-            ]
-            out.extend(_fit_batch(items, ma_only))
-        return tail
+        if not len(starts):
+            return [], tail
+        wk = pd.to_datetime(pdf["week"]).to_numpy()
+        vals = pdf["units_sold"].to_numpy(dtype=float)
+        items = [(str(pids[s]), str(sids[s]), wk[s:e], vals[s:e]) for s, e in zip(starts, ends)]
+        return _fit_batch(items, ma_only), tail
 
     for pdf in batches:
         if pdf.empty:
             continue
         if carry is not None:
             pdf = pd.concat([carry, pdf], ignore_index=True)
-        carry = fit_runs(pdf, last_is_open=True)
+        rows, carry = fit_runs(pdf, last_is_open=True)
+        if rows:
+            yield pd.DataFrame(rows, columns=cols)
     if carry is not None and len(carry):
-        fit_runs(carry.reset_index(drop=True), last_is_open=False)
-    if out:
-        yield pd.DataFrame(out, columns=cols)
+        rows, _ = fit_runs(carry.reset_index(drop=True), last_is_open=False)
+        if rows:
+            yield pd.DataFrame(rows, columns=cols)
 
 
 def forecast_with_models(dense_weekly: DataFrame, ma_only: bool = False) -> DataFrame:

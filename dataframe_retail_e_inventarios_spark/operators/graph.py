@@ -30,15 +30,14 @@ from pyspark.sql import DataFrame
 
 def connected_components(
     pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
     max_iterations: int = 20,
     stats: dict | None = None,
     assume_distinct: bool = False,
 ) -> DataFrame:
     """(node, cluster_id) with cluster_id = min node id reachable in the
-    undirected graph given by ``pairs``. Nodes not in any pair are not
-    emitted (singletons are their own cluster by definition).
+    undirected graph given by the ``(id_a, id_b)`` rows of ``pairs``.
+    Nodes not in any pair are not emitted (singletons are their own
+    cluster by definition).
 
     Raises ``RuntimeError`` if the fixpoint is not reached within
     ``max_iterations`` — a silent cap exit would hand back wrong
@@ -58,8 +57,8 @@ def connected_components(
     whose pair list is small next to its generator checkpoints
     ``pairs`` itself (queries_curation._neardup_components); one whose
     pair list is large does not (entity_clusters_fuzzy)."""
-    edges = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).union(
-        pairs.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+    edges = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")).union(
+        pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v"))
     )
     if not assume_distinct:
         edges = edges.distinct()
@@ -112,12 +111,10 @@ def connected_components(
     return labels.select("node", F.col("label").alias("cluster_id"))
 
 
-def dedup_keep_first(
-    docs: DataFrame, components: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def dedup_keep_first(docs: DataFrame, components: DataFrame) -> DataFrame:
     """Corpus minus near-duplicates: every doc keeps its row unless it
     belongs to a cluster and is not the cluster's min-id representative."""
     drop = components.filter(F.col("node") != F.col("cluster_id")).select(
-        F.col("node").alias(id_col)
+        F.col("node").alias("doc_id")
     )
-    return docs.join(drop, id_col, "left_anti")
+    return docs.join(drop, "doc_id", "left_anti")

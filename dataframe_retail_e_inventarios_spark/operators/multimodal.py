@@ -56,7 +56,7 @@ def resize_stub(payload: bytes, width: int, height: int) -> bytes:
     )
 
 
-def extract_media_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def extract_media_features(df: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over a binary payload column.
 
     Arrow ships each partition to Python in batches; the iterator
@@ -67,7 +67,7 @@ def extract_media_features(df: DataFrame, payload_col: str = "payload") -> DataF
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = pdf[payload_col].map(lambda b: decode_stub(bytes(b)))
+            feats = pdf["payload"].map(lambda b: decode_stub(bytes(b)))
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -81,7 +81,7 @@ def extract_media_features(df: DataFrame, payload_col: str = "payload") -> DataF
     return df.mapInPandas(extract, MEDIA_FEATURE_SCHEMA)
 
 
-def extract_media_features_arrow(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def extract_media_features_arrow(df: DataFrame) -> DataFrame:
     """mapInArrow twin of extract_media_features: the same decoder
     contract one level lower — raw ``pyarrow.RecordBatch`` in/out, no
     pandas conversion. For wide binary payloads this skips the
@@ -93,7 +93,7 @@ def extract_media_features_arrow(df: DataFrame, payload_col: str = "payload") ->
 
     def extract(batches):
         for batch in batches:
-            payloads = batch.column(batch.schema.get_field_index(payload_col))
+            payloads = batch.column(batch.schema.get_field_index("payload"))
             feats = [decode_stub(p.as_py() or b"") for p in payloads]
             yield pa.RecordBatch.from_arrays(
                 [
@@ -109,7 +109,7 @@ def extract_media_features_arrow(df: DataFrame, payload_col: str = "payload") ->
     return df.mapInArrow(extract, MEDIA_FEATURE_SCHEMA)
 
 
-def media_features_native(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def media_features_native(df: DataFrame) -> DataFrame:
     """The decode_stub features as pure built-in expressions.
 
     Everything the stub computes is SQL-expressible (length / md5 /
@@ -119,7 +119,7 @@ def media_features_native(df: DataFrame, payload_col: str = "payload") -> DataFr
     needs PIL/ffmpeg, that mapInPandas contract is the shape to use);
     the two paths are differential-tested against each other.
     """
-    p = F.col(payload_col)
+    p = F.col("payload")
     return df.select(
         "doc_id",
         "media_type",
@@ -142,51 +142,45 @@ def documents_as_media(docs: DataFrame) -> DataFrame:
 MAX_SAMPLED_FRAMES = 16
 
 
-def frame_sample_schedule(
-    media: DataFrame,
-    duration_ms_col: str = "duration_ms",
-    fps_col: str = "fps",
-    id_col: str = "doc_id",
-    max_frames: int = MAX_SAMPLED_FRAMES,
-) -> DataFrame:
+def frame_sample_schedule(media: DataFrame) -> DataFrame:
     """Uniform-stride video frame-sampling schedule: for each asset,
     the frame indices (and their timestamps) a decode stage should
-    pull, capped at ``max_frames`` per asset. This is the step BEFORE
-    the codec — pure arithmetic on metadata, so unlike the decode stub
+    pull, capped at ``MAX_SAMPLED_FRAMES`` per asset. This is the step
+    BEFORE the codec — pure arithmetic on metadata, so unlike the decode stub
     it is fully real here: a production pipeline feeds this schedule
     to the ffmpeg stage and decodes ONLY the scheduled frames (the
     100 TB video trick — never decode what you won't sample).
 
     Plan shape: sequence/transform/explode generators, zero shuffles,
-    output bounded at max_frames rows per asset.
+    output bounded at MAX_SAMPLED_FRAMES rows per asset.
     """
     n_total = F.greatest(
-        F.floor(F.col(duration_ms_col) * F.col(fps_col) / 1000).cast("long"),
+        F.floor(F.col("duration_ms") * F.col("fps") / 1000).cast("long"),
         F.lit(1),
     )
-    # ceil, not floor: floor-stride covers only stride*max_frames
+    # ceil, not floor: floor-stride covers only stride*MAX_SAMPLED_FRAMES
     # frames at the START of the asset (n_total=31 would sample frames
-    # 0..15 only); ceil makes the <=max_frames samples span the whole
-    # duration
-    stride = F.greatest(F.ceil(n_total / max_frames).cast("long"), F.lit(1))
+    # 0..15 only); ceil makes the <=MAX_SAMPLED_FRAMES samples span the
+    # whole duration
+    stride = F.greatest(F.ceil(n_total / MAX_SAMPLED_FRAMES).cast("long"), F.lit(1))
     idx_seq = F.slice(
-        F.sequence(F.lit(0), n_total - 1, stride), 1, max_frames
+        F.sequence(F.lit(0), n_total - 1, stride), 1, MAX_SAMPLED_FRAMES
     )
     out = media.select(
-        F.col(id_col),
-        F.col(duration_ms_col),
-        F.col(fps_col),
+        F.col("doc_id"),
+        F.col("duration_ms"),
+        F.col("fps"),
         n_total.alias("n_frames_total"),
         F.posexplode(idx_seq).alias("sample_no", "frame_idx"),
     )
     return out.select(
-        id_col,
-        duration_ms_col,
-        fps_col,
+        "doc_id",
+        "duration_ms",
+        "fps",
         "n_frames_total",
         F.col("sample_no").cast("long").alias("sample_no"),
         "frame_idx",
-        F.floor(F.col("frame_idx") * 1000 / F.col(fps_col))
+        F.floor(F.col("frame_idx") * 1000 / F.col("fps"))
         .cast("long")
         .alias("ts_ms"),
     )

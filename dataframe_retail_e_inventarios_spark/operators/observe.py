@@ -15,13 +15,11 @@ from pyspark.sql import DataFrame, Observation
 import pyspark.sql.functions as F
 
 
-def observe_quality(
-    df: DataFrame, value_col: str, name: str = "quality"
-) -> tuple[DataFrame, Observation]:
+def observe_quality(df: DataFrame, value_col: str) -> tuple[DataFrame, Observation]:
     """Attach standard quality metrics on ``value_col``: row count,
     null count, negative count, min/max. Returns (df, observation);
     read ``observation.get`` AFTER an action has run the plan."""
-    obs = Observation(name)
+    obs = Observation("quality")
     c = F.col(value_col)
     observed = df.observe(
         obs,

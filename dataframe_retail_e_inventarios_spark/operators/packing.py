@@ -23,22 +23,23 @@ from pyspark.sql import Column, DataFrame, Window
 
 from .prefix import exclusive_prefix_offsets
 
+ID_COL = "doc_id"
+
 
 def pack_into_batches(
     docs: DataFrame,
     n_tokens: Column,
     budget: int,
-    id_col: str = "doc_id",
     block_size: int = 1000,
 ) -> DataFrame:
     """(id, n_tokens, batch_id) with batch_id = floor(tokens-before/budget)
     in ascending id order — documents straddle batch boundaries exactly
     as a concatenate-and-chunk loader would."""
-    toks = docs.select(F.col(id_col), n_tokens.cast("long").alias("n_tokens"))
-    blocked = toks.withColumn("_block", F.floor(F.col(id_col) / block_size))
+    toks = docs.select(F.col(ID_COL), n_tokens.cast("long").alias("n_tokens"))
+    blocked = toks.withColumn("_block", F.floor(F.col(ID_COL) / block_size))
     w_in = (
         Window.partitionBy("_block")
-        .orderBy(id_col)
+        .orderBy(ID_COL)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     inner = blocked.withColumn("_in_cum", F.sum("n_tokens").over(w_in))
@@ -49,7 +50,7 @@ def pack_into_batches(
     packed = inner.join(F.broadcast(offsets), "_block")
     tokens_before = F.col("_in_cum") + F.col("_offset") - F.col("n_tokens")
     return packed.select(
-        id_col,
+        ID_COL,
         "n_tokens",
         F.floor(tokens_before / budget).alias("batch_id"),
     )

@@ -27,29 +27,30 @@ def write_time_partitioned(
     bucketed.write.mode("overwrite").partitionBy("_part").parquet(path)
 
 
+SALT_BUCKETS = 8
+
+
 def salted_join(
     big: DataFrame,
     small: DataFrame,
     key: str,
-    salt_buckets: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join with key salting for skew [SURVEY §4.2].
+    """Inner equi-join with key salting for skew [SURVEY §4.2].
 
     The big side gets a random-ish salt derived from a stable row hash
     (deterministic — no rand(), so plans stay reproducible); the small
     side is exploded across all salt values. A key carrying 30% of the
-    data then lands in ``salt_buckets`` separate tasks instead of one
+    data then lands in ``SALT_BUCKETS`` separate tasks instead of one
     straggler. AQE's skew-join handles moderate skew automatically;
     salting is for the pathological keys AQE can't split (e.g. a
     single giant build-side group in an aggregation-after-join).
     """
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(salt_buckets))
+    salt = F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(SALT_BUCKETS))
     big_s = big.withColumn("_salt", salt)
     small_s = small.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
+        "_salt", F.explode(F.array(*[F.lit(i) for i in range(SALT_BUCKETS)]))
     )
-    out = big_s.join(small_s, on=[key, "_salt"], how=how)
+    out = big_s.join(small_s, on=[key, "_salt"])
     return out.drop("_salt")
 
 

@@ -51,17 +51,13 @@ def _quantized(vec_col: str):
     )
 
 
-def pca_fit(
-    embeddings: DataFrame, vec_col: str = "embedding", k: int = 4
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def pca_fit(embeddings: DataFrame, k: int = 4) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Fit PCA: returns (components [k×d], mean [d], eigenvalues [k])."""
-    comps, mean, evals, _ = pca_fit_full(embeddings, vec_col, k)
+    comps, mean, evals, _ = pca_fit_full(embeddings, k)
     return comps, mean, evals
 
 
-def pca_fit_full(
-    embeddings: DataFrame, vec_col: str = "embedding", k: int = 4
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, dict]:
+def pca_fit_full(embeddings: DataFrame, k: int = 4) -> tuple[np.ndarray, np.ndarray, np.ndarray, dict]:
     """Fit PCA: returns (components [k×d], mean [d], eigenvalues [k],
     moments) where ``moments`` exposes the EXACT integer aggregates the
     fit ran on — {"n": int, "sx": [d python ints], "sxx_diag": [d]} in
@@ -74,7 +70,7 @@ def pca_fit_full(
     cross-moments as exact BIGINT aggregates; the d×d eigenproblem is
     driver-side numpy. Cross-moment rows shuffled: d·(d+1)/2 per
     aggregation partial — independent of corpus size."""
-    q = embeddings.select(_quantized(vec_col).alias("qv"))
+    q = embeddings.select(_quantized("embedding").alias("qv"))
     # (pos_i, xi) pairs, then upper-triangle products against the
     # original array: posexplode is a generator (no shuffle); the
     # group-by carries (i, j) keys — at most d^2/2 groups.
@@ -133,14 +129,13 @@ def pca_project(
     embeddings: DataFrame,
     components: np.ndarray,
     mean: np.ndarray,
-    vec_col: str = "embedding",
-    out_prefix: str = "pc",
 ) -> DataFrame:
-    """Project onto the fitted components with native expressions: the
-    k×d matrix rides along as literal arrays (broadcast-sized), each
-    coordinate one zip_with/aggregate dot product in codegen."""
+    """Project ``embedding`` onto the fitted components as ``pc1``..
+    ``pc<k>``, with native expressions: the k×d matrix rides along as
+    literal arrays (broadcast-sized), each coordinate one
+    zip_with/aggregate dot product in codegen."""
     centered = F.zip_with(
-        F.col(vec_col),
+        F.col("embedding"),
         F.array(*[F.lit(float(m)) for m in mean]),
         lambda x, m: x - m,
     )
@@ -152,5 +147,5 @@ def pca_project(
             F.lit(0.0),
             lambda acc, v: acc + v,
         )
-        cols.append(F.round(dot, 6).alias(f"{out_prefix}{ci}"))
+        cols.append(F.round(dot, 6).alias(f"pc{ci}"))
     return embeddings.select("*", *cols)

@@ -26,13 +26,11 @@ PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def redact_pii(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def redact_pii(docs: DataFrame) -> DataFrame:
     """(doc_id, n_email, n_phone, n_ip, redacted, pii_free) in one
     narrow projection — counts come from the original text, the
     redacted text applies the replacement chain in PATTERNS order."""
-    t: Column = F.col(text_col)
+    t: Column = F.col("text")
     counts = [
         F.regexp_count(t, F.lit(rx)).cast("long").alias(f"n_{name}")
         for name, rx, _ in PATTERNS
@@ -44,7 +42,7 @@ def redact_pii(
     for name, _, _ in PATTERNS:
         c = F.col(f"n_{name}")
         total = c if total is None else total + c
-    return docs.select(F.col(id_col), *counts, red.alias("redacted")).withColumn(
+    return docs.select(F.col("doc_id"), *counts, red.alias("redacted")).withColumn(
         "pii_free", total == 0
     )
 

@@ -27,6 +27,13 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+# Columns of the embeddings table, and the width of its vectors.
+ID_COL = "vec_id"
+VEC_COL = "embedding"
+DIM = 64
+# Codebooks train on a hash-sample of at most this many vectors.
+MAX_TRAIN = 2048
+
 
 def _sq_l2(a: Column, b: Column) -> Column:
     """Exact squared L2 between two array<double> columns."""
@@ -41,19 +48,14 @@ def train_pq_codebooks(
     embeddings: DataFrame,
     m: int = 8,
     k: int = 16,
-    dim: int = 64,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    max_train: int = 2048,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """(subspace, code, centroid) codebooks from a DETERMINISTIC
-    hash-sample of at most ``max_train`` vectors, fit with a seeded
+    hash-sample of at most ``MAX_TRAIN`` vectors, fit with a seeded
     driver-side Lloyd's loop (numpy).
 
     Codebook quality saturates at a few hundred points per codeword,
     so training is a bounded METADATA computation — the one place a
-    driver-side collect is the right call (≤ max_train × dim floats;
+    driver-side collect is the right call (≤ MAX_TRAIN × DIM floats;
     MLlib's own clusterCenters() is the same collect). Distributed
     KMeans here costs m × (fixed job overhead × iterations) for no
     accuracy gain; the sample-then-driver-fit pattern is what FAISS &
@@ -63,23 +65,23 @@ def train_pq_codebooks(
     df.sample; encoding still sees every vector."""
     import numpy as np
 
-    sub = dim // m
+    sub = DIM // m
     spark = embeddings.sparkSession
     n = embeddings.count()
     train = embeddings
-    if n > max_train:
-        keep_every = (n + max_train - 1) // max_train
+    if n > MAX_TRAIN:
+        keep_every = (n + MAX_TRAIN - 1) // MAX_TRAIN
         train = embeddings.filter(
-            F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), keep_every) == 0
+            F.pmod(F.xxhash64(F.col(ID_COL), F.lit(42)), keep_every) == 0
         )
     mat = np.array(
-        train.select(F.col(vec_col).cast("array<double>").alias("v"))
+        train.select(F.col(VEC_COL).cast("array<double>").alias("v"))
         .toPandas()["v"]
         .tolist()
     )
 
     rows = []
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(42)
     for j in range(m):
         pts = mat[:, j * sub : (j + 1) * sub]
         # k-means++-lite seeding: distinct random points, then 20
@@ -103,9 +105,6 @@ def encode_pq(
     embeddings: DataFrame,
     codebooks: DataFrame,
     m: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, subspace, code) — each vector's nearest codeword per
     subspace. One corpus pass: subvectors explode (m rows per vector),
@@ -118,13 +117,13 @@ def encode_pq(
     unrolled arithmetic tree (codegen blowup: 4× slower). The
     broadcast-join keeps expressions small and codegen'd; its window
     argmin shuffles only (id, subspace, code, d) rows."""
-    sub = dim // m
+    sub = DIM // m
     subvecs = embeddings.select(
-        F.col(id_col).alias("pid"),
+        F.col(ID_COL).alias("pid"),
         F.posexplode(
             F.array(
                 *[
-                    F.slice(F.col(vec_col).cast("array<double>"), j * sub + 1, sub)
+                    F.slice(F.col(VEC_COL).cast("array<double>"), j * sub + 1, sub)
                     for j in range(m)
                 ]
             )
@@ -137,7 +136,7 @@ def encode_pq(
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select(F.col("pid").alias(id_col), "subspace", "code")
+        .select(F.col("pid").alias(ID_COL), "subspace", "code")
     )
 
 
@@ -146,26 +145,21 @@ def pq_topk(
     query_filter: Column,
     k: int = 10,
     m: int = 8,
-    n_codes: int = 16,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Top-k nearest candidates per query by PQ-ADC approximate
     squared-L2. Queries never match themselves; distances are
     approximate by construction (quantization error), so this is a
     rows-only operator with recall asserted in tests."""
-    codebooks = train_pq_codebooks(embeddings, m, n_codes, dim, seed, vec_col)
-    codes = encode_pq(embeddings, codebooks, m, dim, id_col, vec_col)
+    codebooks = train_pq_codebooks(embeddings, m)
+    codes = encode_pq(embeddings, codebooks, m)
 
-    sub = dim // m
+    sub = DIM // m
     queries = embeddings.filter(query_filter).select(
-        F.col(id_col).alias("qid"),
+        F.col(ID_COL).alias("qid"),
         F.posexplode(
             F.array(
                 *[
-                    F.slice(F.col(vec_col).cast("array<double>"), j * sub + 1, sub)
+                    F.slice(F.col(VEC_COL).cast("array<double>"), j * sub + 1, sub)
                     for j in range(m)
                 ]
             )
@@ -178,16 +172,16 @@ def pq_topk(
     )
     approx = (
         codes.join(F.broadcast(adc), ["subspace", "code"])
-        .filter(F.col(id_col) != F.col("qid"))
-        .groupBy("qid", id_col)
+        .filter(F.col(ID_COL) != F.col("qid"))
+        .groupBy("qid", ID_COL)
         .agg(F.sum("d").alias("approx_d2"), F.count("*").alias("n_sub"))
         .filter(F.col("n_sub") == m)  # all subspaces matched
     )
-    w = Window.partitionBy("qid").orderBy("approx_d2", id_col)
+    w = Window.partitionBy("qid").orderBy("approx_d2", ID_COL)
     return (
         approx.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("qid", F.col(id_col).alias("cand_id"), F.round("approx_d2", 6).alias("approx_d2"), "rank")
+        .select("qid", F.col(ID_COL).alias("cand_id"), F.round("approx_d2", 6).alias("approx_d2"), "rank")
     )
 
 
@@ -197,11 +191,6 @@ def pq_topk_reranked(
     k: int = 10,
     shortlist: int = 100,
     m: int = 8,
-    n_codes: int = 16,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The production PQ pipeline: ADC shortlist (``shortlist`` ≫ k
     candidates from compressed codes — the cheap, compressed-domain
@@ -210,14 +199,12 @@ def pq_topk_reranked(
     the corpus). Returned distances are exact; only membership of the
     shortlist is approximate — precision of the final ordering is 1.0
     by construction, recall is bounded by the shortlist (tested)."""
-    short = pq_topk(
-        embeddings, query_filter, shortlist, m, n_codes, dim, seed, id_col, vec_col
-    ).select("qid", "cand_id")
+    short = pq_topk(embeddings, query_filter, shortlist, m).select("qid", "cand_id")
     qv = embeddings.filter(query_filter).select(
-        F.col(id_col).alias("qid"), F.col(vec_col).cast("array<double>").alias("qv")
+        F.col(ID_COL).alias("qid"), F.col(VEC_COL).cast("array<double>").alias("qv")
     )
     cv = embeddings.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).cast("array<double>").alias("cv")
+        F.col(ID_COL).alias("cand_id"), F.col(VEC_COL).cast("array<double>").alias("cv")
     )
     exact = (
         short.join(cv, "cand_id")

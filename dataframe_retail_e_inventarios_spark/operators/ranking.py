@@ -33,17 +33,13 @@ from .textops import tokens
 K1 = 1.2
 B = 0.75
 HASH_DIM = 64
+ID_COL = "doc_id"  # documents table key
 
 
-def hashed_doc_vectors(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    dim: int = HASH_DIM,
-) -> DataFrame:
+def hashed_doc_vectors(docs: DataFrame) -> DataFrame:
     """Feature-hashing doc vectors as flat (doc, bucket, weight) rows
     [the hashing trick, Weinberger et al. 2009]: each token hashes to
-    one of ``dim`` buckets (md5-derived, engine-portable), weights are
+    one of ``HASH_DIM`` buckets (md5-derived, engine-portable), weights are
     L1-normalized counts. No vocabulary, no fit step, no driver state
     — the property that makes it THE text vectorizer at corpus scale
     (a count-vectorizer needs a vocab broadcast that grows with the
@@ -53,17 +49,17 @@ def hashed_doc_vectors(
     embeddings table (sparse dot product = join on bucket + sum of
     weight products)."""
     tok = docs.select(
-        id_col, F.explode(tokens(text_col)).alias("term")
+        ID_COL, F.explode(tokens("text")).alias("term")
     ).filter(F.col("term") != "")
     bucket = (
-        F.conv(F.substring(F.md5(F.col("term")), 1, 4), 16, 10).cast("long") % dim
+        F.conv(F.substring(F.md5(F.col("term")), 1, 4), 16, 10).cast("long") % HASH_DIM
     )
-    counts = tok.groupBy(id_col, bucket.alias("bucket")).agg(
+    counts = tok.groupBy(ID_COL, bucket.alias("bucket")).agg(
         F.count("*").alias("cnt")
     )
-    w = Window.partitionBy(id_col)
+    w = Window.partitionBy(ID_COL)
     return counts.select(
-        id_col,
+        ID_COL,
         "bucket",
         (
             F.bround(F.col("cnt") / F.sum("cnt").over(w) * 1_000_000.0, 0)
@@ -72,18 +68,16 @@ def hashed_doc_vectors(
     )
 
 
-def term_frequencies(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def term_frequencies(docs: DataFrame) -> DataFrame:
     """(doc, term, tf) from whitespace tokens of lowercased text."""
     tok = docs.select(
-        id_col, F.explode(tokens(text_col)).alias("term")
+        ID_COL, F.explode(tokens("text")).alias("term")
     ).filter(F.col("term") != "")
-    return tok.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
+    return tok.groupBy(ID_COL, "term").agg(F.count("*").alias("tf"))
 
 
 def bm25_scores(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k1: float = K1,
     b: float = B,
 ) -> DataFrame:
@@ -99,8 +93,8 @@ def bm25_scores(
     operators/dedup.doc_shingles): ephemeral lineage truncation so every
     branch reads the narrow (id, term, tf) rows.
     """
-    tf = term_frequencies(docs, text_col, id_col).localCheckpoint(eager=True)
-    dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
+    tf = term_frequencies(docs).localCheckpoint(eager=True)
+    dl = tf.groupBy(ID_COL).agg(F.sum("tf").alias("dl"))
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
     stats = dl.agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("tot_len")
@@ -108,7 +102,7 @@ def bm25_scores(
 
     scored = (
         tf.join(df_, "term")
-        .join(dl, id_col)
+        .join(dl, ID_COL)
         .crossJoin(F.broadcast(stats))
         .withColumn("avgdl", F.col("tot_len") / F.col("n_docs"))
     )
@@ -119,7 +113,7 @@ def bm25_scores(
         F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
     )
     return scored.select(
-        id_col,
+        ID_COL,
         "term",
         "tf",
         "df",

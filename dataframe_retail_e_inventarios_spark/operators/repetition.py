@@ -31,11 +31,10 @@ TOP_BIGRAM_FRAC_FLAG = 0.2
 
 _KIND_TOKEN = 0
 _KIND_BIGRAM = 1
+ID_COL = "doc_id"
 
 
-def repetition_stats(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, dup_token_frac, top_bigram_frac, adj_dup_frac,
     flag_repetitive).
 
@@ -49,7 +48,7 @@ def repetition_stats(
     a bigram's two halves are recoverable by splitting on the join
     space — that is what the adjacency test uses).
     """
-    toked = docs.select(F.col(id_col), tokens(text_col).alias("toks"))
+    toked = docs.select(F.col(ID_COL), tokens("text").alias("toks"))
     # `toks` is a materialized named column, so the lambdas below
     # reference it instead of re-inlining the regex split (CSE trap).
     tagged_tokens = F.transform(
@@ -71,20 +70,20 @@ def repetition_stats(
         ),
     ).otherwise(F.array().cast("array<struct<kind:int,val:string>>"))
     ex = toked.select(
-        F.col(id_col),
+        F.col(ID_COL),
         # explode_outer: a plain explode would infer a size()>0
         # pre-filter re-evaluating the tokenize pipeline per row
         # outside codegen (InferFiltersFromGenerate trap).
         F.explode_outer(F.concat(tagged_tokens, tagged_bigrams)).alias("e"),
-    ).select(F.col(id_col), F.col("e.kind").alias("kind"), F.col("e.val").alias("val"))
-    per_val = ex.groupBy(id_col, "kind", "val").agg(F.count("val").alias("cnt"))
+    ).select(F.col(ID_COL), F.col("e.kind").alias("kind"), F.col("e.val").alias("val"))
+    per_val = ex.groupBy(ID_COL, "kind", "val").agg(F.count("val").alias("cnt"))
     is_tok = F.col("kind") == _KIND_TOKEN
     is_bg = F.col("kind") == _KIND_BIGRAM
     halves = F.split(F.col("val"), " ")
     adj = is_bg & (
         F.try_element_at(halves, F.lit(1)) == F.try_element_at(halves, F.lit(2))
     )
-    stats = per_val.groupBy(id_col).agg(
+    stats = per_val.groupBy(ID_COL).agg(
         F.sum(F.when(is_tok, F.col("cnt")).otherwise(F.lit(0))).alias("n_tokens"),
         F.sum(is_tok.cast("long")).alias("n_distinct"),
         F.sum(F.when(is_bg, F.col("cnt")).otherwise(F.lit(0))).alias("n_bigrams"),
@@ -94,7 +93,7 @@ def repetition_stats(
     nb = F.col("n_bigrams")
     top_frac = F.when(nb > 0, F.col("top_cnt") / nb).otherwise(F.lit(0.0))
     return stats.select(
-        F.col(id_col),
+        F.col(ID_COL),
         F.col("n_tokens"),
         F.round(
             F.when(

@@ -32,6 +32,9 @@ from pyspark.sql import Column, DataFrame
 
 
 _MICROS_PER_DAY = 86_400_000_000
+# Bucket-label columns of the weekly and the daily resample.
+WEEK_COL = "week"
+DAY_COL = "ds"
 
 
 def wall_date(ts: Column | str, is_instant: bool = False) -> Column:
@@ -70,14 +73,13 @@ def weekly_resample_sum(
     keys: Sequence[str],
     ts_col: str,
     value_col: str,
-    week_col: str = "week",
     out_col: str | None = None,
 ) -> DataFrame:
     """Sparse weekly sum: groupBy(keys, W-SUN label) [A2 without density]."""
     out_col = out_col or value_col
     return (
-        df.withColumn(week_col, week_ending_sunday(ts_col, _is_instant(df, ts_col)))
-        .groupBy(*keys, week_col)
+        df.withColumn(WEEK_COL, week_ending_sunday(ts_col, _is_instant(df, ts_col)))
+        .groupBy(*keys, WEEK_COL)
         .agg(F.sum(value_col).alias(out_col))
     )
 
@@ -87,7 +89,6 @@ def weekly_dense_resample(
     keys: Sequence[str],
     ts_col: str,
     value_col: str,
-    week_col: str = "week",
     min_span_weeks: int | None = None,
     min_total: float | None = None,
 ) -> DataFrame:
@@ -134,15 +135,15 @@ def weekly_dense_resample(
     projection.
     """
     keys = list(keys)
-    weekly = weekly_resample_sum(df, keys, ts_col, value_col, week_col)
+    weekly = weekly_resample_sum(df, keys, ts_col, value_col)
     aggs = [
         F.array_sort(
-            F.collect_list(F.struct(F.col(week_col).alias("w"), F.col(value_col).alias("v")))
+            F.collect_list(F.struct(F.col(WEEK_COL).alias("w"), F.col(value_col).alias("v")))
         ).alias("_es")
     ]
     if min_span_weeks is not None:
-        aggs.append(F.min(week_col).alias("_w_min"))
-        aggs.append(F.max(week_col).alias("_w_max"))
+        aggs.append(F.min(WEEK_COL).alias("_w_min"))
+        aggs.append(F.max(WEEK_COL).alias("_w_max"))
     if min_total is not None:
         aggs.append(F.sum(value_col).alias("_tot"))
     per_series = weekly.groupBy(*keys).agg(*aggs)
@@ -186,12 +187,12 @@ def weekly_dense_resample(
         F.col("_g.v").alias("_v0"),
         F.explode_outer(
             F.sequence(F.col("_g.w"), gap_end, F.expr("interval 7 days"))
-        ).alias(week_col),
+        ).alias(WEEK_COL),
     )
     return dense.select(
         *keys,
-        week_col,
-        F.when(F.col(week_col) == F.col("_w0"), F.col("_v0"))
+        WEEK_COL,
+        F.when(F.col(WEEK_COL) == F.col("_w0"), F.col("_v0"))
         .otherwise(F.lit(0.0))
         .alias(value_col),
     )
@@ -202,27 +203,20 @@ def daily_resample_sum(
     keys: Sequence[str],
     ts_col: str,
     value_col: str,
-    day_col: str = "ds",
 ) -> DataFrame:
     """pandas ``resample('D', on=ts).agg(sum)`` [A3: limpieza_de_datos.py:23]
     (sparse; pair with ``densify_days`` for pandas density)."""
     return (
-        df.withColumn(day_col, wall_date(ts_col, _is_instant(df, ts_col)))
-        .groupBy(*keys, day_col)
+        df.withColumn(DAY_COL, wall_date(ts_col, _is_instant(df, ts_col)))
+        .groupBy(*keys, DAY_COL)
         .agg(F.sum(value_col).alias(value_col))
     )
 
 
-def densify_days(
-    daily: DataFrame,
-    keys: Sequence[str],
-    day_col: str = "ds",
-    value_cols: Sequence[str] = ("y",),
-    fill: float = 0.0,
-) -> DataFrame:
+def densify_days(daily: DataFrame, keys: Sequence[str]) -> DataFrame:
     keys = list(keys)
     bounds = daily.groupBy(*keys).agg(
-        F.min(day_col).alias("_min_d"), F.max(day_col).alias("_max_d")
+        F.min(DAY_COL).alias("_min_d"), F.max(DAY_COL).alias("_max_d")
     )
     # explode_outer: a plain explode makes InferFiltersFromGenerate add
     # a `size(sequence(...)) > 0` pre-filter that materializes every
@@ -230,7 +224,7 @@ def densify_days(
     # the outer variant is semantics-identical here.
     spine = bounds.select(
         *keys,
-        F.explode_outer(F.sequence("_min_d", "_max_d", F.expr("interval 1 day"))).alias(day_col),
+        F.explode_outer(F.sequence("_min_d", "_max_d", F.expr("interval 1 day"))).alias(DAY_COL),
     )
-    dense = spine.join(daily, on=[*keys, day_col], how="left")
-    return dense.na.fill({c: fill for c in value_cols})
+    dense = spine.join(daily, on=[*keys, DAY_COL], how="left")
+    return dense.na.fill({"y": 0.0})

@@ -16,16 +16,18 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.functions import pandas_udf
 
+# Columns of the embeddings table every operator here reads.
+ID_COL = "vec_id"
+VEC_COL = "embedding"
+LABEL_COL = "label"
+# Planted neighbor ids start here; every natural id lies below it.
+PLANTED_ID_BASE = 100_000
+
 
 def planted_neighbors_corpus(
     embeddings: DataFrame,
     n_queries: int = 5,
     k: int = 10,
-    eps: float = 0.001,
-    id_base: int = 100_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Corpus ∪ k deterministic planted near-neighbors per query — the
     recall fixture the approximate-ANN driver gates run against.
@@ -34,19 +36,19 @@ def planted_neighbors_corpus(
     ~0.5, pure noise floor), so raw approximate output can't be
     oracle-gated: shortlist membership is implementation-defined
     there. Planted neighbor j of query q is the query vector scaled by
-    (1 + eps·j) — direction preserved EXACTLY (cos = 1 up to float
+    (1 + 0.001·j) — direction preserved EXACTLY (cos = 1 up to float
     rounding, far above the noise floor) and squared-L2 distance
-    eps·j·‖v‖, far below any natural candidate — so every correct ANN
+    0.001·j·‖v‖, far below any natural candidate — so every correct ANN
     index, under any partitioning/config, must retrieve them; a floor
     on planted recall is therefore a deterministic boolean a SQL
-    oracle can assert TRUE. Planted ids are id_base + qid·100 + j
+    oracle can assert TRUE. Planted ids are PLANTED_ID_BASE + qid·100 + j
     (j in 1..k), labels inherited from the query. All planting is
     native column expressions (explode over a sequence + a transform
     over the array) — no driver-side materialization, scales with the
     query set, not the corpus."""
     # Guard the id arithmetic (r10 ADVICE): planted ids live at
-    # id_base + qid*100 + j, so j must stay under the 100-wide stride
-    # and every NATURAL id must stay below id_base — otherwise a
+    # PLANTED_ID_BASE + qid*100 + j, so j must stay under the 100-wide stride
+    # and every NATURAL id must stay below PLANTED_ID_BASE — otherwise a
     # natural row could masquerade as a planted hit and the recall
     # gate could pass falsely. k is checked eagerly; the id ceiling is
     # enforced lazily inside the plan (raise_error on the natural
@@ -54,34 +56,34 @@ def planted_neighbors_corpus(
     if k >= 100:
         raise ValueError(f"planted_neighbors_corpus: k={k} must be < 100 (id stride)")
     natural_id = F.when(
-        F.col(id_col) >= id_base,
+        F.col(ID_COL) >= PLANTED_ID_BASE,
         F.raise_error(
             F.concat(
                 F.lit(
-                    f"planted_neighbors_corpus: natural {id_col} >= id_base "
-                    f"{id_base} collides with planted id space: "
+                    f"planted_neighbors_corpus: natural {ID_COL} >= id_base "
+                    f"{PLANTED_ID_BASE} collides with planted id space: "
                 ),
-                F.col(id_col).cast("string"),
+                F.col(ID_COL).cast("string"),
             )
         ),
-    ).otherwise(F.col(id_col))
-    embeddings = embeddings.withColumn(id_col, natural_id)
-    q = embeddings.filter(F.col(id_col) < n_queries)
+    ).otherwise(F.col(ID_COL))
+    embeddings = embeddings.withColumn(ID_COL, natural_id)
+    q = embeddings.filter(F.col(ID_COL) < n_queries)
     j = F.col("_j")
     planted = q.select(
-        F.col(id_col),
-        F.col(label_col),
-        F.col(vec_col),
+        F.col(ID_COL),
+        F.col(LABEL_COL),
+        F.col(VEC_COL),
         F.explode(F.sequence(F.lit(1), F.lit(k))).alias("_j"),
     ).select(
-        (F.lit(id_base) + F.col(id_col) * 100 + j).alias(id_col),
+        (F.lit(PLANTED_ID_BASE) + F.col(ID_COL) * 100 + j).alias(ID_COL),
         F.transform(
-            F.col(vec_col),
-            lambda x: (x * (F.lit(1.0) + F.lit(eps) * j)).cast("float"),
-        ).alias(vec_col),
-        F.col(label_col),
+            F.col(VEC_COL),
+            lambda x: (x * (F.lit(1.0) + F.lit(0.001) * j)).cast("float"),
+        ).alias(VEC_COL),
+        F.col(LABEL_COL),
     )
-    return embeddings.select(id_col, vec_col, label_col).unionByName(planted)
+    return embeddings.select(ID_COL, VEC_COL, LABEL_COL).unionByName(planted)
 
 
 def planted_recall_gate(
@@ -89,7 +91,6 @@ def planted_recall_gate(
     query_col: str,
     k: int = 10,
     floor: int | None = None,
-    id_base: int = 100_000,
 ) -> DataFrame:
     """Fold an ANN top-k result over the planted corpus into the
     driver-visible contract: (query_id, n_retrieved, planted_recall_ok)
@@ -101,8 +102,8 @@ def planted_recall_gate(
     verdict #3 — same pattern as the sketch tolerance bands)."""
     if floor is None:
         floor = k - 1
-    hit = (F.col("cand_id") >= id_base) & (
-        F.floor((F.col("cand_id") - id_base) / 100) == F.col(query_col)
+    hit = (F.col("cand_id") >= PLANTED_ID_BASE) & (
+        F.floor((F.col("cand_id") - PLANTED_ID_BASE) / 100) == F.col(query_col)
     )
     return (
         topk.groupBy(query_col)
@@ -149,17 +150,15 @@ def norm(a: Column, dim: int | None = None) -> Column:
     return F.sqrt(dot(a, a, dim))
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    denom = norm(a, dim) * norm(b, dim)
-    return F.when(denom != 0, dot(a, b, dim) / denom).otherwise(F.lit(0.0))
+def cosine(a: Column, b: Column) -> Column:
+    denom = norm(a) * norm(b)
+    return F.when(denom != 0, dot(a, b) / denom).otherwise(F.lit(0.0))
 
 
 def cosine_topk(
     embeddings: DataFrame,
     query_filter: Column,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k neighbors for each query vector (brute force).
 
@@ -169,10 +168,10 @@ def cosine_topk(
     from pyspark.sql import Window
 
     q = embeddings.filter(query_filter).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+        F.col(ID_COL).alias("query_id"), F.col(VEC_COL).alias("qvec")
     )
     c = embeddings.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec")
+        F.col(ID_COL).alias("cand_id"), F.col(VEC_COL).alias("cvec")
     )
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -191,10 +190,6 @@ def hard_negative_topk(
     embeddings: DataFrame,
     anchor_filter: Column,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    round_digits: int = 6,
     max_anchors: int = 65_536,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for each anchor,
@@ -227,9 +222,9 @@ def hard_negative_topk(
     rows = (
         embeddings.filter(anchor_filter)
         .select(
-            F.col(id_col).alias("aid"),
-            F.col(label_col).alias("albl"),
-            F.col(vec_col).cast("array<double>"),
+            F.col(ID_COL).alias("aid"),
+            F.col(LABEL_COL).alias("albl"),
+            F.col(VEC_COL).cast("array<double>"),
         )
         .limit(max_anchors + 1)
         .collect()
@@ -267,7 +262,7 @@ def hard_negative_topk(
             denom = np.outer(cnorm, qnorm)
             with np.errstate(divide="ignore", invalid="ignore"):
                 sims = np.where(denom != 0.0, (C @ Q.T) / denom, 0.0)
-            sims = np.round(sims, round_digits)
+            sims = np.round(sims, 6)
             sims[clbls[:, None] == albls[None, :]] = -np.inf  # mask same label
             take = min(k, len(cids))
             # one emission frame per batch (a per-anchor pd.DataFrame
@@ -294,9 +289,9 @@ def hard_negative_topk(
             )
 
     cands = embeddings.select(
-        F.col(id_col).alias("negative_id"),
-        F.col(label_col).alias("negative_label"),
-        F.col(vec_col).alias("cvec"),
+        F.col(ID_COL).alias("negative_id"),
+        F.col(LABEL_COL).alias("negative_label"),
+        F.col(VEC_COL).alias("cvec"),
     )
     partial = cands.mapInPandas(score_batches, out_schema)
     w = Window.partitionBy("anchor_id").orderBy(
@@ -319,8 +314,6 @@ def hard_negative_topk(
 def cosine_neardup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_rows: int = 100_000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, exact all-pairs [N1
@@ -347,8 +340,8 @@ def cosine_neardup_pairs(
     # widths fall back to the interpreted fold, never a wrong answer.
     stats = embeddings.agg(
         F.count(F.lit(1)).alias("n"),
-        F.min(F.size(F.col(vec_col))).alias("dmin"),
-        F.max(F.size(F.col(vec_col))).alias("dmax"),
+        F.min(F.size(F.col(VEC_COL))).alias("dmin"),
+        F.max(F.size(F.col(VEC_COL))).alias("dmax"),
     ).first()
     n = stats["n"]
     dim = stats["dmin"] if stats["dmin"] == stats["dmax"] else None
@@ -369,12 +362,12 @@ def cosine_neardup_pairs(
     # one task (the BNLJ stream side keeps the scan's partitioning).
     par = embeddings.sparkSession.sparkContext.defaultParallelism
     a = (
-        embeddings.repartition(par, F.col(id_col))
-        .select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
+        embeddings.repartition(par, F.col(ID_COL))
+        .select(F.col(ID_COL).alias("id_a"), F.col(VEC_COL).alias("va"))
         .withColumn("na", norm(F.col("va"), dim))
     )
     b = embeddings.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")
+        F.col(ID_COL).alias("id_b"), F.col(VEC_COL).alias("vb")
     ).withColumn("nb", norm(F.col("vb"), dim))
     denom = F.col("na") * F.col("nb")
     cos = F.when(denom != 0, dot(F.col("va"), F.col("vb"), dim) / denom).otherwise(
@@ -389,7 +382,7 @@ def cosine_neardup_pairs(
     )
 
 
-def _plane_projections(n_planes: int, seed: int = 7):
+def _plane_projections(n_planes: int):
     """Arrow-batched hyperplane projections: a pandas_udf computing all
     ``n_planes`` Gaussian random projections of each vector as ONE
     numpy matmul per batch (rows x dim) @ (dim x n_planes).
@@ -420,7 +413,7 @@ def _plane_projections(n_planes: int, seed: int = 7):
         if len(v) == 0:
             return pd.Series([], dtype=object)
         mat = np.vstack(v.to_numpy()).astype(np.float64)
-        weights = np.random.RandomState(seed).standard_normal(
+        weights = np.random.RandomState(7).standard_normal(
             (mat.shape[1], n_planes)
         )
         return pd.Series(list(mat @ weights))
@@ -428,7 +421,7 @@ def _plane_projections(n_planes: int, seed: int = 7):
     return proj
 
 
-def _rademacher_int_projections(n_planes: int, seed_tag: str = "lshw"):
+def _rademacher_int_projections(n_planes: int):
     """Arrow-batched DETERMINISTIC sign-LSH projections, exact-integer
     arithmetic end to end — the oracle-checkable twin of the Gaussian
     ``_plane_projections`` family.
@@ -461,7 +454,7 @@ def _rademacher_int_projections(n_planes: int, seed_tag: str = "lshw"):
         w = np.empty((dim, n_planes), dtype=np.int64)
         for p in range(n_planes):
             for d in range(dim):
-                h = hashlib.md5(f"{seed_tag}:{p}:{d}".encode()).hexdigest()
+                h = hashlib.md5(f"lshw:{p}:{d}".encode()).hexdigest()
                 w[d, p] = 1 if int(h[:8], 16) % 2 == 0 else -1
         ei = np.rint(np.round(mat, 6) * 1e6).astype(np.int64)
         return pd.Series(list(ei @ w))
@@ -474,10 +467,9 @@ def with_sign_band_keys(
     vec_col: str,
     n_planes: int = 32,
     bands: int = 4,
-    prefix: str = "bk",
     int_exact: bool = False,
 ) -> DataFrame:
-    """df + ``bands`` LSH band-key columns ({prefix}0..), each the sign
+    """df + ``bands`` LSH band-key columns (bk0..), each the sign
     pattern of n_planes/bands hyperplane projections (band index
     prefixed so keys from different bands never collide). The
     projection array materializes as its own column (the ArrowEvalPython
@@ -500,17 +492,13 @@ def with_sign_band_keys(
             )
             for r in range(rows)
         ]
-        keys.append(F.concat(F.lit(f"{b}|"), *bits).alias(f"{prefix}{b}"))
+        keys.append(F.concat(F.lit(f"{b}|"), *bits).alias(f"bk{b}"))
     return tmp.select(*df.columns, *keys)
 
 
 def cosine_neardup_pairs_bucketed(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    n_planes: int = 32,
-    bands: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding near-dup pairs via banded sign-LSH candidates + exact
     cosine verification [N3 scale path].
@@ -519,8 +507,8 @@ def cosine_neardup_pairs_bucketed(
     (equi-join on the band key — never an all-pairs join); every
     candidate is verified with the exact cosine, so precision is exact
     and only recall is probabilistic: a pair at angle θ matches a band
-    with (1 - θ/π)^(n_planes/bands), and misses all ``bands`` bands
-    with the complement^bands. Two regimes matter:
+    with (1 - θ/π)^8 (32 planes in 4 bands), and misses all 4 bands
+    with the complement^4. Two regimes matter:
 
     - TRUE near-duplicates (cos ≈ 1: exact copies, rescales, tiny
       perturbations — what corpus dedup actually hunts): θ ≈ 0, every
@@ -539,14 +527,14 @@ def cosine_neardup_pairs_bucketed(
     two sides are the identical subtree — ReuseExchange materializes
     it once), exact verify on candidates only.
     """
-    emb = embeddings.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
-    keyed = with_sign_band_keys(emb, "vec", n_planes, bands)
+    emb = embeddings.select(F.col(ID_COL).alias("vid"), F.col(VEC_COL).alias("vec"))
+    keyed = with_sign_band_keys(emb, "vec")
     # Keys materialize as named columns BEFORE the explode; explode_outer
     # dodges the InferFiltersFromGenerate re-evaluation trap.
     melted = keyed.select(
         "vid",
         "vec",
-        F.explode_outer(F.array(*[f"bk{b}" for b in range(bands)])).alias("band_key"),
+        F.explode_outer(F.array(*[f"bk{b}" for b in range(4)])).alias("band_key"),
     ).filter(F.col("band_key").isNotNull())
     a, b_ = melted.alias("a"), melted.alias("b")
     # The merge hint pins the self-join to sort-merge: both sides are
@@ -582,8 +570,6 @@ def lsh_bucketed_topk(
     k: int = 10,
     n_planes: int = 24,
     bands: int = 12,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Banded random-hyperplane LSH ANN: vectors bucket into ``bands``
     sign-pattern keys (n_planes/bands bits each); a candidate is any
@@ -616,19 +602,19 @@ def lsh_bucketed_topk(
     from pyspark.sql import Window
 
     keyed = with_sign_band_keys(
-        embeddings.select(F.col(id_col), F.col(vec_col)), vec_col, n_planes, bands,
+        embeddings.select(F.col(ID_COL), F.col(VEC_COL)), VEC_COL, n_planes, bands,
         int_exact=True,
     )
     melted = keyed.select(
-        F.col(id_col),
-        F.col(vec_col),
+        F.col(ID_COL),
+        F.col(VEC_COL),
         F.explode_outer(F.array(*[f"bk{b}" for b in range(bands)])).alias("band_key"),
     ).filter(F.col("band_key").isNotNull())
     q = melted.filter(query_filter).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"), "band_key"
+        F.col(ID_COL).alias("query_id"), F.col(VEC_COL).alias("qvec"), "band_key"
     )
     c = melted.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"), "band_key"
+        F.col(ID_COL).alias("cand_id"), F.col(VEC_COL).alias("cvec"), "band_key"
     )
     scored = (
         c.join(F.broadcast(q), "band_key")
@@ -699,10 +685,7 @@ def _int_cosine(dot_dec: Column, n2_a: Column, n2_b: Column) -> Column:
     return F.when(denom != 0, dot_dec.cast("double") / denom).otherwise(F.lit(0.0))
 
 
-def ivf_index(
-    embeddings: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
-    label_col: str = "label",
-) -> tuple[DataFrame, DataFrame]:
+def ivf_index(embeddings: DataFrame) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer [N3 scale path]: centroids from the label
     partitions (stand-in for a k-means fit — at scale the centroids
     come from MLlib KMeans on a sample; the index/probe machinery here
@@ -725,14 +708,14 @@ def ivf_index(
     csv(bigint[])/cn2(decimal norm²), assignments: id/cell).
     """
     el = embeddings.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(label_col),
-        F.posexplode(vec_col).alias("pos", "val"),
+        F.col(ID_COL).alias("cand_id"),
+        F.col(LABEL_COL),
+        F.posexplode(VEC_COL).alias("pos", "val"),
     ).select(
-        "cand_id", label_col, "pos", _snap_int6(F.col("val")).alias("ei")
+        "cand_id", LABEL_COL, "pos", _snap_int6(F.col("val")).alias("ei")
     )
-    csum = el.groupBy(label_col, "pos").agg(F.sum("ei").alias("cs"))
-    cent = csum.groupBy(label_col).agg(
+    csum = el.groupBy(LABEL_COL, "pos").agg(F.sum("ei").alias("cs"))
+    cent = csum.groupBy(LABEL_COL).agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("pos", "cs"))),
             lambda s: s["cs"].cast("double"),
@@ -743,19 +726,19 @@ def ivf_index(
     )
     cent = cent.withColumn("cn2", _dot_dec(F.col("csv"), F.col("csv")))
     vecs = embeddings.select(
-        F.col(id_col).alias("cand_id"),
-        F.transform(vec_col, _snap_int6).alias("vi"),
+        F.col(ID_COL).alias("cand_id"),
+        F.transform(VEC_COL, _snap_int6).alias("vi"),
     ).withColumn("vn2", _dot_dec(F.col("vi"), F.col("vi")))
     scored = vecs.crossJoin(F.broadcast(cent)).withColumn(
         "sim", _int_cosine(_dot_dec(F.col("vi"), F.col("csv")), F.col("vn2"), F.col("cn2"))
     )
     from pyspark.sql import Window
 
-    w = Window.partitionBy("cand_id").orderBy(F.col("sim").desc(), F.col(label_col))
+    w = Window.partitionBy("cand_id").orderBy(F.col("sim").desc(), F.col(LABEL_COL))
     assign = (
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") == 1)
-        .select("cand_id", F.col(label_col).alias("cell"))
+        .select("cand_id", F.col(LABEL_COL).alias("cell"))
     )
     return cent, assign
 
@@ -767,19 +750,16 @@ def _ivf_probe(
     query_filter: Column,
     k: int,
     nprobe: int,
-    id_col: str,
-    vec_col: str,
-    cell_col: str,
 ) -> DataFrame:
     """Shared IVF probe: rank centroids per query, search only the
     vectors in the ``nprobe`` nearest inverted lists, exact cosine
-    re-rank inside. ``cent`` must have (cell_col, centroid); ``assign``
-    (cand_id, cell_col)."""
+    re-rank inside. ``cent`` must have (cell, centroid); ``assign``
+    (cand_id, cell)."""
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
     q = embeddings.filter(query_filter).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+        F.col(ID_COL).alias("query_id"), F.col(VEC_COL).alias("qvec")
     )
     qcells = (
         q.crossJoin(F.broadcast(cent))
@@ -787,15 +767,15 @@ def _ivf_probe(
         .withColumn(
             "crk",
             F.row_number().over(
-                Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col(cell_col))
+                Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("cell"))
             ),
         )
         .filter(F.col("crk") <= nprobe)
-        .select("query_id", "qvec", F.col(cell_col).alias("cell"))
+        .select("query_id", "qvec", "cell")
     )
     cands = embeddings.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec")
-    ).join(assign.withColumnRenamed(cell_col, "cell"), "cand_id")
+        F.col(ID_COL).alias("cand_id"), F.col(VEC_COL).alias("cvec")
+    ).join(assign, "cand_id")
     scored = (
         cands.join(F.broadcast(qcells), "cell")
         .filter(F.col("cand_id") != F.col("query_id"))
@@ -815,9 +795,6 @@ def ivf_topk(
     query_filter: Column,
     k: int = 10,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """IVF probe over label-derived centroids (deterministic stand-in
     quantizer — the probe machinery is identical to the k-means
@@ -833,11 +810,11 @@ def ivf_topk(
     vs the brute-force baseline."""
     from pyspark.sql import Window
 
-    cent, assign = ivf_index(embeddings, id_col, vec_col, label_col)
+    cent, assign = ivf_index(embeddings)
     q = embeddings.filter(query_filter).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        F.transform(vec_col, _snap_int6).alias("qi"),
+        F.col(ID_COL).alias("query_id"),
+        F.col(VEC_COL).alias("qvec"),
+        F.transform(VEC_COL, _snap_int6).alias("qi"),
     ).withColumn("qn2", _dot_dec(F.col("qi"), F.col("qi")))
     qcells = (
         q.crossJoin(F.broadcast(cent))
@@ -849,15 +826,15 @@ def ivf_topk(
             "crk",
             F.row_number().over(
                 Window.partitionBy("query_id").orderBy(
-                    F.col("sim").desc(), F.col(label_col)
+                    F.col("sim").desc(), F.col(LABEL_COL)
                 )
             ),
         )
         .filter(F.col("crk") <= nprobe)
-        .select("query_id", "qvec", F.col(label_col).alias("cell"))
+        .select("query_id", "qvec", F.col(LABEL_COL).alias("cell"))
     )
     cands = embeddings.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec")
+        F.col(ID_COL).alias("cand_id"), F.col(VEC_COL).alias("cvec")
     ).join(assign, "cand_id")
     scored = (
         cands.join(F.broadcast(qcells), "cell")
@@ -879,9 +856,6 @@ def ivf_kmeans_topk(
     k: int = 10,
     nprobe: int = 2,
     n_cells: int = 10,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF with a REAL coarse quantizer: MLlib KMeans (seeded, so the
     index is reproducible) fit on the corpus, inverted lists from
@@ -896,28 +870,23 @@ def ivf_kmeans_topk(
     from pyspark.ml.functions import array_to_vector
 
     feat = embeddings.select(
-        F.col(id_col).alias("cand_id"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
+        F.col(ID_COL).alias("cand_id"),
+        array_to_vector(F.col(VEC_COL).cast("array<double>")).alias("features"),
     )
-    model = KMeans(k=n_cells, seed=seed, maxIter=20).fit(feat)
+    model = KMeans(k=n_cells, seed=42, maxIter=20).fit(feat)
     assign = model.transform(feat).select("cand_id", F.col("prediction").alias("cell"))
     spark = embeddings.sparkSession
     cent = spark.createDataFrame(
         [(int(i), [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
         "cell int, centroid array<double>",
     )
-    return _ivf_probe(
-        embeddings, cent, assign, query_filter, k, nprobe, id_col, vec_col, "cell"
-    )
+    return _ivf_probe(embeddings, cent, assign, query_filter, k, nprobe)
 
 
 def gemm_cosine_topk(
     embeddings: DataFrame,
     query_filter: Column,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
     max_queries: int = 65_536,
 ) -> DataFrame:
     """Exact cosine top-k via blocked matrix multiplication — the
@@ -936,7 +905,7 @@ def gemm_cosine_topk(
     matrix.
 
     Ranking ties are pinned the same way on both engines: scores are
-    rounded to ``round_digits`` BEFORE ranking (GEMM accumulates in a
+    rounded to 6 digits BEFORE ranking (GEMM accumulates in a
     different order than a left fold, so unrounded last-ulp ordering
     is not reproducible across engines), then cand_id breaks ties.
 
@@ -953,7 +922,7 @@ def gemm_cosine_topk(
 
     rows = (
         embeddings.filter(query_filter)
-        .select(F.col(id_col).alias("qid"), F.col(vec_col).cast("array<double>"))
+        .select(F.col(ID_COL).alias("qid"), F.col(VEC_COL).cast("array<double>"))
         .limit(max_queries + 1)
         .collect()
     )
@@ -985,7 +954,7 @@ def gemm_cosine_topk(
             denom = np.outer(cnorm, qnorm)
             with np.errstate(divide="ignore", invalid="ignore"):
                 sims = np.where(denom != 0.0, (C @ Q.T) / denom, 0.0)
-            sims = np.round(sims, round_digits)
+            sims = np.round(sims, 6)
             sims[cids[:, None] == qids[None, :]] = -np.inf  # mask self
             take = min(k, len(cids))
             parts = []
@@ -1006,7 +975,7 @@ def gemm_cosine_topk(
             yield pd.concat(parts, ignore_index=True)
 
     cands = embeddings.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec")
+        F.col(ID_COL).alias("cand_id"), F.col(VEC_COL).alias("cvec")
     )
     partial = cands.mapInPandas(score_batches, out_schema)
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "cand_id")

@@ -20,11 +20,9 @@ def recency_window(keys: Sequence[str], time_col: str) -> WindowSpec:
     return Window.partitionBy(*keys).orderBy(F.col(time_col).desc())
 
 
-def add_recency_rank(
-    df: DataFrame, keys: Sequence[str], time_col: str, rank_col: str = "rn"
-) -> DataFrame:
-    """rank 1 = most recent bucket [W4: PRACTICA3.py:110-111]."""
-    return df.withColumn(rank_col, F.row_number().over(recency_window(keys, time_col)))
+def add_recency_rank(df: DataFrame, keys: Sequence[str], time_col: str) -> DataFrame:
+    """``rn`` 1 = most recent bucket [W4: PRACTICA3.py:110-111]."""
+    return df.withColumn("rn", F.row_number().over(recency_window(keys, time_col)))
 
 
 def add_lags(
@@ -32,10 +30,9 @@ def add_lags(
     keys: Sequence[str],
     time_col: str,
     value_col: str,
-    lags: Sequence[int] = (1, 7),
 ) -> DataFrame:
-    """Lag features [W2: limpieza_de_datos.py:27-28]."""
+    """``lag1`` and ``lag7`` features [W2: limpieza_de_datos.py:27-28]."""
     w = Window.partitionBy(*keys).orderBy(time_col)
     return df.withColumns(
-        {f"lag{k}": F.lag(value_col, k).over(w) for k in lags}
+        {f"lag{k}": F.lag(value_col, k).over(w) for k in (1, 7)}
     )

@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column
 
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "on", "for", "with")
+SHINGLE_N = 3  # words per shingle
 
 
 def _c(c: Column | str) -> Column:
@@ -24,16 +25,16 @@ def tokens(text: Column | str) -> Column:
     return F.split(F.lower(F.trim(_c(text))), r"\s+")
 
 
-def word_shingles(toks: Column, n: int = 3) -> Column:
-    """Distinct n-gram word shingles as space-joined strings."""
-    idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
+def word_shingles(toks: Column) -> Column:
+    """Distinct ``SHINGLE_N``-gram word shingles as space-joined strings."""
+    idx = F.sequence(F.lit(1), F.size(toks) - (SHINGLE_N - 1))
     grams = F.transform(
         idx,
         lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + j) for j in range(n)]
+            " ", *[F.element_at(toks, i + j) for j in range(SHINGLE_N)]
         ),
     )
-    return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(
+    return F.when(F.size(toks) >= SHINGLE_N, F.array_distinct(grams)).otherwise(
         F.array().cast("array<string>")
     )
 

@@ -28,20 +28,17 @@ def winsorize_by_group(
     keys: Sequence[str],
     value_col: str,
     out_col: str | None = None,
-    lower_q: float = 0.01,
-    upper_q: float = 0.99,
-    min_positive: int = 5,
 ) -> DataFrame:
-    """Add ``out_col`` = value clipped to per-group positive-value
-    quantiles; pass-through when the group has <= ``min_positive``
+    """Add ``out_col`` = value clipped to the per-group 1st and 99th
+    positive-value percentiles; pass-through when the group has <= 5
     positive values (PRACTICA3.py:103-107)."""
     out_col = out_col or f"{value_col}_w"
     w = Window.partitionBy(*keys)
     pos = F.when(F.col(value_col) > 0, F.col(value_col))
     n_pos = F.count(pos).over(w)
-    lo = F.percentile(pos, F.lit(lower_q)).over(w)
-    hi = F.percentile(pos, F.lit(upper_q)).over(w)
-    clipped = F.when(n_pos > min_positive, clip(F.col(value_col), lo, hi)).otherwise(
+    lo = F.percentile(pos, F.lit(0.01)).over(w)
+    hi = F.percentile(pos, F.lit(0.99)).over(w)
+    clipped = F.when(n_pos > 5, clip(F.col(value_col), lo, hi)).otherwise(
         F.col(value_col)
     )
     return df.withColumn(out_col, clipped)

@@ -73,8 +73,6 @@ def zorder_layout(
     path: str,
     cols: list[str],
     n_files: int,
-    bits: int = 12,
-    max_records_per_file: int = 1_000_000,
 ) -> None:
     """Rewrite ``df`` at ``path`` clustered along the Morton curve of
     ``cols``: ``compact_files`` range-partitions on the z-key (disjoint
@@ -82,10 +80,4 @@ def zorder_layout(
     written. Conjunctive range predicates over any subset of ``cols``
     then skip files/row-groups via footer min/max — measured in
     tests/test_zorder.py."""
-    compact_files(
-        df,
-        path,
-        sort_col=zvalue(df, cols, bits),
-        n_files=n_files,
-        max_records_per_file=max_records_per_file,
-    )
+    compact_files(df, path, sort_col=zvalue(df, cols), n_files=n_files)

@@ -218,7 +218,7 @@ inv AS (
 )"""
 
 
-def flagship_oracle(top_k: int = 100) -> str:
+def flagship_oracle() -> str:
     return f"""
 WITH {flagship_stats_ctes()},
 final AS (
@@ -239,5 +239,5 @@ FROM (
   SELECT *, row_number() OVER (
     ORDER BY qty_to_order DESC, product_id, store_id) AS rk
   FROM final
-) WHERE rk <= {top_k}
+) WHERE rk <= 100
 """

@@ -122,13 +122,11 @@ def notebook_flow(
     from ..operators.split import add_lags
 
     daily = densify_days(
-        daily_resample_sum(sales_daily_source, keys, ts_col, value_col, day_col="ds")
+        daily_resample_sum(sales_daily_source, keys, ts_col, value_col)
         .withColumnRenamed(value_col, "y"),
         keys,
-        "ds",
-        ("y",),
     )
-    lagged = add_lags(daily, keys, "ds", "y", lags=(1, 7)).na.drop(
+    lagged = add_lags(daily, keys, "ds", "y").na.drop(
         subset=["lag1", "lag7"]
     )
     w = Window.partitionBy(*keys).orderBy(F.col("ds").desc())

@@ -341,7 +341,7 @@ def q_decontamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.textops import tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    shingles = F.transform(word_shingles(tokens("text"), 3), shingle_hash32)
+    shingles = F.transform(word_shingles(tokens("text")), shingle_hash32)
     ev_keys = (
         docs.filter(F.col("doc_id") % 97 == 0)
         .select(F.explode(shingles).alias("hs"))

@@ -82,7 +82,7 @@ def q_flagship_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _partitioned_oracle() -> str:
     """The flagship oracle with the cutoff pushed into the sales CTE —
     the flat-table equivalent of the partition filter."""
-    base = flagship_oracle(100)
+    base = flagship_oracle()
     anchor = "FROM lineitem\n  WHERE "
     assert anchor in base, "flagship oracle shape changed; update anchor"
     return base.replace(

@@ -79,11 +79,9 @@ WHERE l_partkey % 100 = 0 AND l_suppkey % 10 = 0
 # (the notebook flow, limpieza_de_datos.py:23-29, on the events table)
 def q_daily_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    daily = daily_resample_sum(ev, ["event_type"], "ts", "value", day_col="ds")
-    daily = densify_days(
-        daily.withColumnRenamed("value", "y"), ["event_type"], "ds", ("y",)
-    )
-    lagged = add_lags(daily, ["event_type"], "ds", "y", lags=(1, 7))
+    daily = daily_resample_sum(ev, ["event_type"], "ts", "value")
+    daily = densify_days(daily.withColumnRenamed("value", "y"), ["event_type"])
+    lagged = add_lags(daily, ["event_type"], "ds", "y")
     return (
         lagged.na.drop(subset=["lag1", "lag7"])
         .select(
@@ -136,11 +134,9 @@ FROM lagged WHERE lag1 IS NOT NULL AND lag7 IS NOT NULL
 def q_backtest_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     daily = densify_days(
-        daily_resample_sum(ev, ["event_type"], "ts", "value", day_col="ds")
+        daily_resample_sum(ev, ["event_type"], "ts", "value")
         .withColumnRenamed("value", "y"),
         ["event_type"],
-        "ds",
-        ("y",),
     )
     w = Window.partitionBy("event_type").orderBy("ds")
     scored = daily.withColumn("pred", F.lag("y", 7).over(w)).na.drop(subset=["pred"])

@@ -1252,7 +1252,7 @@ def q_entity_clusters_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not checkpointed (r13): it is big relative to its post-exchange
     # recompute (AQE reuses the block join across the edge-union
     # branches); checkpointing it probed 5.8 -> 7.3 s.
-    cc = connected_components(pairs, src="id_a", dst="id_b", assume_distinct=True)
+    cc = connected_components(pairs, assume_distinct=True)
     names = part.select(
         F.col("p_partkey").alias("entity_id"),
         F.col("p_name").alias("canonical_name"),

@@ -729,7 +729,7 @@ def q_salted_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("l_partkey"), "p_brand"
     )
-    return _brand_revenue(salted_join(li, part, "l_partkey", salt_buckets=8))
+    return _brand_revenue(salted_join(li, part, "l_partkey"))
 
 
 register(

@@ -34,25 +34,9 @@ VENTAS_SCHEMA = StructType(
     ]
 )
 
-# Engine output / report input (PRACTICA3.py:165-175 -> generador.py:31-84).
-# Parquet keeps Forecast/Test as native arrays; the CSV round-trip form
-# stringifies them (FIXTURES.md §3).
-FORECAST_RESULTS_SCHEMA = StructType(
-    [
-        StructField("SKU", StringType()),
-        StructField("Store", StringType()),
-        StructField("MAPE", DoubleType()),
-        StructField("Forecast", ArrayType(DoubleType())),
-        StructField("Test", ArrayType(DoubleType())),
-        StructField("Safety_Stock", LongType()),
-        StructField("Reorder_Point", LongType()),
-        StructField("Qty_to_Order", LongType()),
-        StructField("Runtime_sec", DoubleType()),
-    ]
-)
-
-# CSV round-trip form of the same (arrays stringified, as the reference's
-# to_csv produces at PRACTICA3.py:209).
+# Engine output / report input (PRACTICA3.py:165-175 -> generador.py:31-84)
+# in its CSV round-trip form: Forecast/Test arrays stringified, as the
+# reference's to_csv produces at PRACTICA3.py:209 (FIXTURES.md §3).
 FORECAST_RESULTS_CSV_SCHEMA = StructType(
     [
         StructField("SKU", StringType()),
@@ -64,16 +48,6 @@ FORECAST_RESULTS_CSV_SCHEMA = StructType(
         StructField("Reorder_Point", LongType()),
         StructField("Qty_to_Order", LongType()),
         StructField("Runtime_sec", DoubleType()),
-    ]
-)
-
-# FreshRetailNet-50K shape (limpieza_de_datos.py:12-28).
-FRESH_RETAIL_SCHEMA = StructType(
-    [
-        StructField("product_id", LongType()),
-        StructField("store_id", LongType()),
-        StructField("dt", TimestampType()),
-        StructField("sale_amount", DoubleType()),
     ]
 )
 
@@ -175,9 +149,7 @@ TESTDATA_SCHEMAS: dict[str, StructType] = {
 
 __all__ = [
     "VENTAS_SCHEMA",
-    "FORECAST_RESULTS_SCHEMA",
     "FORECAST_RESULTS_CSV_SCHEMA",
-    "FRESH_RETAIL_SCHEMA",
     "TESTDATA_SCHEMAS",
     "BooleanType",
 ]

@@ -43,12 +43,12 @@ VOCAB = (
 LANGS = ("en", "es", "de", "fr")
 
 
-def doc_text(doc_id: int, n_words: int = 24) -> str:
-    """Deterministic text for a doc_id (md5-driven word picks)."""
+def doc_text(doc_id: int) -> str:
+    """Deterministic 24-word text for a doc_id (md5-driven word picks)."""
     words = []
     h = hashlib.md5(f"docgen:{doc_id}".encode()).digest()
     seed = int.from_bytes(h[:8], "big")
-    for i in range(n_words):
+    for i in range(24):
         seed = (seed * 6364136223846793005 + 1442695040888963407) % (1 << 64)
         words.append(VOCAB[seed % len(VOCAB)])
     return " ".join(words)

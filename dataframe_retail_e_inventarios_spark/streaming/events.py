@@ -34,17 +34,20 @@ EVENTS_STREAM_SCHEMA = StructType(
     ]
 )
 
+# How late an event may arrive and still count.
+WATERMARK = "2 hours"
+
 
 def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-based stream source (stands in for Kafka in tests)."""
     return spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(path)
 
 
-def hourly_counts_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def hourly_counts_stream(events: DataFrame) -> DataFrame:
     """Watermarked tumbling hourly counts per event type; late rows
     beyond the watermark are dropped, state is bounded."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
         .select(
@@ -56,14 +59,14 @@ def hourly_counts_stream(events: DataFrame, watermark: str = "2 hours") -> DataF
     )
 
 
-def sliding_counts_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def sliding_counts_stream(events: DataFrame) -> DataFrame:
     """Watermarked SLIDING windows (1 h wide, 30 min hop): every event
     lands in two overlapping windows, the rolling-rate view a tumbling
     window can't give. State per key lives until the watermark passes
     the window end, so it is bounded at (width/hop)=2 open windows per
     event_type."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("win"), "event_type")
         .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
         .select(
@@ -75,12 +78,12 @@ def sliding_counts_stream(events: DataFrame, watermark: str = "2 hours") -> Data
     )
 
 
-def user_sessions_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Session windows per user: events closer than ``gap`` merge into
+def user_sessions_stream(events: DataFrame) -> DataFrame:
+    """Session windows per user: events closer than 30 minutes merge into
     one session (stateful; watermark bounds session state)."""
     return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
         .agg(F.count("*").alias("n_events"), F.sum("value").alias("total_value"))
         .select(
             F.col("sw.start").alias("session_start"),
@@ -132,14 +135,14 @@ def view_purchase_join_stream(
     ).drop("v_user_id")
 
 
-def dedup_events_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def dedup_events_stream(events: DataFrame) -> DataFrame:
     """Ingest-time exact dedup: drop replayed event_ids inside the
     watermark horizon (dropDuplicatesWithinWatermark — state holds one
     key per event_id only until the watermark passes it, so state is
     bounded; an unbounded dropDuplicates would leak state forever on a
     real firehose). This is the streaming twin of N1 exact dedup — the
     first stage of any streaming training-data ingest."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return events.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
 

@@ -124,7 +124,7 @@ def test_entity_label_prop_round_count(spark):
     part = load_table(spark, SF_SMOKE, "part")
     pairs = blocked_levenshtein_pairs(part, "p_partkey", "p_name", max_dist=1)
     stats = {}
-    connected_components(pairs, src="id_a", dst="id_b", stats=stats)
+    connected_components(pairs, stats=stats)
     assert stats["converged"]
     assert stats["iterations"] <= 6, stats
 

@@ -12,6 +12,8 @@ while building this test).
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pytest
 
 from dataframe_retail_e_inventarios_spark.operators.cleaning import clean_sales
@@ -19,6 +21,7 @@ from dataframe_retail_e_inventarios_spark.operators.forecast_udf import (
     MIN_TOTAL_SALES,
     MIN_WEEKS,
     RESULT_SCHEMA,
+    _fit_partition,
     forecast_with_models,
     process_series,
 )
@@ -63,3 +66,23 @@ def test_map_loop_matches_process_series(spark, ma_only):
                 assert list(a) == list(b), col
         else:
             assert got[col].tolist() == ref[col].tolist(), col
+
+
+def test_fit_partition_yields_each_batch():
+    """Each input batch's fitted rows come out as soon as they are
+    ready, and the frames together equal the one-batch result row for
+    row: a series cut by a batch edge is carried, not split."""
+    weeks = pd.date_range("2024-01-07", periods=20, freq="7D")
+    pdf = pd.DataFrame({
+        "product_id": np.repeat(np.arange(1, 6), len(weeks)),
+        "store_id": 1,
+        "week": np.tile(weeks, 5),
+        "units_sold": np.random.default_rng(0).integers(1, 20, 5 * len(weeks)).astype(float),
+    })
+    edges = [0, 30, 70, len(pdf)]  # both cuts fall inside a series
+    batches = [pdf.iloc[a:b].reset_index(drop=True) for a, b in zip(edges, edges[1:])]
+    whole = pd.concat(_fit_partition(iter([pdf]), ma_only=True), ignore_index=True)
+    parts = list(_fit_partition(iter(batches), ma_only=True))
+    # one frame per batch, then the partition's last series
+    assert [len(p) for p in parts] == [1, 2, 1, 1]
+    pd.testing.assert_frame_equal(pd.concat(parts, ignore_index=True), whole)

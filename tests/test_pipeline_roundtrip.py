@@ -158,9 +158,9 @@ def test_notebook_flow_baseline_is_leakage_free(spark):
 
     ev = load_table(spark, SF_SMOKE, "events")
     daily = densify_days(
-        daily_resample_sum(ev, ["event_type"], "ts", "value", day_col="ds")
+        daily_resample_sum(ev, ["event_type"], "ts", "value")
         .withColumnRenamed("value", "y"),
-        ["event_type"], "ds", ("y",),
+        ["event_type"],
     )
     w = Window.partitionBy("event_type").orderBy(F.col("ds").desc())
     ranked = daily.withColumn("_rn", F.row_number().over(w)).toPandas()
